@@ -13,7 +13,6 @@ import functools
 import importlib
 import itertools
 import json
-import threading
 import time
 
 # (layer, module, attribute or Class.method)
@@ -39,14 +38,9 @@ class Recorder:
         self.sc = spark.sparkContext
         self.spans: list[dict] = []
         self._ids = itertools.count(1)
-        self._local = threading.local()
+        self._stack: list = []  # open spans; every wrapped call runs on the main thread
         self._undo: list = []
-        self.root_id = 0  # id of the drain / batch spans belong to
-
-    def _stack(self) -> list:
-        if not hasattr(self._local, "stack"):
-            self._local.stack = []
-        return self._local.stack
+        self.root_id = 0  # the drain the spans belong to
 
     def span(self, layer: str, name: str):
         return _Span(self, layer, name)
@@ -105,7 +99,7 @@ class _Span:
 
     def __enter__(self):
         rec = self.rec
-        stack = rec._stack()
+        stack = rec._stack
         self.id = next(rec._ids)
         self.parent = stack[-1] if stack else None
         self.gid = f"flowbench-span-{self.id}"
@@ -117,7 +111,7 @@ class _Span:
     def __exit__(self, *exc):
         end = time.perf_counter()
         rec = self.rec
-        rec._stack().pop()
+        rec._stack.pop()
         if self.parent is not None:
             rec.sc.setJobGroup(self.parent.gid, self.parent.name)
         else:
