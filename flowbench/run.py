@@ -41,7 +41,8 @@ def effective_cores() -> int:
 
 def start_session(work: str, cores: int):
     """The SparkSession the daemon runs on: the engine's own confs plus
-    scratch directories inside the benchmark's work directory."""
+    scratch directories inside the benchmark's work directory. The JVM
+    keeps no perf-data file, which it would otherwise write outside."""
     from pyspark.sql import SparkSession
 
     from pmacct_spark.session import RUNTIME_CONFS, apply_runtime_confs
@@ -57,7 +58,7 @@ def start_session(work: str, cores: int):
         .config("spark.local.dir", tmp)
         .config("spark.sql.warehouse.dir", os.path.join(work, "warehouse"))
         .config("spark.driver.extraJavaOptions",
-                f"-Xms{JVM_HEAP} -XX:+AlwaysPreTouch "
+                f"-Xms{JVM_HEAP} -XX:+AlwaysPreTouch -XX:-UsePerfData "
                 f"-Djava.io.tmpdir={tmp} -Dderby.system.home={tmp}")
         .config("spark.pmacct.stagingRoot", os.path.join(work, "stage"))
     )
