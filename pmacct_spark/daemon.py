@@ -31,27 +31,37 @@ from pyspark.sql import functions as F
 from pmacct_spark import conffile
 from pmacct_spark.functions.addr import ipv4_ntoa
 from pmacct_spark.sources.udp import UdpSpool
+from pmacct_spark.streaming.store import FID, DecodedStore
 
 
 def canonical_flows(decoded: DataFrame) -> DataFrame:
     """Map decoded wire records (FLOW_SCHEMA) to the registry's column
     vocabulary, exactly as the reference's handler chain renders
     primitives from the raw record (src/pkt_handlers.c)."""
-    return (
-        decoded.withColumn("ip_src", ipv4_ntoa("ip_src_i"))
-        .withColumn("ip_dst", ipv4_ntoa("ip_dst_i"))
-        .withColumn("peer_ip_src", F.col("exporter_ip"))
-        # the presentation-name twin: pretag 'ip=' rules and clients
-        # address the exporter as peer_src_ip
-        .withColumn("peer_src_ip", F.col("exporter_ip"))
-        .withColumn(
-            "ts", F.timestamp_millis(F.col("ts_ms")).cast("timestamp_ntz")
-        )
-        .withColumn(
-            "end_ts",
-            F.timestamp_millis(F.col("end_ts_ms")).cast("timestamp_ntz"),
-        )
-        .withColumn("flows", F.lit(1).cast("long"))
+    # one withColumns, not a withColumn chain: each call re-analyzes
+    # the plan, and every batch drain builds this frame afresh
+    return decoded.withColumns(
+        {
+            "ip_src": ipv4_ntoa("ip_src_i"),
+            "ip_dst": ipv4_ntoa("ip_dst_i"),
+            "peer_ip_src": F.col("exporter_ip"),
+            # the presentation-name twin: pretag 'ip=' rules and
+            # clients address the exporter as peer_src_ip
+            "peer_src_ip": F.col("exporter_ip"),
+            "ts": F.timestamp_millis(F.col("ts_ms")).cast("timestamp_ntz"),
+            "end_ts": F.timestamp_millis(F.col("end_ts_ms")).cast(
+                "timestamp_ntz"
+            ),
+            "flows": F.lit(1).cast("long"),
+        }
+    )
+
+
+def _has_options_template(templates: dict) -> bool:
+    """Whether a template set holds an options template: without one,
+    no options record can decode."""
+    return any(
+        next(iter(spec), None) == "options" for spec in templates.values()
     )
 
 
@@ -87,6 +97,9 @@ class Daemon:
     _compact_lock: threading.Lock = field(
         default_factory=threading.Lock, repr=False
     )
+    # each live spool file's decoded rows, decoded once (batch drains
+    # and replan ticks read it; the streaming path does not)
+    _store: DecodedStore = field(default_factory=DecodedStore, repr=False)
 
     @classmethod
     def from_conf(
@@ -567,6 +580,7 @@ class Daemon:
         for st in getattr(self, "_drain_stages", []):
             release(st)
         self._drain_stages = []
+        self._store.close()
         import shutil as _sh
 
         for d in (
@@ -680,14 +694,16 @@ class Daemon:
 
     # ---- spool compaction (bounded-replay serving, VERDICT r4 #4) ----
     #
-    # The batch/replan paths re-read the spool per drain/tick; without
-    # rotation the Python datagram decode grows with uptime. Compaction
-    # folds retired spool files through the FULL decode+maps+enrich
-    # pipeline once and appends the resulting flow rows to a columnar
-    # side table; subsequent drains decode only the live (recent) spool
-    # files and union the pre-decoded rows. Enrichment state (RIB,
-    # learned sampling rates) is captured as of compaction time —
-    # enrich-at-arrival, exactly the reference's semantics. Spool files
+    # Each live spool file is decoded once, by the first drain or tick
+    # that sees it, into the decoded-flow store (streaming/store.py);
+    # later drains read the stored rows and re-run only maps and
+    # enrichment. Compaction adds two things on top. It folds retired
+    # files' stored rows through maps+enrich once and appends the
+    # resulting flow rows to a columnar side table: enrichment state
+    # (RIB, learned sampling rates) is captured as of compaction time —
+    # enrich-at-arrival, exactly the reference's semantics. And it
+    # bounds the live file count, so the per-drain enrichment and the
+    # union over stored segments stay flat with uptime. Spool files
     # are retired logically (never deleted), so streaming channels that
     # tail the spool directory are unaffected.
 
@@ -704,9 +720,11 @@ class Daemon:
         return [f for f in self._spool_files() if f not in retired]
 
     def _spool_batch(self) -> DataFrame:
+        return self._datagrams(self._live_spool_files())
+
+    def _datagrams(self, files: list[str]) -> DataFrame:
         from pmacct_spark.sources.udp import DATAGRAM_DDL
 
-        files = self._live_spool_files()
         if not files:
             return self.spark.createDataFrame([], DATAGRAM_DDL)
         return self.spark.read.schema(DATAGRAM_DDL).parquet(*files)
@@ -725,27 +743,41 @@ class Daemon:
 
     def compact_spool(self, keep_files: int = 4) -> int:
         """Retire all but the newest ``keep_files`` live spool files:
-        decode+enrich them once, append the flow rows (and any decoded
-        options-data rows, which later renormalize passes still need)
-        to the compacted side tables. Returns files retired."""
+        enrich their stored rows once, append the flow rows (and any
+        decoded options-data rows, which later renormalize passes still
+        need) to the compacted side tables. Returns files retired."""
         with self._compact_lock:
             live = self._live_spool_files()
             victims = live[:-keep_files] if keep_files else live
             if not victims:
                 return 0
             flows_dir, opts_dir = self._compact_dirs()
-            from pmacct_spark.sources.udp import DATAGRAM_DDL
-            from pmacct_spark.streaming.decode import decode_options
+            dg = self._datagrams(victims)
+            snap = self._store_sync(live, pin=True)
+            try:
+                if snap is None:  # conflicting templates: ordered path
+                    flows = self._enrich_datagrams(dg, streaming=False)
+                else:
+                    flows = self._enrich_snapshot(snap, dg, victims)
+                flows.write.mode("append").parquet(flows_dir)
+                self._n_compacted_flow_files += 1
+                if self.flavor == "netflow":
+                    if snap is None:
+                        from pmacct_spark.streaming.decode import (
+                            decode_options,
+                        )
 
-            dg = self.spark.read.schema(DATAGRAM_DDL).parquet(*victims)
-            flows = self._enrich_datagrams(dg, streaming=False)
-            flows.write.mode("append").parquet(flows_dir)
-            self._n_compacted_flow_files += 1
-            if self.flavor == "netflow":
-                opts = decode_options(dg.select("exporter_ip", "payload"))
-                opts.write.mode("append").parquet(opts_dir)
-                self._n_compacted_opt_files += 1
-            elif self.flavor == "sflow":
+                        opts = decode_options(
+                            dg.select("exporter_ip", "payload")
+                        )
+                    else:
+                        opts = snap.options(victims)
+                    opts.write.mode("append").parquet(opts_dir)
+                    self._n_compacted_opt_files += 1
+            finally:
+                if snap is not None:
+                    snap.release()
+            if self.flavor == "sflow":
                 # counter samples ride the same datagrams as the flow
                 # samples: without this, retiring a spool file would
                 # silently drop its counter history from the
@@ -825,25 +857,19 @@ class Daemon:
             )
         return self._tmpl_seed
 
-    def _persist_templates(self, live: DataFrame) -> None:
-        """Steady-state side: fold templates seen in the spool into the
-        file (save_template / update_template_in_file
-        src/nfv9_template.c:255,1230-1235). Rewrites only when a new
-        or changed definition appeared; atomic replace in the saver."""
+    def _persist_templates(self, learned: dict) -> None:
+        """Steady-state side: fold the templates the store learned from
+        the live spool into the file (save_template /
+        update_template_in_file src/nfv9_template.c:255,1230-1235).
+        Rewrites only when a new or changed definition appeared; atomic
+        replace in the saver."""
         import json
 
         self._templates_seed()
         if not self._tmpl_path:
             return
-        from pmacct_spark.streaming.decode import (
-            learn_template_cache,
-            save_templates_file,
-        )
+        from pmacct_spark.streaming.decode import save_templates_file
 
-        try:
-            learned = learn_template_cache(live)
-        except ValueError:
-            return  # conflicting redefinitions: the ordered path owns them
         # JSON-normalize so tuple-vs-list shape can't force rewrites
         learned = {
             k: json.loads(json.dumps(v)) for k, v in learned.items()
@@ -879,12 +905,9 @@ class Daemon:
             }
             self._tmpl_seed = {**(self._tmpl_seed or {}), **learned}
 
-    def _exporter_allow_filter(self, dg: DataFrame) -> DataFrame:
-        """nfacctd_allow_file / sfacctd_allow_file (reference
-        CONFIG-KEYS, src/nfacctd.c check_allow): datagrams whose
-        source address is not in the allow list are DROPPED before
-        decode. Entries are plain addresses or v4 CIDR prefixes;
-        SIGUSR2-reload class (parsed once per daemon like ports_file)."""
+    def _allow_entries(self) -> list[str] | None:
+        """The exporter allow list, parsed once per daemon; None when no
+        allow file is configured."""
         key = {
             "sflow": "sfacctd_allow_file",
             "telemetry": "telemetry_daemon_allow_file",
@@ -898,7 +921,15 @@ class Daemon:
                     self._allow_cache = conffile.parse_allow_file(
                         fh.read()
                     )
-        entries = self._allow_cache
+        return self._allow_cache
+
+    def _exporter_allow_filter(self, dg: DataFrame) -> DataFrame:
+        """nfacctd_allow_file / sfacctd_allow_file (reference
+        CONFIG-KEYS, src/nfacctd.c check_allow): datagrams whose
+        source address is not in the allow list are DROPPED before
+        decode. Entries are plain addresses or v4 CIDR prefixes;
+        SIGUSR2-reload class (parsed once per daemon like ports_file)."""
+        entries = self._allow_entries()
         if entries is None:  # no allow file configured: accept all
             return dg
         # An allow file that parses to ZERO entries DENIES everything:
@@ -984,6 +1015,9 @@ class Daemon:
         self._tmpl_fwd_wm = wm
 
     def _enrich_datagrams(self, dg: DataFrame, streaming: bool) -> DataFrame:
+        """The whole-spool path: decode ``dg`` and enrich the flows. The
+        streaming plans use it, and batch drains whose spool files
+        define one template with different layouts."""
         from pmacct_spark.streaming.decode import decode_any, decode_sflow_any
 
         dg = self._exporter_allow_filter(dg)
@@ -991,17 +1025,7 @@ class Daemon:
             df = canonical_flows(
                 decode_sflow_any(
                     dg.select("exporter_ip", "payload"),
-                    # sfacctd_ignore_exporter_address (CONFIG-KEYS:
-                    # 2213): Agent Address is the exporter identity by
-                    # default; true keeps the socket address
-                    use_agent=not self.conf.getbool(
-                        "sfacctd_ignore_exporter_address"
-                    ),
-                    # aggregate_unknown_etype (CONFIG-KEYS:205): in
-                    # sfacctd, ARP frames pass through as L2-only rows
-                    unknown_etype=self.conf.getbool(
-                        "aggregate_unknown_etype"
-                    ),
+                    **self._sflow_decode_opts(),
                 )
             )
         else:
@@ -1027,93 +1051,261 @@ class Daemon:
             decoded = decode_any(
                 dg.select("exporter_ip", "payload"),
                 seed_templates=seed,
-                # nfacctd_pre_processing_checks (CONFIG-KEYS:2221):
-                # discard data flowsets with malformed (non-zero)
-                # trailing padding instead of best-effort decoding
-                pre_checks=self.conf.getbool(
-                    "nfacctd_pre_processing_checks"
-                ),
-                # nfacctd_time_secs (CONFIG-KEYS:2190): v5 header
-                # times in seconds rather than msecs
-                time_secs=self.conf.getbool("nfacctd_time_secs"),
+                **self._netflow_decode_opts(),
             )
             if not streaming and not self.conf.getbool(
                 "nfacctd_ignore_exporter_address"
             ):
-                # exporterIPv4Address (IE 130) exposed via Options
-                # packets IS the exporter identity by default
-                # (CONFIG-KEYS:2213) — the IPFIX twin of the sFlow
-                # Agent Address; nfacctd_ignore_exporter_address
-                # keeps the socket address. Latest exposition per
-                # socket wins; tiny dim, broadcast. Batch-drain only,
-                # like bgp_follow_nexthop above: the latest-wins pick
-                # is a row_number window over the options stream,
-                # which a continuously-running streaming plan cannot
-                # express (it would freeze the dim at .start()) — the
-                # streaming path keeps the socket address, matching
-                # nfacctd_ignore_exporter_address=true behavior.
-                from pyspark.sql import Window as _W
-
-                from pmacct_spark.functions.addr import ipv4_ntoa
                 from pmacct_spark.streaming.decode import decode_options
 
-                w_last = _W.partitionBy("exporter_ip").orderBy(
-                    F.desc("seqno")
-                )
-                ids = (
-                    decode_options(
-                        dg.select("exporter_ip", "payload")
-                    )
-                    .filter(
-                        F.col("exporter_v4").isNotNull()
-                        & (F.col("exporter_v4") > 0)
-                    )
-                    .withColumn("__rn", F.row_number().over(w_last))
-                    .filter("__rn = 1")
-                    .select(
-                        F.col("exporter_ip").alias("__sock"),
-                        ipv4_ntoa("exporter_v4").alias("__exp_id"),
-                    )
-                )
-                decoded = (
-                    decoded.join(
-                        F.broadcast(ids),
-                        decoded["exporter_ip"] == ids["__sock"],
-                        "left",
-                    )
-                    .withColumn(
-                        "exporter_ip",
-                        F.coalesce(
-                            F.col("__exp_id"), F.col("exporter_ip")
-                        ),
-                    )
-                    .drop("__sock", "__exp_id")
+                decoded = self._join_exporter_ids(
+                    decoded,
+                    decode_options(dg.select("exporter_ip", "payload")),
                 )
             df = canonical_flows(decoded)
             df = self._account_options_union(dg, df)
-        df = self._maps(df)
+        return self._enrich(df, streaming)
+
+    def _enrich(
+        self, df: DataFrame, streaming: bool, options: DataFrame | None = None
+    ) -> DataFrame:
+        """Maps, then BGP/BMP and peer-AS enrichment of canonical flows.
+        ``options`` are the decoded options rows the sampling rates are
+        learned from (None: decode them from the live spool)."""
+        df = self._maps(df, options)
         if self.bgp_spool is not None or self.bmp_spool is not None:
             df = self._bgp_enrich(df, streaming=streaming)
         df = self._peer_as_enrich(df, streaming=streaming)
         return df
 
-    def _decoded(self, streaming: bool) -> DataFrame:
+    def _netflow_decode_opts(self) -> dict:
+        return {
+            # nfacctd_pre_processing_checks (CONFIG-KEYS:2221):
+            # discard data flowsets with malformed (non-zero)
+            # trailing padding instead of best-effort decoding
+            "pre_checks": self.conf.getbool("nfacctd_pre_processing_checks"),
+            # nfacctd_time_secs (CONFIG-KEYS:2190): v5 header
+            # times in seconds rather than msecs
+            "time_secs": self.conf.getbool("nfacctd_time_secs"),
+        }
+
+    def _sflow_decode_opts(self) -> dict:
+        return {
+            # sfacctd_ignore_exporter_address (CONFIG-KEYS:2213):
+            # Agent Address is the exporter identity by default;
+            # true keeps the socket address
+            "use_agent": not self.conf.getbool(
+                "sfacctd_ignore_exporter_address"
+            ),
+            # aggregate_unknown_etype (CONFIG-KEYS:205): in
+            # sfacctd, ARP frames pass through as L2-only rows
+            "unknown_etype": self.conf.getbool("aggregate_unknown_etype"),
+        }
+
+    def _join_exporter_ids(
+        self, decoded: DataFrame, options: DataFrame
+    ) -> DataFrame:
+        """exporterIPv4Address (IE 130) exposed via Options packets IS
+        the exporter identity by default (CONFIG-KEYS:2213) — the IPFIX
+        twin of the sFlow Agent Address; nfacctd_ignore_exporter_address
+        keeps the socket address. Latest exposition per socket wins;
+        tiny dim, broadcast. Batch-drain only, like bgp_follow_nexthop:
+        the latest-wins pick is a row_number window over the options
+        stream, which a continuously-running streaming plan cannot
+        express (it would freeze the dim at .start()) — the streaming
+        path keeps the socket address, matching
+        nfacctd_ignore_exporter_address=true behavior."""
+        from pyspark.sql import Window as _W
+
+        w_last = _W.partitionBy("exporter_ip").orderBy(F.desc("seqno"))
+        ids = (
+            options.filter(
+                F.col("exporter_v4").isNotNull() & (F.col("exporter_v4") > 0)
+            )
+            .withColumn("__rn", F.row_number().over(w_last))
+            .filter("__rn = 1")
+            .select(
+                F.col("exporter_ip").alias("__sock"),
+                ipv4_ntoa("exporter_v4").alias("__exp_id"),
+            )
+        )
+        return (
+            decoded.join(
+                F.broadcast(ids),
+                decoded["exporter_ip"] == ids["__sock"],
+                "left",
+            )
+            .withColumn(
+                "exporter_ip",
+                F.coalesce(F.col("__exp_id"), F.col("exporter_ip")),
+            )
+            .drop("__sock", "__exp_id")
+        )
+
+    def _store_sync(self, files: list[str], pin: bool = False):
+        """Sync the decoded-flow store with ``files`` (the live spool)
+        and return its snapshot, or None when the batch path must take
+        the whole-spool decode instead: an empty spool, a flavor the
+        store does not hold, or conflicting template definitions.
+        Callers hold ``_compact_lock``."""
+        if not files or self.flavor not in ("netflow", "sflow"):
+            return None
+        allow = self._allow_entries()
+        sflow = self.flavor == "sflow"
+        opts = (
+            self._sflow_decode_opts() if sflow else self._netflow_decode_opts()
+        )
+        conf_key = (
+            self.flavor,
+            None if allow is None else tuple(allow),
+            tuple(sorted(opts.items())),
+        )
+        return self._store.sync(
+            files,
+            conf_key,
+            None if sflow else self._templates_seed(),
+            None if sflow else self._learn_spool_files,
+            self._decode_spool_files,
+            pin=pin,
+        )
+
+    def _tagged_datagrams(self, tags: dict) -> DataFrame:
+        """One scan of the spool files in ``tags`` (``{file: tag}``),
+        each datagram carrying its file's tag as column ``FID``. Files
+        are told apart by name: one spool directory holds them all."""
+        import os as _os
+
+        tag_of = F.create_map(
+            *[
+                v
+                for f, t in tags.items()
+                for v in (F.lit(_os.path.basename(f)), F.lit(t))
+            ]
+        )
+        return self._datagrams(list(tags)).select(
+            "exporter_ip",
+            "payload",
+            tag_of[F.col("_metadata.file_name")].alias(FID),
+        )
+
+    def _learn_spool_files(self, files: list[str]) -> dict:
+        """Template definitions of each spool file, in one pass over
+        all of them: ``{file: defs}`` (None for a file that redefines a
+        template with a different layout)."""
+        from pmacct_spark.streaming.decode import learn_template_cache
+
+        by_file = learn_template_cache(
+            self._tagged_datagrams({f: i for i, f in enumerate(files)}),
+            by=FID,
+        )
+        return {files[i]: defs for i, defs in by_file.items()}
+
+    def _decode_spool_files(self, fids: dict, templates: dict):
+        """The store's rows for the spool files in ``fids``, decoded in
+        one pass under the merged ``templates``: their flows
+        (allow-listed exporters only) and, for NetFlow/IPFIX, their
+        options records; every row carries its file's id."""
+        from pmacct_spark.streaming.decode import (
+            OPTIONS_SCHEMA,
+            decode_any,
+            decode_options,
+            decode_sflow_any,
+        )
+
+        dg = self._tagged_datagrams(fids)
+        allowed = self._exporter_allow_filter(dg)
+        if self.flavor == "sflow":
+            return (
+                decode_sflow_any(allowed, by=FID, **self._sflow_decode_opts()),
+                None,
+            )
+        seed = templates or None
+        flows = decode_any(
+            allowed, seed_templates=seed, by=FID, **self._netflow_decode_opts()
+        )
+        if not _has_options_template(templates):
+            # no options template to decode options records with: an
+            # empty frame planned in the JVM (createDataFrame([]) would
+            # run a Python task per partition)
+            return flows, self.spark.range(0).select(
+                *[
+                    F.lit(None).cast(f.dataType).alias(f.name)
+                    for f in OPTIONS_SCHEMA.fields
+                ]
+            )
+        return flows, decode_options(dg, seed_templates=seed, by=FID)
+
+    def _enrich_snapshot(
+        self, snap, dg: DataFrame, files: list[str] | None = None
+    ) -> DataFrame:
+        """Enriched flows of ``files`` (default: the whole snapshot)
+        from the store's decoded rows; ``dg`` are those files'
+        datagrams. The exporter-id join reads the same files' options
+        rows; the sampling rates read every live file's."""
+        decoded = snap.flows(files)
+        if self.flavor == "sflow":
+            return self._enrich(canonical_flows(decoded), streaming=False)
+        if not self.conf.getbool(
+            "nfacctd_ignore_exporter_address"
+        ) and self._has_exporter_ids(snap, files):
+            decoded = self._join_exporter_ids(decoded, snap.options(files))
+        df = canonical_flows(decoded)
+        df = self._account_options_union(self._exporter_allow_filter(dg), df)
+        return self._enrich(
+            df,
+            streaming=False,
+            options=snap.options() if self._learns_rates() else None,
+        )
+
+    def _has_exporter_ids(self, snap, files: list[str] | None) -> bool:
+        """Whether any options row of ``files`` exposes an exporter id
+        (IE 130); a drain whose spool exposes none skips the join. With
+        no options template in the decode's template set there are no
+        options rows to look at; otherwise the answer is memoized on
+        the stored rows it reads."""
+        if not _has_options_template(
+            {**(self._templates_seed() or {}), **snap.templates}
+        ):
+            return False
+        key = snap.key(files)
+        memo = getattr(self, "_exporter_ids_memo", None)
+        if memo is None or memo[0] != key:
+            opts = snap.options(files)
+            found = bool(
+                opts.filter(F.col("exporter_v4") > 0).limit(1).collect()
+            )
+            memo = self._exporter_ids_memo = (key, found)
+        return memo[1]
+
+    def _decoded(self, streaming: bool, held: list | None = None) -> DataFrame:
+        """The flow frame every channel aggregates. ``held`` (replan
+        ticks) pins the store snapshot the frame reads; the caller
+        releases the snapshots it collects there once it has
+        materialized its result."""
         if streaming:
             return self._enrich_datagrams(
                 self.spool.stream(self.spark), streaming=True
             )
-        # snapshot the live file list AND the compacted side table
-        # under one lock: a concurrent tick's maybe_compact_spool could
-        # otherwise retire a file after it was listed and append its
-        # compacted copy before the union runs — double-counting that
-        # file's flows for one drain
-        with self._compact_lock:
-            live = self._spool_batch()
-            comp = self._compacted_flows()
-        self._persist_templates(live)
-        self._forward_templates(live)
         self._ingest_replicated_templates()
-        df = self._enrich_datagrams(live, streaming=False)
+        # snapshot the live file list, the store and the compacted side
+        # table under one lock: a concurrent tick's maybe_compact_spool
+        # could otherwise retire a file after it was listed and append
+        # its compacted copy before the union runs — double-counting
+        # that file's flows for one drain
+        with self._compact_lock:
+            files = self._live_spool_files()
+            comp = self._compacted_flows()
+            snap = self._store_sync(files, pin=held is not None)
+        live = self._datagrams(files)
+        self._forward_templates(live)
+        if snap is None:
+            df = self._enrich_datagrams(live, streaming=False)
+        else:
+            if held is not None:
+                held.append(snap)
+            if self.flavor == "netflow":
+                self._persist_templates(snap.templates)
+            df = self._enrich_snapshot(snap, live)
         if comp is not None:
             df = df.unionByName(comp, allowMissingColumns=True)
         return df
@@ -1774,10 +1966,23 @@ class Daemon:
         ).withColumn("peer_src_ip", F.col("exporter_ip"))
         return df.unionByName(opts, allowMissingColumns=True)
 
-    def _maps(self, df: DataFrame) -> DataFrame:
+    def _learns_rates(self) -> bool:
+        """nfacctd_renormalize with no sampling_map: sampling rates are
+        learned from the exporters' options records."""
+        return bool(
+            not self.conf.get("sampling_map")
+            and self.conf.getbool("nfacctd_renormalize")
+            and self.flavor == "netflow"
+        )
+
+    def _maps(
+        self, df: DataFrame, options: DataFrame | None = None
+    ) -> DataFrame:
         """Apply the configured maps, exactly as the reference's
         find_id / sampling-map passes tag and renormalize records
-        before plugin fan-out (src/pretag.c:1117)."""
+        before plugin fan-out (src/pretag.c:1117). ``options`` are the
+        live spool's decoded options rows, for the learned sampling
+        rates (None: decode them from the spool)."""
         ptm = self.conf.get("pre_tag_map")
         if ptm:
             from pmacct_spark.operators.pretag import apply_pretag
@@ -1833,9 +2038,7 @@ class Daemon:
                 ).drop("__nf_as")
         df = self._net_funcs(df, nets)
         smap = self.conf.get("sampling_map")
-        if not smap and self.conf.getbool("nfacctd_renormalize") and (
-            self.flavor == "netflow"
-        ):
+        if self._learns_rates():
             # no sampling_map: learn sampler rates from options-data
             # records arriving ON THE SAME SOCKET (the reference's
             # tests/104 sampling-option path — nfacctd_renormalize
@@ -1844,11 +2047,13 @@ class Daemon:
             # per exporter wins; tiny dim, broadcast.
             from pyspark.sql import Window as _W
 
-            from pmacct_spark.streaming.decode import decode_options
+            opts = options
+            if opts is None:
+                from pmacct_spark.streaming.decode import decode_options
 
-            opts = decode_options(
-                self._spool_batch().select("exporter_ip", "payload")
-            )
+                opts = decode_options(
+                    self._spool_batch().select("exporter_ip", "payload")
+                )
             comp_opts = self._compacted_options()
             if comp_opts is not None:
                 # expositions whose datagrams were compacted away must
@@ -1987,10 +2192,12 @@ class Daemon:
                 streaming and cfg.history and not cfg.history_spec().calendar
             )
 
-        # Decode ONCE per drain for the batch channels (the reference
-        # decodes once and fans out to plugins, src/plugin_hooks.c);
-        # with several channels the decoded frame is staged so N
-        # channels don't trigger N Python decode passes.
+        # Each spool file is decoded ONCE, into the decoded-flow store
+        # (the reference decodes once and fans out to plugins,
+        # src/plugin_hooks.c); every batch channel reads the store
+        # directly. Only when maps/enrichment put a join above the
+        # store (or the whole-spool path runs the Python decode) is the
+        # drain's frame staged, so N channels don't repeat that work.
         batch_df = None
         n_batch = sum(1 for c in self.channels.values() if not is_stream(c))
         for name, cfg in self.channels.items():
@@ -2002,13 +2209,14 @@ class Daemon:
                 out = run_to_memory(agg, f"imt_{name}")
             else:
                 if batch_df is None:
-                    batch_df = self._decoded(False)
-                    if n_batch > 1:
-                        from pmacct_spark.operators.staging import (
-                            release,
-                            stage,
-                        )
+                    from pmacct_spark.operators.staging import (
+                        plan_recomputes,
+                        release,
+                        stage,
+                    )
 
+                    batch_df = self._decoded(False)
+                    if n_batch > 1 and plan_recomputes(batch_df):
                         # bound the per-drain staged copies WITHOUT
                         # invalidating handles the caller still holds:
                         # the previous drain's results stay readable
@@ -3816,16 +4024,11 @@ class Daemon:
         # .start() time, so expositions arriving later would silently
         # never renormalize (the rates dim is typically EMPTY at
         # startup: renormalize would multiply by 1 forever).
-        learns_rates = (
-            not self.conf.get("sampling_map")
-            and self.conf.getbool("nfacctd_renormalize")
-            and self.flavor == "netflow"
-        )
         live_dims = (
             self.bgp_spool is not None
             or self.bmp_spool is not None
             or self.rtr_client is not None
-            or learns_rates
+            or self._learns_rates()
         )
         # VALIDATE every channel's plan before starting ANY query — a
         # later channel raising (unsupported counters, bad aggregate)
@@ -3929,14 +4132,19 @@ class _ReplanLoop:
             for sp in (d.bgp_spool, d.bmp_spool):
                 if sp is not None:
                     sp.flush()
-            # rotate on the purge cadence: retired spool files are
-            # decoded+enriched once into a columnar side table, so the
-            # per-tick Python decode covers only the live tail and
-            # tick cost stays flat with uptime (the reference rotates
-            # its memory tables the same way)
+            # rotate on the purge cadence: retired spool files' stored
+            # rows are enriched once into a columnar side table, so the
+            # live file count — and with it the per-tick enrichment
+            # and store union — stays flat with uptime (the reference
+            # rotates its memory tables the same way)
             d.maybe_compact_spool()
-        df = build_aggregation(d._decoded(False), self.cfg)
-        rows = df.collect()
+        held: list = []  # store snapshots this tick's plan reads
+        try:
+            df = build_aggregation(d._decoded(False, held), self.cfg)
+            rows = df.collect()
+        finally:
+            for snap in held:
+                snap.release()
         d.spark.createDataFrame(rows, df.schema).createOrReplaceTempView(
             f"imt_{self.name}"
         )

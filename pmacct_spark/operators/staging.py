@@ -118,6 +118,25 @@ def stage(df: DataFrame) -> DataFrame:
     return out
 
 
+def plan_recomputes(df: DataFrame) -> bool:
+    """Whether each consumer of ``df`` would repeat work that one
+    :func:`stage` barrier does once: its analyzed plan holds a join or
+    a Python map node (``MapInPandas``, ``MapInArrow``, ...). A scan
+    with only projections and filters above it is cheaper re-read by
+    each consumer than written and read back."""
+    stack = [df._jdf.queryExecution().analyzed()]
+    while stack:
+        node = stack.pop()
+        name = node.nodeName()
+        if name == "Join" or any(
+            k in name for k in ("Python", "InPandas", "InArrow")
+        ):
+            return True
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return False
+
+
 STAGE_MIN_INPUT_CONF = "spark.pmacct.stage.minInputBytes"
 _STAGE_MIN_INPUT_DEFAULT = 256 << 20
 

@@ -935,6 +935,16 @@ def _compile_tmpl(fields: list[tuple[int, int]]):
     return (np.dtype(dt), tuple(colmap))
 
 
+def null_int64(n: int) -> pd.arrays.IntegerArray:
+    """An all-NULL nullable Int64 column of length ``n``. Built from
+    two numpy buffers (values, mask) instead of a list of ``n``
+    ``pd.NA`` objects, which costs ~1000x more per row; the Arrow
+    array it converts to is the same."""
+    import numpy as np
+
+    return pd.arrays.IntegerArray(np.zeros(n, np.int64), np.ones(n, bool))
+
+
 def _flow_frame(
     items: list, cols: list[str], str_cols: frozenset[str] = frozenset()
 ) -> pd.DataFrame:
@@ -987,7 +997,7 @@ def _flow_frame(
             if c in str_cols:
                 df[c] = pd.Series([None] * len(df), dtype=object)
             else:
-                df[c] = pd.array([pd.NA] * len(df), dtype="Int64")
+                df[c] = null_int64(len(df))
         elif df[c].dtype == np.float64:
             # NaN introduced by concat over missing columns
             if c in str_cols:
@@ -1226,49 +1236,97 @@ class _RecordingTemplates(dict):
         super().__setitem__(key, value)
 
 
-def extract_template_defs(datagrams: DataFrame) -> DataFrame:
+def _tagged_schema(
+    schema: T.StructType, datagrams: DataFrame, by: str | None
+) -> T.StructType:
+    """A decoder's output schema, plus the ``by`` column it carries."""
+    if by is None:
+        return schema
+    return T.StructType(schema.fields + [datagrams.schema[by]])
+
+
+def _per_tag(
+    batches: Iterator[pd.DataFrame],
+    by: str | None,
+    decode_batch,
+) -> Iterator[pd.DataFrame]:
+    """Run ``decode_batch`` (datagram batch -> decoded frame) on each
+    batch; with ``by``, on each run of datagrams sharing a ``by`` value
+    instead, stamping that value on every row it decodes — so one pass
+    over many inputs (e.g. spool files) keeps each input's rows
+    apart."""
+    for pdf in batches:
+        if by is None:
+            yield decode_batch(pdf)
+            continue
+        for tag, part in pdf.groupby(by, sort=False):
+            yield decode_batch(part).assign(**{by: tag})
+
+
+def extract_template_defs(
+    datagrams: DataFrame, by: str | None = None
+) -> DataFrame:
     """Phase 1: every template definition seen in the capture, one row
-    per (exporter, source_id, template_id, json-spec) occurrence."""
+    per (exporter, source_id, template_id, json-spec) occurrence. With
+    ``by``, each row also carries that column of the datagrams that
+    defined it."""
     import json
+
+    def defs(pdf: pd.DataFrame) -> pd.DataFrame:
+        tmpls = _RecordingTemplates()
+        for exporter, payload in zip(pdf["exporter_ip"], pdf["payload"]):
+            b = bytes(payload)
+            ver = int.from_bytes(b[:2], "big") if len(b) >= 2 else 0
+            if ver == 9:
+                _v9_packet(exporter, b, tmpls, want="templates")
+            elif ver == 10:
+                _v10_packet(exporter, b, tmpls, want="templates")
+        rows = [
+            (exp, sid, tid, json.dumps(spec))
+            for (exp, sid, tid), spec in tmpls.defs
+        ]
+        return pd.DataFrame(
+            rows, columns=["exporter_ip", "source_id", "template_id", "spec"]
+        )
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            tmpls = _RecordingTemplates()
-            for exporter, payload in zip(pdf["exporter_ip"], pdf["payload"]):
-                b = bytes(payload)
-                ver = int.from_bytes(b[:2], "big") if len(b) >= 2 else 0
-                if ver == 9:
-                    _v9_packet(exporter, b, tmpls, want="templates")
-                elif ver == 10:
-                    _v10_packet(exporter, b, tmpls, want="templates")
-            rows = [
-                (exp, sid, tid, json.dumps(spec))
-                for (exp, sid, tid), spec in tmpls.defs
-            ]
-            yield pd.DataFrame(
-                rows, columns=["exporter_ip", "source_id", "template_id", "spec"]
-            )
+        yield from _per_tag(batches, by, defs)
 
-    return datagrams.mapInPandas(gen, _TMPL_DEF_SCHEMA)
+    return datagrams.mapInPandas(
+        gen, _tagged_schema(_TMPL_DEF_SCHEMA, datagrams, by)
+    )
 
 
-def learn_template_cache(datagrams: DataFrame) -> dict:
+def learn_template_cache(datagrams: DataFrame, by: str | None = None) -> dict:
     """Collect the (small) template cache to the driver; raise on
-    conflicting redefinitions."""
+    conflicting redefinitions.
+
+    With ``by``, learn one cache per value of that datagram column
+    instead, in one pass: ``{value: cache}``. A value whose own
+    datagrams redefine a template with a different layout maps to
+    ``None`` rather than raising, so the caller can tell which inputs
+    need the ordered path."""
     import json
 
-    cache: dict = {}
-    for r in extract_template_defs(datagrams).collect():
+    caches: dict = {}
+    for r in extract_template_defs(datagrams, by).collect():
+        tag = r[by] if by is not None else None
+        cache = caches.setdefault(tag, {})
+        if cache is None:
+            continue
         key = (r.exporter_ip, r.source_id, r.template_id)
         spec = json.loads(r.spec)
-        if key in cache and cache[key] != spec:
+        if cache.get(key, spec) == spec:
+            cache[key] = spec
+        elif by is not None:
+            caches[tag] = None
+        else:
             raise ValueError(
                 f"template {key} redefined with a different layout; "
                 "use the ordered stateful path (prepare_datagrams + "
                 "decode_v9/decode_any)"
             )
-        cache[key] = spec
-    return cache
+    return caches if by is not None else caches.get(None, {})
 
 
 def save_templates_file(cache: dict, path: str) -> None:
@@ -1567,6 +1625,7 @@ def decode_any(
     seed_templates: dict | None = None,
     pre_checks: bool = False,
     time_secs: bool = False,
+    by: str | None = None,
 ) -> DataFrame:
     """Version-dispatch decoder: v5 / v9 / IPFIX datagrams mixed on one
     socket (reference src/nfacctd.c:1649-1654). Same partition contract
@@ -1577,7 +1636,8 @@ def decode_any(
     nfacctd_templates_file (CONFIG-KEYS:2040): data records whose
     templates were learned in a PREVIOUS run decode immediately
     instead of dropping until the next template refresh. In-stream
-    definitions still overwrite seeds (fresher wins)."""
+    definitions still overwrite seeds (fresher wins). ``by`` names a
+    datagram column every decoded row carries along."""
     bc = (
         datagrams.sparkSession.sparkContext.broadcast(seed_templates)
         if seed_templates
@@ -1590,7 +1650,8 @@ def decode_any(
         )
         compiled: dict = {}
         cols = [f.name for f in FLOW_SCHEMA.fields]
-        for pdf in batches:
+
+        def flows(pdf: pd.DataFrame) -> pd.DataFrame:
             items: list = []
             acc = _V5Acc(time_secs=time_secs)
             for exporter, payload in zip(pdf["exporter_ip"], pdf["payload"]):
@@ -1623,9 +1684,13 @@ def decode_any(
                 for c in cols:
                     if frame[c].dtype == "float64":
                         frame[c] = frame[c].astype("Int64")
-            yield frame
+            return frame
 
-    return datagrams.mapInPandas(gen, FLOW_SCHEMA)
+        yield from _per_tag(batches, by, flows)
+
+    return datagrams.mapInPandas(
+        gen, _tagged_schema(FLOW_SCHEMA, datagrams, by)
+    )
 
 
 # Extended flow schema: dual-stack + vlen surface. String columns are
@@ -1716,7 +1781,10 @@ def decode_any_custom(
 
 
 def decode_options(
-    datagrams: DataFrame, opt_scope_check: bool = True
+    datagrams: DataFrame,
+    opt_scope_check: bool = True,
+    seed_templates: dict | None = None,
+    by: str | None = None,
 ) -> DataFrame:
     """Decode options-DATA records (sampling exposition: sampler id /
     rate / interval keyed by scope) from v9 datagrams (options template
@@ -1727,12 +1795,23 @@ def decode_options(
     ``opt_scope_check=False`` is nfacctd_disable_opt_scope_check
     (CONFIG-KEYS:2206): sampling-exposition records from templates NOT
     scoped to the System level (buggy/non-standard exporters) are then
-    accepted as if system-scoped instead of dropped."""
+    accepted as if system-scoped instead of dropped.
+
+    ``seed_templates`` pre-populates every partition's template cache
+    and ``by`` is carried along, as in :func:`decode_any`."""
+    bc = (
+        datagrams.sparkSession.sparkContext.broadcast(seed_templates)
+        if seed_templates
+        else None
+    )
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        templates: dict = {}
+        templates: dict = (
+            {tuple(k): v for k, v in bc.value.items()} if bc else {}
+        )
         cols = [f.name for f in OPTIONS_SCHEMA.fields]
-        for pdf in batches:
+
+        def options(pdf: pd.DataFrame) -> pd.DataFrame:
             rows: list[dict] = []
             for exporter, payload in zip(pdf["exporter_ip"], pdf["payload"]):
                 b = bytes(payload)
@@ -1751,11 +1830,15 @@ def decode_options(
                             opt_scope_check=opt_scope_check,
                         )
                     )
-            yield pd.DataFrame(
+            return pd.DataFrame(
                 [[r.get(c) for c in cols] for r in rows], columns=cols
             )
 
-    return datagrams.mapInPandas(gen, OPTIONS_SCHEMA)
+        yield from _per_tag(batches, by, options)
+
+    return datagrams.mapInPandas(
+        gen, _tagged_schema(OPTIONS_SCHEMA, datagrams, by)
+    )
 
 
 def decode_any_ext(datagrams: DataFrame) -> DataFrame:
@@ -1792,7 +1875,7 @@ def decode_any_ext(datagrams: DataFrame) -> DataFrame:
                         v5f[c] = (
                             pd.Series([None] * len(v5f), dtype=object)
                             if c in _FLOW6_STR_COLS
-                            else pd.array([pd.NA] * len(v5f), dtype="Int64")
+                            else null_int64(len(v5f))
                         )
                 frame = (
                     pd.concat([frame, v5f[cols]], ignore_index=True)
@@ -2225,17 +2308,19 @@ def decode_sflow_any(
     datagrams: DataFrame,
     use_agent: bool = True,
     unknown_etype: bool = False,
+    by: str | None = None,
 ) -> DataFrame:
     """Flow samples from v2/v4/v5 sFlow datagrams (version dispatch,
     reference src/sfacctd.c:1438): v5 goes through the v5 walker, v2/v4
     through the RFC 3176 walker. Same output schema as decode_sflow5.
     ``use_agent=False`` is sfacctd_ignore_exporter_address
     (CONFIG-KEYS:2213): keep the socket address instead of the sFlow
-    Agent Address."""
+    Agent Address. ``by`` is carried along, as in :func:`decode_any`."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cols = [f.name for f in SFLOW_SCHEMA.fields]
-        for pdf in batches:
+
+        def samples(pdf: pd.DataFrame) -> pd.DataFrame:
             rows: list[dict] = []
             for exporter, payload in zip(pdf["exporter_ip"], pdf["payload"]):
                 b = bytes(payload)
@@ -2250,11 +2335,15 @@ def decode_sflow_any(
                             unknown_etype=unknown_etype,
                         )
                     )
-            yield pd.DataFrame(
+            return pd.DataFrame(
                 [[r.get(c) for c in cols] for r in rows], columns=cols
             )
 
-    return datagrams.mapInPandas(gen, SFLOW_SCHEMA)
+        yield from _per_tag(batches, by, samples)
+
+    return datagrams.mapInPandas(
+        gen, _tagged_schema(SFLOW_SCHEMA, datagrams, by)
+    )
 
 
 def decode_sflow5(

@@ -13,6 +13,7 @@ from pmacct_spark.functions.hashing import MUL, P
 from pmacct_spark.operators.fss import fss_sample
 from pmacct_spark.operators.lpm import lpm_join
 from pmacct_spark.operators.sessionize import sessionize
+from pmacct_spark.streaming.decode import FLOW_SCHEMA
 
 SET = settings(max_examples=8, deadline=None)
 
@@ -1093,3 +1094,57 @@ def test_label_filter_matches_reference(spark, entries, labels):
         i for i, lv in enumerate(labels) if _ref_labels_v2(entries, lv)
     }
     assert kept == want
+
+
+# ---------------------------------------------------------------------------
+# Decoder frames: the O(n) all-NULL Int64 fill vs the list-of-pd.NA build
+# ---------------------------------------------------------------------------
+
+# every FLOW_SCHEMA column after exporter_ip and seqno
+_FLOW_COLS = [f.name for f in FLOW_SCHEMA.fields][2:]
+
+
+@settings(max_examples=60, deadline=None)
+@given(
+    st.integers(min_value=0, max_value=400),
+    st.lists(
+        st.booleans(), min_size=len(_FLOW_COLS), max_size=len(_FLOW_COLS)
+    ),
+)
+def test_flow_frame_null_fill_matches_pd_na(n, present):
+    """_flow_frame fills every column a template leaves absent with
+    null_int64; its Arrow output equals the old fill's
+    (``pd.array([pd.NA] * n, dtype="Int64")``) for any row count and
+    any mix of present and absent columns."""
+    import numpy as np
+    import pandas as pd
+    import pyarrow as pa
+
+    from pmacct_spark.streaming.decode import _flow_frame, null_int64
+
+    assert pa.array(null_int64(n)).equals(
+        pa.array(pd.array([pd.NA] * n, dtype="Int64"))
+    )
+    cols = [f.name for f in FLOW_SCHEMA.fields]
+    have = [c for c, p in zip(_FLOW_COLS, present) if p]
+    dt = np.dtype([(f"f{i}", ">u4") for i in range(len(have))])
+    arr = np.zeros(n, dtype=dt)
+    for i in range(len(have)):
+        arr[f"f{i}"] = np.arange(n, dtype=np.uint32) * (i + 3)
+    colmap = tuple((f"f{i}", c) for i, c in enumerate(have))
+    item = ("__arr__", "192.0.2.1", 7, ("k", dt, colmap), colmap, arr)
+    got = _flow_frame([item], cols)
+
+    want = pd.DataFrame(
+        {"exporter_ip": np.repeat(np.asarray(["192.0.2.1"], dtype=object), n),
+         "seqno": np.full(n, 7, np.int64)}
+    )
+    for c in _FLOW_COLS:
+        want[c] = (
+            arr[f"f{have.index(c)}"].astype(np.int64)
+            if c in have
+            else pd.array([pd.NA] * n, dtype="Int64")
+        )
+    assert pa.Table.from_pandas(got, preserve_index=False).equals(
+        pa.Table.from_pandas(want[cols], preserve_index=False)
+    )

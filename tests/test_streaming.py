@@ -1021,7 +1021,10 @@ def test_daemon_templates_file_seeds_restart(spark, tmp_path):
     # has its own live tests)
     import types
 
-    from pmacct_spark.streaming.decode import load_templates_file
+    from pmacct_spark.streaming.decode import (
+        learn_template_cache,
+        load_templates_file,
+    )
 
     d = Daemon.__new__(Daemon)
     d.conf = types.SimpleNamespace(
@@ -1033,7 +1036,7 @@ def test_daemon_templates_file_seeds_restart(spark, tmp_path):
     live = spark.createDataFrame(
         rows, "exporter_ip string, seqno long, payload binary"
     ).select("exporter_ip", "payload")
-    d._persist_templates(live)
+    d._persist_templates(learn_template_cache(live))
     assert load_templates_file(path)
 
     d2 = Daemon.__new__(Daemon)
