@@ -21,6 +21,7 @@ cluster running the same channel queries over the union.
 
 from __future__ import annotations
 
+import logging
 import threading
 from dataclasses import dataclass, field
 from dataclasses import replace as _replace
@@ -32,6 +33,8 @@ from pmacct_spark import conffile
 from pmacct_spark.functions.addr import ipv4_ntoa
 from pmacct_spark.sources.udp import UdpSpool
 from pmacct_spark.streaming.store import FID, DecodedStore
+
+log = logging.getLogger("pmacct_spark")
 
 
 def canonical_flows(decoded: DataFrame) -> DataFrame:
@@ -2171,9 +2174,10 @@ class Daemon:
     def run_available(self, streaming: bool = True) -> dict[str, DataFrame]:
         """Process everything received so far through EVERY configured
         plugin channel (availableNow semantics) and deliver to each
-        plugin's sink. Returns {plugin_name: result DataFrame}."""
+        plugin's sink (the ``sinks.plugins`` table). Returns
+        {plugin_name: result DataFrame}."""
         from pmacct_spark.pipeline import build_aggregation
-        from pmacct_spark.sinks.files import write_print
+        from pmacct_spark.sinks.plugins import plugin, run_trigger
         from pmacct_spark.streaming.jobs import (
             run_to_memory,
             stream_aggregation,
@@ -2244,1170 +2248,15 @@ class Daemon:
                     .replace("$writer_pid", str(_os.getpid()))
                 )
                 out = out.withColumn("writer_id", F.lit(rendered))
-            if ptype == "print":
-                path = self.conf.get("print_output_file", name)
-                fmt = self.conf.get("print_output", name, "csv")
-                if path:
-                    emit = out
-                    if "proto" in emit.columns and not self.conf.getbool(
-                        "print_num_protos", name
-                    ):
-                        # print_num_protos (CONFIG-KEYS:1899): the
-                        # DEFAULT is to look protocol names up
-                        # (tcp/udp); true keeps numbers
-                        from pmacct_spark.functions.presentation import (
-                            proto_name,
-                        )
-
-                        emit = emit.withColumn(
-                            "proto", proto_name("proto")
-                        )
-                    if fmt in ("json", "avro"):
-                        # encode-as toggles apply to JSON/Avro only
-                        # (CONFIG-KEYS: "no effects for other
-                        # encodings", e.g. tcpflags_encode_as_array)
-                        emit = self._apply_encode_toggles(emit, name)
-                    if self.conf.getbool("timestamps_rfc9557", name):
-                        # timestamps_rfc9557 (+ timestamps_utc implied
-                        # for this engine's naive-UTC timestamps,
-                        # CONFIG-KEYS:1698): render every timestamp
-                        # column 'T'-separated with the numeric zone
-                        # offset (compose_timestamp, src/util.c:2550)
-                        from pmacct_spark.functions.presentation import (
-                            timestamp_render_sql,
-                        )
-
-                        for fld in emit.schema.fields:
-                            if str(fld.dataType).startswith("Timestamp"):
-                                emit = emit.withColumn(
-                                    fld.name,
-                                    F.expr(
-                                        timestamp_render_sql(
-                                            fld.name, rfc9557=True
-                                        )
-                                    ),
-                                )
-                    schema_out = self.conf.get(
-                        "avro_schema_output_file", name
-                    )
-                    if schema_out and fmt == "avro":
-                        # avro_schema_output_file (CONFIG-KEYS): dump
-                        # the record schema so consumers can decode
-                        # without a registry (build_avro_schema,
-                        # reference src/plugin_cmn_avro.c:47)
-                        import json as _json
-
-                        from pmacct_spark.sinks.avro import avro_schema_of
-
-                        with open(str(schema_out), "w") as fh:
-                            _json.dump(avro_schema_of(emit.schema), fh)
-                    write_print(
-                        emit, path, fmt=fmt,
-                        # print_output_file_append (CONFIG-KEYS): purges
-                        # accumulate instead of replacing the file set
-                        mode=(
-                            "append"
-                            if self.conf.getbool(
-                                "print_output_file_append", name
-                            )
-                            else "overwrite"
-                        ),
-                        latest_file=self.conf.get("print_latest_file", name),
-                        markers=self.conf.getbool("print_markers", name),
-                        separator=self.conf.get(
-                            "print_output_separator", name
-                        ),
-                        write_empty=self.conf.getbool(
-                            "print_write_empty_file", name
-                        ),
-                    )
-            elif ptype == "kafka":
-                # the Kafka accounting plugin (reference
-                # src/kafka_plugin.c): every purge ships the channel's
-                # aggregate as JSON messages through the live wire
-                # producer — kafka_topic (+_rr), kafka_partition_key
-                # (key columns for per-key ordering), kafka_broker_*
-                topic = self.conf.get("kafka_topic", name)
-                if topic:
-                    from pmacct_spark.sinks.kafka import (
-                        kafka_frame,
-                        purge_marker_json,
-                    )
-                    from pmacct_spark.sources.kafka_wire import (
-                        produce_frames,
-                    )
-
-                    pk = self.conf.get("kafka_partition_key", name)
-                    rr = self.conf.get("kafka_topic_rr", name)
-                    emit = out
-                    if "proto" in emit.columns and not self.conf.getbool(
-                        "kafka_num_protos", name
-                    ):
-                        from pmacct_spark.functions.presentation import (
-                            proto_name,
-                        )
-
-                        emit = emit.withColumn(
-                            "proto", proto_name("proto")
-                        )
-                    emit = self._apply_encode_toggles(emit, name)
-                    markers = self.conf.getbool("kafka_markers", name)
-                    if markers:
-                        # stage once: the close-marker entry count
-                        # and the frames both read the same
-                        # materialized aggregate instead of
-                        # recomputing it (and the count stays a
-                        # RECORD count even when multi_values packs
-                        # records into fewer messages)
-                        from pmacct_spark.operators.staging import (
-                            release,
-                            stage,
-                        )
-
-                        emit = stage(emit)
-                    pk_cols = (
-                        [c.strip() for c in str(pk).split(",")
-                         if c.strip()]
-                        if pk
-                        else None
-                    )
-                    out_fmt = str(
-                        self.conf.get("kafka_output", name, "json")
-                        or "json"
-                    ).lower()
-                    if out_fmt in ("avro", "avro_json"):
-                        # kafka_output: avro / avro_json
-                        # (CONFIG-KEYS:1854): binary Avro datums —
-                        # Confluent-framed when
-                        # kafka_avro_schema_registry is set — or
-                        # JSON-encoded Avro with union-branch
-                        # wrapping; avro_schema_file dumps the
-                        # record schema for registry-less consumers
-                        schema_out = self.conf.get(
-                            "avro_schema_file", name
-                        )
-                        if schema_out:
-                            import json as _json
-
-                            from pmacct_spark.sinks.avro import (
-                                avro_schema_of,
-                            )
-
-                            with open(str(schema_out), "w") as fh:
-                                _json.dump(
-                                    avro_schema_of(emit.schema), fh
-                                )
-                        if out_fmt == "avro_json":
-                            from pmacct_spark.sinks.avro import (
-                                avro_json_wrap,
-                            )
-
-                            frames = kafka_frame(
-                                avro_json_wrap(emit), str(topic),
-                                key_cols=pk_cols,
-                            )
-                        else:
-                            reg_url = self.conf.get(
-                                "kafka_avro_schema_registry", name
-                            )
-                            if reg_url:
-                                from pmacct_spark.sinks.kafka import (
-                                    kafka_avro_frame,
-                                )
-                                from pmacct_spark.sinks.registry import (
-                                    HttpSchemaRegistryClient,
-                                )
-
-                                hp = str(reg_url).split(
-                                    "//", 1
-                                )[-1].rstrip("/")
-                                frames = kafka_avro_frame(
-                                    emit, str(topic),
-                                    HttpSchemaRegistryClient(
-                                        *conffile.split_host_port(
-                                            hp, 8081
-                                        )
-                                    ),
-                                    key_cols=pk_cols,
-                                )
-                            else:
-                                from pmacct_spark.sinks.avro import (
-                                    avro_frames,
-                                )
-
-                                frames = avro_frames(
-                                    emit, key_cols=pk_cols
-                                ).select(
-                                    "key", "value",
-                                    F.lit(str(topic)).alias("topic"),
-                                )
-                                mv = self.conf.get(
-                                    "kafka_multi_values", name
-                                )
-                                if mv and int(mv) > 0:
-                                    # avro batching: multiple datums
-                                    # per message bounded by
-                                    # avro_buffer_size (CONFIG-KEYS:
-                                    # 1866 — "for Apache Avro see
-                                    # avro_buffer_size"); plain-datum
-                                    # output only, the Confluent
-                                    # frame is one-datum-per-message
-                                    from pmacct_spark.sinks.kafka import (
-                                        pack_multi_values,
-                                    )
-
-                                    buf = int(
-                                        self.conf.get(
-                                            "avro_buffer_size",
-                                            name, 8192,
-                                        )
-                                        or 8192
-                                    )
-                                    frames = pack_multi_values(
-                                        frames, buf, binary=True,
-                                        max_records=int(mv),
-                                    ).select(
-                                        F.lit(None)
-                                        .cast("string")
-                                        .alias("key"),
-                                        "value",
-                                        "topic",
-                                    )
-                        if rr:
-                            from pmacct_spark.sinks.msglog import (
-                                apply_rr_suffix,
-                            )
-
-                            frames = apply_rr_suffix(
-                                frames, "topic", str(topic), int(rr)
-                            )
-                    else:
-                        frames = kafka_frame(
-                            emit,
-                            str(topic),
-                            key_cols=pk_cols,
-                            rr_topics=int(rr) if rr else None,
-                        )
-                        mv = self.conf.get("kafka_multi_values", name)
-                        if mv and int(mv) > 0:
-                            # kafka_multi_values (CONFIG-KEYS:1519):
-                            # newline-separated JSON objects packed
-                            # into ~N-byte messages (JSON only; Avro
-                            # batches via avro_buffer_size)
-                            from pmacct_spark.sinks.kafka import (
-                                pack_multi_values,
-                            )
-
-                            frames = pack_multi_values(
-                                frames, int(mv)
-                            ).select(
-                                F.lit(None).cast("string").alias("key"),
-                                "value",
-                                "topic",
-                            )
-                    bhost = str(
-                        self.conf.get(
-                            "kafka_broker_host", name, "127.0.0.1"
-                        )
-                        or "127.0.0.1"
-                    )
-                    bport = int(
-                        self.conf.get("kafka_broker_port", name, 9092)
-                        or 9092
-                    )
-                    kopts: dict = {}
-                    kcf = self.conf.get("kafka_config_file", name)
-                    if kcf:
-                        # kafka_config_file (CONFIG-KEYS:851): CSV
-                        # <type, key, value> librdkafka properties;
-                        # the wire producer honors acks/timeout/batch
-                        # and warns the rest inert
-                        from pmacct_spark.sources.kafka_wire import (
-                            wire_producer_options,
-                        )
-
-                        with open(str(kcf)) as fh:
-                            kopts = wire_producer_options(
-                                conffile.parse_kafka_config_file(
-                                    fh.read()
-                                )
-                            )
-                    kpart = self.conf.get("kafka_partition", name)
-                    if kpart is not None and int(kpart) >= 0:
-                        # kafka_partition (CONFIG-KEYS): a fixed
-                        # partition id (-1/unset = partitioner)
-                        kopts["partition"] = int(kpart)
-                    if markers:
-                        # purge_init/purge_close delimiters around the
-                        # batch (kafka_markers CONFIG-KEYS:1791;
-                        # kafka_plugin.c:544,868) — driver-side single
-                        # messages on the base topic, like the writer
-                        # process in the reference. avro output gets
-                        # the acct_init/acct_close Avro record datums
-                        # (compose_avro_acct_init/_close,
-                        # src/plugin_cmn_avro.c); JSON/avro_json get
-                        # the jansson objects. The staged `emit` keeps
-                        # purged_entries a RECORD count even when
-                        # multi_values packs records into fewer
-                        # messages.
-                        import os as _os
-                        import time as _time
-
-                        from pmacct_spark.sources.kafka_wire import (
-                            KafkaWireClient,
-                        )
-
-                        if out_fmt == "avro":
-                            from pmacct_spark.sinks.kafka import (
-                                purge_marker_avro,
-                            )
-
-                            def _mk(*a, **kw) -> bytes:
-                                return purge_marker_avro(*a, **kw)
-                        else:
-                            def _mk(*a, **kw) -> bytes:
-                                return purge_marker_json(
-                                    *a, **kw
-                                ).encode()
-
-                        wpid = _os.getpid()
-                        t0 = _time.time()
-                        n_rows = emit.count()
-                        cli = KafkaWireClient(bhost, bport)
-                        try:
-                            cli.produce(
-                                str(topic), 0,
-                                [(None, _mk("purge_init", name, wpid))],
-                            )
-                        finally:
-                            cli.close()
-                    produce_frames(frames, bhost, bport, **kopts)
-                    if markers:
-                        release(emit)
-                        cli = KafkaWireClient(bhost, bport)
-                        try:
-                            cli.produce(
-                                str(topic), 0,
-                                [(None, _mk(
-                                    "purge_close", name, wpid,
-                                    purged=n_rows, total=n_rows,
-                                    duration=int(_time.time() - t0),
-                                ))],
-                            )
-                        finally:
-                            cli.close()
-            elif ptype == "amqp":
-                # the AMQP accounting plugin (reference
-                # src/amqp_plugin.c): publish the channel aggregate on
-                # the configured exchange/routing key over the live
-                # 0-9-1 wire — amqp_routing_key (+_rr), amqp_exchange,
-                # amqp_persistent_msg
-                rkey = self.conf.get("amqp_routing_key", name)
-                if rkey:
-                    from pmacct_spark.sinks.amqp import amqp_frame
-                    from pmacct_spark.sinks.amqp_wire import (
-                        publish_frames,
-                    )
-
-                    rr = self.conf.get("amqp_routing_key_rr", name)
-                    emit = out
-                    if "proto" in emit.columns and not self.conf.getbool(
-                        "amqp_num_protos", name
-                    ):
-                        # amqp_num_protos (CONFIG-KEYS:1899): protocol
-                        # NAMES by default, numbers only when true —
-                        # same contract as the print/kafka twins
-                        from pmacct_spark.functions.presentation import (
-                            proto_name,
-                        )
-
-                        emit = emit.withColumn(
-                            "proto", proto_name("proto")
-                        )
-                    emit = self._apply_encode_toggles(emit, name)
-                    amarkers = self.conf.getbool("amqp_markers", name)
-                    if amarkers:
-                        # staged once: entry count + frames share one
-                        # compute; count stays a RECORD count under
-                        # multi_values packing
-                        from pmacct_spark.operators.staging import (
-                            release,
-                            stage,
-                        )
-
-                        emit = stage(emit)
-                    frame_kw = dict(
-                        exchange=str(
-                            self.conf.get("amqp_exchange", name, "pmacct")
-                            or "pmacct"
-                        ),
-                        routing_key=str(rkey),
-                        rr=int(rr) if rr else None,
-                        exchange_type=str(
-                            self.conf.get(
-                                "amqp_exchange_type", name, "direct"
-                            )
-                            or "direct"
-                        ),
-                        persistent=self.conf.getbool(
-                            "amqp_persistent_msg", name
-                        ),
-                    )
-                    a_fmt = str(
-                        self.conf.get("amqp_output", name, "json")
-                        or "json"
-                    ).lower()
-                    if a_fmt in ("avro", "avro_json"):
-                        # amqp_output: avro / avro_json
-                        # (CONFIG-KEYS:1854): same value encodings as
-                        # the Kafka twin — binary datums or
-                        # union-branch-wrapped Avro JSON; the registry
-                        # key is Kafka-only in the reference, so plain
-                        # datums here (avro_schema_file for consumers)
-                        from pmacct_spark.sinks.amqp import (
-                            amqp_body_frame,
-                        )
-
-                        schema_out = self.conf.get(
-                            "avro_schema_file", name
-                        )
-                        if schema_out:
-                            import json as _json
-
-                            from pmacct_spark.sinks.avro import (
-                                avro_schema_of,
-                            )
-
-                            with open(str(schema_out), "w") as fh:
-                                _json.dump(
-                                    avro_schema_of(emit.schema), fh
-                                )
-                        if a_fmt == "avro_json":
-                            from pmacct_spark.sinks.avro import (
-                                avro_json_wrap,
-                            )
-                            from pmacct_spark.sinks.kafka import (
-                                compose_json_value,
-                            )
-
-                            wrapped = avro_json_wrap(emit)
-                            bodies = wrapped.select(
-                                compose_json_value(wrapped).alias(
-                                    "body"
-                                )
-                            )
-                            frames = amqp_body_frame(
-                                bodies,
-                                content_type="application/json",
-                                **frame_kw,
-                            )
-                        else:
-                            from pmacct_spark.sinks.avro import (
-                                avro_frames,
-                            )
-
-                            frames = amqp_body_frame(
-                                avro_frames(emit).select(
-                                    F.col("value").alias("body")
-                                ),
-                                **frame_kw,
-                            )
-                    else:
-                        frames = amqp_frame(emit, **frame_kw)
-                        mv = self.conf.get("amqp_multi_values", name)
-                        if mv and int(mv) > 0:
-                            # amqp_multi_values: same newline packing
-                            # as the Kafka twin; mind amqp_frame_max
-                            # accommodating the packed body (docs)
-                            from pmacct_spark.sinks.kafka import (
-                                pack_multi_values,
-                            )
-
-                            frames = pack_multi_values(
-                                frames,
-                                int(mv),
-                                value_col="body",
-                                group_cols=(
-                                    "exchange", "exchange_type",
-                                    "routing_key", "delivery_mode",
-                                    "content_type",
-                                ),
-                            )
-                    ahost = str(
-                        self.conf.get("amqp_host", name, "127.0.0.1")
-                        or "127.0.0.1"
-                    )
-                    aport = int(
-                        self.conf.get("amqp_port", name, 5672) or 5672
-                    )
-                    conn_kw = dict(
-                        user=str(
-                            self.conf.get("amqp_user", name, "guest")
-                            or "guest"
-                        ),
-                        passwd=str(
-                            self.conf.get("amqp_passwd", name, "guest")
-                            or "guest"
-                        ),
-                        vhost=str(
-                            self.conf.get("amqp_vhost", name, "/") or "/"
-                        ),
-                        frame_max=int(
-                            self.conf.get("amqp_frame_max", name, 131072)
-                            or 131072
-                        ),
-                        heartbeat=int(
-                            self.conf.get(
-                                "amqp_heartbeat_interval", name, 0
-                            )
-                            or 0
-                        ),
-                    )
-                    exch = str(
-                        self.conf.get("amqp_exchange", name, "pmacct")
-                        or "pmacct"
-                    )
-                    etype = str(
-                        self.conf.get(
-                            "amqp_exchange_type", name, "direct"
-                        )
-                        or "direct"
-                    )
-                    if amarkers:
-                        # amqp_markers (CONFIG-KEYS:1791): same
-                        # purge_init/purge_close delimiters as Kafka,
-                        # published on the channel's exchange +
-                        # routing key (amqp_plugin.c:517,~840); avro
-                        # output carries the acct_init/acct_close
-                        # Avro record datums
-                        import os as _os
-                        import time as _time
-
-                        from pmacct_spark.sinks.amqp_wire import (
-                            AmqpWireClient,
-                        )
-                        from pmacct_spark.sinks.kafka import (
-                            purge_marker_avro,
-                            purge_marker_json,
-                        )
-
-                        if a_fmt == "avro":
-                            def _amk(*a, **kw) -> tuple[bytes, str]:
-                                return (
-                                    purge_marker_avro(*a, **kw),
-                                    "application/octet-stream",
-                                )
-                        else:
-                            def _amk(*a, **kw) -> tuple[bytes, str]:
-                                return (
-                                    purge_marker_json(
-                                        *a, **kw
-                                    ).encode(),
-                                    "application/json",
-                                )
-
-                        wpid = _os.getpid()
-                        t0 = _time.time()
-                        n_rows = emit.count()
-                        body, ctype = _amk("purge_init", name, wpid)
-                        cli = AmqpWireClient(ahost, aport, **conn_kw)
-                        try:
-                            cli.exchange_declare(exch, etype)
-                            cli.publish(
-                                exch, str(rkey), body,
-                                content_type=ctype,
-                            )
-                        finally:
-                            cli.close()
-                    publish_frames(frames, ahost, aport, **conn_kw)
-                    if amarkers:
-                        release(emit)
-                        body, ctype = _amk(
-                            "purge_close", name, wpid,
-                            purged=n_rows, total=n_rows,
-                            duration=int(_time.time() - t0),
-                        )
-                        cli = AmqpWireClient(ahost, aport, **conn_kw)
-                        try:
-                            cli.exchange_declare(exch, etype)
-                            cli.publish(
-                                exch, str(rkey), body,
-                                content_type=ctype,
-                            )
-                        finally:
-                            cli.close()
-            elif ptype in ("sql", "mysql", "pgsql", "sqlite3"):
-                # the SQL accounting plugins (reference
-                # src/sql_common.c statement cycle): every purge runs
-                # UPDATE-counters-then-INSERT against a real embedded
-                # SQL engine (DuckDB standing in for the sqlite3
-                # backend; the PG/MySQL WIRE conversations are covered
-                # by sinks/pgwire + mysql_wire) — sql_table + sql_db
-                # name the target, sql_dont_try_update flips
-                # append-only, stamps ride stamp_updated
-                table = self.conf.get("sql_table", name)
-                dbp = self.conf.get("sql_db", name)
-                if table and dbp:
-                    import datetime as _dt
-
-                    from pmacct_spark.sinks.upsert import DuckDBSqlTable
-
-                    # dynamic table names (CONFIG-KEYS sql_table:
-                    # strftime variables rendered at purge time, the
-                    # reference's per-period tables, e.g.
-                    # acct_%Y%m%d); a new rendering starts a new table
-                    table = _dt.datetime.utcnow().strftime(str(table))
-                    if "proto" in out.columns and not self.conf.getbool(
-                        "sql_num_protos", name
-                    ):
-                        # sql_num_protos (CONFIG-KEYS:1899): protocol
-                        # NAMES by default in the SQL schema, numbers
-                        # only when true
-                        from pmacct_spark.functions.presentation import (
-                            proto_name,
-                        )
-
-                        out = out.withColumn("proto", proto_name("proto"))
-                    if ptype in ("mysql", "sqlite3") and self.conf.getbool(
-                        "sql_num_hosts", name
-                    ):
-                        # sql_num_hosts (CONFIG-KEYS:1911, MySQL/SQLite
-                        # only): host/net columns stored numerical in
-                        # network byte order — the reference wraps
-                        # every such value in INET6_ATON() server-side
-                        # (count_*_aton_handler src/sql_handlers.c:
-                        # 1241); the engine computes the same 4/16-byte
-                        # binary JVM-side instead
-                        from pmacct_spark.functions.addr import (
-                            inet6_aton,
-                        )
-
-                        for hc in (
-                            # the channel output vocabulary (registry
-                            # aggregate-key names; the reference's
-                            # aton-handler coverage set)
-                            "src_host", "dst_host", "src_net",
-                            "dst_net", "peer_src_ip", "peer_dst_ip",
-                            "post_nat_src_host", "post_nat_dst_host",
-                            "tunnel_src_host", "tunnel_dst_host",
-                        ):
-                            if hc in out.columns:
-                                out = out.withColumn(
-                                    hc, inet6_aton(F.col(hc))
-                                )
-                    counters = [
-                        c for c in ("bytes", "packets", "flows")
-                        if c in out.columns
-                    ]
-                    keys = [
-                        c for c in out.columns
-                        if c not in counters and c != "writer_id"
-                    ]
-                    cache = getattr(self, "_sql_tables", {})
-                    db = cache.get((name, table))
-                    if db is None:
-                        db = DuckDBSqlTable(
-                            str(dbp), str(table), keys, counters
-                        )
-                        cache[(name, table)] = db
-                        self._sql_tables = cache
-                    mv = self.conf.get("sql_multi_values", name)
-                    db.purge(
-                        out.select(*keys, *counters),
-                        stamp_updated=_dt.datetime.utcnow().strftime(
-                            "%Y-%m-%d %H:%M:%S"
-                        ),
-                        append_only=self.conf.getbool(
-                            "sql_dont_try_update", name
-                        ),
-                        multi_values=int(mv) if mv else 0,
-                        use_copy=self.conf.getbool("sql_use_copy", name),
-                        delimiter=str(
-                            self.conf.get("sql_delimiter", name, ",")
-                            or ","
-                        ),
-                    )
-            elif ptype == "tee":
-                # the tee replicator plugin (reference
-                # src/tee_plugin/tee_plugin.c): RAW datagrams — not
-                # decoded flows — fan out to the receiver pools of the
-                # tee_receivers map, tag-filtered via pre_tag_map and
-                # balanced rr/hash within a pool, over real UDP sockets
-                rmap = self.conf.get("tee_receivers", name)
-                if rmap:
-                    from pmacct_spark.sinks.tee import (
-                        TeeReceiver,
-                        emit_udp,
-                        route,
-                    )
-
-                    with open(str(rmap)) as fh:
-                        entries = conffile.parse_tee_receivers(
-                            fh.read(),
-                            max_pools=int(
-                                self.conf.get(
-                                    "tee_max_receiver_pools", name, 128
-                                )
-                                or 128
-                            ),
-                            max_receivers=int(
-                                self.conf.get(
-                                    "tee_max_receivers", name, 32
-                                )
-                                or 32
-                            ),
-                        )
-                    dgrams = self._spool_batch().withColumn(
-                        "export_proto_seqno", F.col("seqno")
-                    )
-                    ptm = self.conf.get("pre_tag_map")
-                    if ptm:
-                        from pmacct_spark.operators.pretag import (
-                            apply_pretag,
-                        )
-
-                        with open(ptm) as fh:
-                            rules = conffile.parse_pretag_map(fh.read())
-                        dgrams = apply_pretag(
-                            dgrams.withColumn(
-                                "peer_src_ip", F.col("exporter_ip")
-                            ),
-                            rules,
-                        ).drop("peer_src_ip")
-                    else:
-                        dgrams = dgrams.withColumn(
-                            "tag", F.lit(0).cast("bigint")
-                        )
-                    kafka_entries = {
-                        e["id"]: e for e in entries if e.get("kafka_broker")
-                    }
-                    receivers = [
-                        TeeReceiver(
-                            e["id"],
-                            tags=e.get("tags"),
-                            pool=e.get("pool", []),
-                            balance=e.get("balance", "rr"),
-                            hash_cols=("exporter_ip",),
-                        )
-                        for e in entries
-                    ]
-                    by_id = {r.receiver_id: r for r in receivers}
-                    kopts = None
-                    kcf = self.conf.get("tee_kafka_config_file", name)
-                    if kcf:
-                        # tee_kafka_config_file (CONFIG-KEYS:3463):
-                        # producer tuning for the Kafka-routed pools
-                        from pmacct_spark.sources.kafka_wire import (
-                            wire_producer_options,
-                        )
-
-                        with open(str(kcf)) as fh:
-                            kopts = wire_producer_options(
-                                conffile.parse_kafka_config_file(
-                                    fh.read()
-                                )
-                            )
-                    zmq_entries = {
-                        e["id"]: e for e in entries if e.get("zmq_address")
-                    }
-                    for rid, part in route(dgrams, receivers).items():
-                        ze = zmq_entries.get(rid)
-                        if ze is not None:
-                            # ZMQ-routed pool (zmq_address): raw
-                            # datagrams over ZMTP PUSH
-                            from pmacct_spark.sinks.tee import emit_zmq
-
-                            emit_zmq(
-                                part.select("payload"),
-                                ze["zmq_address"],
-                            )
-                            continue
-                        ke = kafka_entries.get(rid)
-                        if ke is not None:
-                            # Kafka-routed pool: raw datagrams ride
-                            # the bus byte-identical
-                            from pmacct_spark.sinks.tee import (
-                                emit_kafka,
-                            )
-
-                            emit_kafka(
-                                part.select("exporter_ip", "payload"),
-                                ke["kafka_broker"],
-                                ke["kafka_topic"],
-                                producer_opts=kopts,
-                            )
-                            continue
-                        if "endpoint" not in part.columns:
-                            # single-receiver pool: fixed endpoint
-                            part = part.withColumn(
-                                "endpoint",
-                                F.lit(by_id[rid].pool[0]),
-                            )
-                        emit_udp(
-                            part.select("payload", "endpoint"),
-                            # tee_source_ip (CONFIG-KEYS:3495): bind
-                            # the replicating socket's local address
-                            source_ip=self.conf.get(
-                                "tee_source_ip", name
-                            ),
-                        )
-            elif ptype in ("nfprobe", "sfprobe"):
-                # probe plugins (reference src/nfprobe_plugin /
-                # src/sfprobe_plugin): re-export the collector's flows
-                # over a real UDP socket to <ptype>_receiver, version
-                # per nfprobe_version (5 | 9 | 10 — CONFIG-KEYS:2585)
-                recv = self.conf.get(f"{ptype}_receiver", name)
-                if recv and batch_df is not None:
-                    from pmacct_spark.sinks.tee import emit_udp
-
-                    rhost, rport = conffile.split_host_port(
-                        str(recv), 2100 if ptype == "nfprobe" else 6343
-                    )
-                    src_ip = str(
-                        self.conf.get(
-                            f"{ptype}_source_ip", name,
-                            "127.0.0.1",
-                        )
-                        or "127.0.0.1"
-                    )
-                    if ptype == "nfprobe":
-                        from pmacct_spark.sinks import nfprobe as NP
-
-                        ver = int(
-                            self.conf.get("nfprobe_version", name, 5)
-                            or 5
-                        )
-                        enc = {
-                            5: NP.encode_v5,
-                            9: NP.encode_v9,
-                            10: NP.encode_ipfix,
-                        }.get(ver)
-                        if enc is None:
-                            raise ValueError(
-                                f"nfprobe_version {ver} unsupported "
-                                "(5, 9, 10)"
-                            )
-                        kw: dict = {}
-                        # nfprobe_engine (CONFIG-KEYS:2550): v5 takes
-                        # 'type:id' (8-bit each) into header bytes
-                        # 20-21; v9/IPFIX take one 32-bit Source ID /
-                        # Obs Domain ID — the knob that keeps multiple
-                        # probe instances' sequencing and template
-                        # spaces apart at the collector
-                        eng = self.conf.get("nfprobe_engine", name)
-                        if eng is not None:
-                            if ver == 5:
-                                et, _, ei = str(eng).partition(":")
-                                kw["engine"] = (
-                                    int(et or 0), int(ei or 0)
-                                )
-                            elif ver == 9:
-                                kw["source_id"] = int(eng)
-                            else:
-                                kw["domain"] = int(eng)
-                        # nfprobe_direction (CONFIG-KEYS:2575):
-                        # in/out static or tag/tag2-derived (tag 1 ->
-                        # ingress, 2 -> egress); exported as
-                        # DIRECTION IE 61 on v9/IPFIX.
-                        # nfprobe_ifindex (:2586) + _override
-                        # (:2597): place a static or tag-derived
-                        # ifIndex on the direction's interface —
-                        # default only where the record carries none
-                        # (0), override replaces any non-zero compute
-                        dirn = self.conf.get(
-                            f"{ptype}_direction", name
-                        )
-                        if dirn and ver in (9, 10):
-                            dirn = str(dirn).strip().lower()
-                            dcol = {
-                                "in": F.lit(0),
-                                "out": F.lit(1),
-                            }.get(dirn)
-                            if dcol is None and dirn in (
-                                "tag", "tag2"
-                            ):
-                                dcol = (
-                                    F.when(F.col(dirn) == 1, 0)
-                                    .when(F.col(dirn) == 2, 1)
-                                    .otherwise(0)
-                                )
-                            if dcol is not None:
-                                kw["with_direction"] = True
-                                batch_df = batch_df.withColumn(
-                                    "direction", dcol.cast("int")
-                                )
-                        ifx = self.conf.get(f"{ptype}_ifindex", name)
-                        if ifx is not None:
-                            ifx = str(ifx).strip().lower()
-                            icol = (
-                                F.col(ifx).cast("long")
-                                if ifx in ("tag", "tag2")
-                                else F.lit(int(ifx)).cast("long")
-                            )
-                            override = self.conf.getbool(
-                                f"{ptype}_ifindex_override", name
-                            )
-
-                            def _place(cur):
-                                if override:
-                                    return F.when(
-                                        icol > 0, icol
-                                    ).otherwise(cur)
-                                return F.when(
-                                    F.coalesce(cur, F.lit(0)) == 0,
-                                    icol,
-                                ).otherwise(cur)
-
-                            # the value lands on the interface of the
-                            # RECORD's direction: per-row when tag-
-                            # derived, static for in/out
-                            if "direction" in batch_df.columns:
-                                batch_df = batch_df.withColumn(
-                                    "iface_in",
-                                    F.when(
-                                        F.col("direction") == 0,
-                                        _place(F.col("iface_in")),
-                                    ).otherwise(F.col("iface_in")),
-                                ).withColumn(
-                                    "iface_out",
-                                    F.when(
-                                        F.col("direction") == 1,
-                                        _place(F.col("iface_out")),
-                                    ).otherwise(F.col("iface_out")),
-                                )
-                            else:
-                                tgt = (
-                                    "iface_out"
-                                    if str(dirn).strip().lower()
-                                    == "out"
-                                    else "iface_in"
-                                )
-                                batch_df = batch_df.withColumn(
-                                    tgt, _place(F.col(tgt))
-                                )
-                        # nfprobe_tstamp_usec (CONFIG-KEYS:2613):
-                        # v9/IPFIX export IEs 154/155 (16-byte
-                        # sec+usec pairs) instead of epoch-ms
-                        if ver in (9, 10) and self.conf.getbool(
-                            "nfprobe_tstamp_usec", name
-                        ):
-                            kw["tstamp_usec"] = True
-                            batch_df = batch_df.withColumn(
-                                "ts_us",
-                                F.expr(
-                                    "unix_micros(CAST(ts AS TIMESTAMP))"
-                                ),
-                            ).withColumn(
-                                "end_ts_us",
-                                F.expr(
-                                    "unix_micros("
-                                    "CAST(end_ts AS TIMESTAMP))"
-                                ),
-                            )
-                        dgrams = enc(batch_df, exporter_ip=src_ip, **kw)
-                    else:
-                        from pmacct_spark.sinks.sfprobe import (
-                            _agent_field,
-                            encode_sflow5,
-                        )
-
-                        # sfprobe_agentip (CONFIG-KEYS:2624): the
-                        # datagram header's agentIp field — distinct
-                        # from the transport source address
-                        # (sfprobe_source_ip); defaults to it like the
-                        # reference's 'localhost' fallback chain.
-                        # sfprobe_agentsubid (:2631): agentSubId,
-                        # reference default 1402.
-                        agent_ip = str(
-                            self.conf.get("sfprobe_agentip", name)
-                            or src_ip
-                        )
-                        subid = int(
-                            self.conf.get(
-                                "sfprobe_agentsubid", name, 1402
-                            )
-                            or 1402
-                        )
-                        bad_key = (
-                            "sfprobe_agentip"
-                            if agent_ip != src_ip
-                            else "sfprobe_source_ip"
-                        )
-                        try:  # config-time check, names the key
-                            _agent_field(agent_ip)
-                        except ValueError:
-                            raise ValueError(
-                                f"{bad_key} must be a valid "
-                                f"IPv4/IPv6 address (got {agent_ip!r})"
-                            ) from None
-                        dgrams = encode_sflow5(
-                            batch_df, agent_ip=agent_ip,
-                            agent_subid=subid,
-                        )
-                        ifspeed = self.conf.get("sfprobe_ifspeed", name)
-                        if ifspeed and batch_df is not None:
-                            # sfprobe_ifspeed (CONFIG-KEYS:2635): the
-                            # agent also exports per-interface counter
-                            # samples; the static speed rides the
-                            # generic-counters block, and the octet/
-                            # packet counters are what this agent
-                            # accounted through each input interface
-                            # (the reference agent's accumulators)
-                            from pmacct_spark.sinks.sfprobe import (
-                                encode_sflow_counters,
-                            )
-
-                            ctrs = batch_df.groupBy(
-                                F.col("iface_in").alias("if_index")
-                            ).agg(
-                                F.sum("bytes").alias("if_in_octets"),
-                                F.sum("packets").alias("if_in_ucast"),
-                            ).selectExpr(
-                                "if_index",
-                                "CAST(6 AS BIGINT) AS if_type",
-                                f"CAST({int(ifspeed)} AS BIGINT)"
-                                " AS if_speed",
-                                "CAST(3 AS BIGINT) AS if_status",
-                                "if_in_octets", "if_in_ucast",
-                                "CAST(0 AS BIGINT) AS if_in_errors",
-                                "CAST(0 AS BIGINT) AS if_out_octets",
-                                "CAST(0 AS BIGINT) AS if_out_ucast",
-                                "CAST(0 AS BIGINT) AS if_out_errors",
-                            )
-                            dgrams = dgrams.unionByName(
-                                encode_sflow_counters(
-                                    ctrs, agent_ip=agent_ip,
-                                    agent_subid=subid,
-                                )
-                            )
-                    hop = self.conf.get(f"{ptype}_hoplimit", name)
-                    emit_udp(
-                        dgrams,
-                        default_endpoint=f"{rhost}:{rport}",
-                        # bind the local address ONLY when the conf
-                        # set it explicitly (reference default: OS
-                        # selects the source address)
-                        source_ip=self.conf.get(
-                            f"{ptype}_source_ip", name
-                        ),
-                        ttl=int(hop) if hop else None,
-                    )
-            trig = (
-                conffile._typed(self.conf, name, "trigger_exec", ptype)
-                if ptype in (
-                    "sql", "mysql", "pgsql", "sqlite3",
-                    "print", "kafka", "amqp",
-                )
-                else None
-            )
-            if trig:
-                # [sql|print|amqp|kafka]_trigger_exec (CONFIG-KEYS:
-                # 1955; P_trigger_exec src/plugin_common.c): spawn the
-                # executable after this channel's purge. SQL plugins
-                # export the docs/TRIGGER_VARS environment; non-SQL
-                # triggers run bare ("no environment variables are
-                # set"). *_trigger_exec_async runs detached.
-                import os as _os
-                import shlex as _shlex
-                import subprocess as _sp
-
-                env = dict(_os.environ)
-                if ptype in ("sql", "mysql", "pgsql", "sqlite3"):
-                    tbl = self.conf.get("sql_table", name)
-                    if tbl:
-                        import datetime as _dt
-
-                        env["SQL_TABLE"] = str(tbl)
-                        eff = _dt.datetime.utcnow().strftime(str(tbl))
-                        if eff != str(tbl):
-                            env["EFFECTIVE_SQL_TABLE"] = eff
-                    if self.conf.get("sql_db", name):
-                        env["SQL_DB"] = str(self.conf.get("sql_db", name))
-                    rt = conffile._typed(
-                        self.conf, name, "refresh_time", ptype
-                    )
-                    if rt:
-                        env["SQL_REFRESH_TIME"] = str(rt)
-                cmd = _shlex.split(str(trig))
-                t_async = str(
-                    conffile._typed(
-                        self.conf, name, "trigger_exec_async", ptype
-                    )
-                    or ""
-                ).lower() in ("true", "1", "yes")
-                try:
-                    if t_async:
-                        _sp.Popen(cmd, env=env)
-                    else:
-                        _sp.run(cmd, env=env, check=False, timeout=60)
-                except (OSError, _sp.TimeoutExpired) as exc:
-                    import logging
-
-                    logging.getLogger("pmacct_spark").warning(
-                        "%s_trigger_exec %r failed: %s", ptype, trig, exc
-                    )
+            row = plugin(ptype)
+            if row.emit is not None:
+                row.emit(self, name, out, batch_df)
+            if row.prefix:
+                run_trigger(self, name, row.prefix)
             results[name] = out
         self.dump_rib_if_configured()
         self.write_msglog_if_configured()
         return results
-
-    def _apply_encode_toggles(self, df: DataFrame, plugin: str) -> DataFrame:
-        """The encode-as output toggles (CONFIG-KEYS; JSON handlers
-        src/plugin_cmn_json.c:365-392): rewrite the affected columns
-        for JSON/Avro sinks when the corresponding key is set. Pure
-        per-row expressions from functions/presentation — the same
-        dual-rendered builders the gated presentation queries hash."""
-        from pmacct_spark.functions.presentation import (
-            comms_array_sql,
-            fwd_status_str_sql,
-            mpls_stack_array_sql,
-            tcp_flags_array_sql,
-        )
-
-        def on(key: str) -> bool:
-            return self.conf.getbool(key, plugin)
-
-        toggles: list[tuple[str, str, str]] = []
-        if on("tcpflags_encode_as_array"):
-            toggles.append(
-                ("tcp_flags", "tcp_flags", tcp_flags_array_sql("tcp_flags"))
-            )
-        if on("fwd_status_encode_as_string"):
-            toggles.append(
-                ("fwd_status", "fwd_status", fwd_status_str_sql("fwd_status"))
-            )
-        if on("mpls_label_stack_encode_as_array"):
-            toggles.append(
-                (
-                    "mpls_label_stack",
-                    "mpls_label_stack",
-                    mpls_stack_array_sql("mpls_label_stack"),
-                )
-            )
-        # (tos_encode_as_dscp is applied at the PRIMITIVE level in
-        # _maps — before aggregation and the tos_file dictionary — so
-        # the output already carries DSCP; re-shifting here would
-        # double-apply)
-        if on("bgp_comms_encode_as_array"):
-            num = self.conf.get("bgp_comms_num", plugin)
-            for c in ("std_comm", "ext_comm", "lrg_comm"):
-                toggles.append(
-                    (c, c, comms_array_sql(c, int(num) if num else None))
-                )
-        if on("as_path_encode_as_array"):
-            toggles.append(("as_path", "as_path", comms_array_sql("as_path")))
-        if self.conf.getbool("pre_tag_label_encode_as_map"):
-            # pre_tag_label_encode_as_map (CONFIG-KEYS:2339): the
-            # label string "k1%v1,k2%v2" (set_label with the '%'
-            # delimiter) encodes as a map for JSON/Avro —
-            # "label": {"k1": "v1", "k2": "v2"}
-            toggles.append(
-                ("label", "label", "str_to_map(label, ',', '%')")
-            )
-        for col, out_col, sql in toggles:
-            if col in df.columns:
-                df = df.withColumn(out_col, F.expr(sql))
-        return df
 
     def dump_rib_if_configured(self) -> str | None:
         """Write a periodic RIB table dump when bgp_table_dump_file is
@@ -3518,14 +2367,16 @@ class Daemon:
         )
         return f"kafka://{khost}:{kport}/{topic}"
 
-    def _kafka_wire_opts(self, prefix: str) -> dict:
+    def _kafka_wire_opts(self, prefix: str, plugin: str | None = None) -> dict:
         """``{prefix}_kafka_config_file`` (librdkafka property
         passthrough, CONFIG-KEYS:851 family) and
         ``{prefix}_kafka_partition`` (fixed partition id) resolved to
         wire-producer options — shared by the msglog/dump/counter
-        Kafka emitters."""
+        Kafka emitters and, with ``prefix=""``, the Kafka plugin's
+        ``kafka_config_file[plugin]`` / ``kafka_partition[plugin]``."""
+        pfx = f"{prefix}_" if prefix else ""
         opts: dict = {}
-        kcf = self.conf.get(f"{prefix}_kafka_config_file")
+        kcf = self.conf.get(f"{pfx}kafka_config_file", plugin)
         if kcf:
             from pmacct_spark.sources.kafka_wire import (
                 wire_producer_options,
@@ -3535,7 +2386,7 @@ class Daemon:
                 opts = wire_producer_options(
                     conffile.parse_kafka_config_file(fh.read())
                 )
-        kpart = self.conf.get(f"{prefix}_kafka_partition")
+        kpart = self.conf.get(f"{pfx}kafka_partition", plugin)
         if kpart is not None and int(kpart) >= 0:
             opts["partition"] = int(kpart)
         return opts
@@ -4015,6 +2866,7 @@ class Daemon:
         startup would be invisible for the lifetime of the query —
         re-planning per tick reads the RIB as of each tick, matching
         the reference's enrich-at-arrival semantics."""
+        from pmacct_spark.sinks.plugins import plugin
         from pmacct_spark.streaming.jobs import stream_aggregation
 
         # Channels are live-dimension channels when enrichment reads
@@ -4042,12 +2894,13 @@ class Daemon:
             # the reference's per-channel purge cadence
             # (sql_refresh_time / print_refresh_time ...) overrides
             # the default trigger — but only for plugin TYPES that
-            # have a refresh concept; the memory plugin serves live
-            # and must not inherit a global sql_refresh_time
-            ptype = ptype_by_name.get(name)
+            # have a refresh concept (a conf prefix in the plugin
+            # table); the memory plugin serves live and must not
+            # inherit a global sql_refresh_time
+            prefix = plugin(ptype_by_name.get(name)).prefix
             rt = (
-                conffile._typed(self.conf, name, "refresh_time", ptype)
-                if ptype in ("sql", "print", "kafka", "amqp")
+                conffile._typed(self.conf, name, "refresh_time", prefix)
+                if prefix
                 else None
             )
             triggers[name] = float(rt) if rt else trigger_secs
@@ -4157,14 +3010,12 @@ class _ReplanLoop:
             try:
                 self._tick()
             except Exception as exc:  # keep serving the last good view
-                import sys as _sys
-
                 if type(exc) is not type(self.last_error) or str(exc) != str(
                     self.last_error
                 ):  # log each DISTINCT failure once, not once per tick
-                    print(
-                        f"replan[{self.name}]: {type(exc).__name__}: {exc}",
-                        file=_sys.stderr, flush=True,
+                    log.warning(
+                        "replan[%s]: %s: %s", self.name,
+                        type(exc).__name__, exc, exc_info=exc,
                     )
                 self.last_error = exc
             self._stop.wait(self.trigger_secs)

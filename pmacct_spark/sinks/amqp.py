@@ -4,12 +4,10 @@ exchange with a routing key; config surface amqp_exchange,
 amqp_exchange_type, amqp_routing_key, amqp_routing_key_rr,
 amqp_persistent_msg in CONFIG-KEYS).
 
-No broker exists in this container, so — exactly like sinks/kafka.py —
-this module builds the publishable frame, and that frame IS the
-testable surface: payload composition, exchange/routing-key choice,
-round-robin routing-key balancing, persistent-delivery properties. The
-actual publish is a foreachBatch callback behind an import-try (pika
-is not installed here).
+Like sinks/kafka.py, this module builds the publishable frame, and that
+frame IS the testable surface: payload composition, exchange/routing-key
+choice, round-robin routing-key balancing, persistent-delivery
+properties. The publish is ``sinks.amqp_wire.publish_frames``.
 """
 
 from __future__ import annotations
@@ -92,30 +90,3 @@ def amqp_body_frame(
         F.lit(2 if persistent else 1).alias("delivery_mode"),
         F.lit(content_type).alias("content_type"),
     )
-
-
-def write_amqp(frame: DataFrame, amqp_url: str) -> None:
-    """Publish a shaped frame via pika (foreachBatch-style driver-side
-    fan-out; unavailable in this container — the frame is the tested
-    contract)."""
-    try:
-        import pika  # noqa: F401
-    except ImportError as exc:  # pragma: no cover - no broker in sandbox
-        raise NotImplementedError(
-            "pika is not installed in this environment; amqp_frame() is "
-            "the testable publish contract"
-        ) from exc
-    params = pika.URLParameters(amqp_url)  # pragma: no cover
-    conn = pika.BlockingConnection(params)  # pragma: no cover
-    ch = conn.channel()  # pragma: no cover
-    for r in frame.toLocalIterator():  # pragma: no cover
-        ch.basic_publish(
-            exchange=r["exchange"],
-            routing_key=r["routing_key"],
-            body=r["body"],
-            properties=pika.BasicProperties(
-                delivery_mode=r["delivery_mode"],
-                content_type=r["content_type"],
-            ),
-        )
-    conn.close()  # pragma: no cover

@@ -2,11 +2,10 @@
 partition key columns (reference src/kafka_plugin.c:384,455-466;
 kafka_topic tokens; kafka_partition_key).
 
-The actual broker write is ``df.write(Stream).format("kafka")`` — not
-runnable in this container — so this module builds the exact (key,
-value, topic) frame Spark's Kafka writer consumes, and that frame IS
-the testable surface: payload composition, key choice, topic routing,
-round-robin topic balancing.
+This module builds the (key, value, topic) frame a Kafka producer
+consumes, and that frame IS the testable surface: payload composition,
+key choice, topic routing, round-robin topic balancing. The broker
+write is ``sources.kafka_wire.produce_frames``.
 """
 
 from __future__ import annotations
@@ -229,21 +228,6 @@ def kafka_frame(
     return df.select(
         key.alias("key"), value.alias("value"), topic_expr.alias("topic")
     )
-
-
-def write_kafka(frame: DataFrame, bootstrap_servers: str, streaming: bool = False):
-    """Hand the shaped frame to Spark's Kafka writer (requires the
-    spark-sql-kafka package + a broker; not available in this test
-    container)."""
-    if streaming:
-        return (
-            frame.writeStream.format("kafka")
-            .option("kafka.bootstrap.servers", bootstrap_servers)
-            .start()
-        )
-    frame.write.format("kafka").option(
-        "kafka.bootstrap.servers", bootstrap_servers
-    ).save()
 
 
 def kafka_avro_frame(
