@@ -25,11 +25,19 @@ from dataclasses import dataclass, field
 from pmacct_spark.config import PluginConfig, Preprocess
 from pmacct_spark.operators.pretag import Rule
 
+# plugin type -> its conf-key prefix (<prefix>_refresh_time,
+# <prefix>_trigger_exec, ...; "sql" for the whole SQL family), None for
+# types without one. The prefixes' first-seen order is _typed's lookup
+# order after the channel's own type.
+PLUGIN_PREFIXES = {
+    "memory": None, "sql": "sql", "mysql": "sql", "pgsql": "sql",
+    "sqlite3": "sql", "print": "print", "kafka": "kafka", "amqp": "amqp",
+    "nfprobe": None, "sfprobe": None, "tee": None,
+}
 # plugin types whose per-type keys map onto a channel
-_PLUGIN_TYPES = ("memory", "print", "sql", "mysql", "pgsql", "sqlite3",
-                 "kafka", "amqp", "nfprobe", "sfprobe", "tee")
+_PLUGIN_TYPES = tuple(PLUGIN_PREFIXES)
 # key prefixes that all mean "this channel's history/refresh/..."
-_TYPE_PREFIXES = ("sql", "print", "kafka", "amqp")
+_TYPE_PREFIXES = tuple(dict.fromkeys(p for p in PLUGIN_PREFIXES.values() if p))
 
 
 @dataclass

@@ -4,10 +4,11 @@ exchange with a routing key; config surface amqp_exchange,
 amqp_exchange_type, amqp_routing_key, amqp_routing_key_rr,
 amqp_persistent_msg in CONFIG-KEYS).
 
-Like sinks/kafka.py, this module builds the publishable frame, and that
-frame IS the testable surface: payload composition, exchange/routing-key
-choice, round-robin routing-key balancing, persistent-delivery
-properties. The publish is ``sinks.amqp_wire.publish_frames``.
+Like sinks/kafka.py, this module builds the frame the AMQP plugin
+(``sinks.plugins.AmqpBus``) publishes, and that frame IS the testable
+surface: payload composition, exchange/routing-key choice, round-robin
+routing-key balancing, persistent-delivery properties. The publish is
+``sinks.amqp_wire.publish_frames``.
 """
 
 from __future__ import annotations

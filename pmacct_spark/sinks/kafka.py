@@ -2,10 +2,11 @@
 partition key columns (reference src/kafka_plugin.c:384,455-466;
 kafka_topic tokens; kafka_partition_key).
 
-This module builds the (key, value, topic) frame a Kafka producer
-consumes, and that frame IS the testable surface: payload composition,
-key choice, topic routing, round-robin topic balancing. The broker
-write is ``sources.kafka_wire.produce_frames``.
+This module builds the (key, value, topic) frame the Kafka plugin
+(``sinks.plugins.KafkaBus``) produces, and that frame IS the testable
+surface: payload composition, key choice, topic routing, round-robin
+topic balancing. The broker write is
+``sources.kafka_wire.produce_frames``.
 """
 
 from __future__ import annotations

@@ -32,10 +32,6 @@ from pmacct_spark import conffile
 log = logging.getLogger("pmacct_spark")
 
 
-def _null_key():
-    return F.lit(None).cast("string").alias("key")
-
-
 def present(conf, name: str, out: DataFrame, prefix: str,
             encode: bool = True) -> DataFrame:
     """``<prefix>_num_protos`` (CONFIG-KEYS:1899): protocol NAMES
@@ -193,36 +189,11 @@ def emit_sql(d, name: str, out: DataFrame, flows,
 
 # --- Kafka / AMQP --------------------------------------------------------------
 
-def _values(conf, name: str, prefix: str, emit: DataFrame, fmt: str,
-            key_cols: list[str] | None = None) -> DataFrame:
-    """(key, value) per bus message. ``<prefix>_output`` (CONFIG-KEYS:
-    1854): json is compose_json of the record; avro_json the same over
-    the union-branch-wrapped record; avro one binary datum.
-    ``<prefix>_multi_values`` (:1519) packs newline-separated JSON
-    records into ~N-byte messages; Avro datums batch under
-    avro_buffer_size, at most N per message (:1866)."""
-    from pmacct_spark.sinks import avro as A
-    from pmacct_spark.sinks.kafka import compose_json_value, pack_multi_values
-
-    if fmt == "avro":
-        vals = A.avro_frames(emit, key_cols=key_cols)
-    else:
-        rec = A.avro_json_wrap(emit) if fmt == "avro_json" else emit
-        key = (
-            F.concat_ws("-", *[F.col(c).cast("string") for c in key_cols])
-            if key_cols else _null_key()
-        )
-        vals = rec.select(key.alias("key"), compose_json_value(rec).alias("value"))
-    mv = int(conf.get(f"{prefix}_multi_values", name) or 0)
-    if mv <= 0 or fmt == "avro_json":
-        return vals
-    if fmt == "avro":
-        buf = int(conf.get("avro_buffer_size", name) or 8192)
-        vals = pack_multi_values(vals, buf, binary=True, max_records=mv)
-    else:
-        vals = pack_multi_values(vals, mv)
+def _unkeyed(frames: DataFrame) -> DataFrame:
     # a multi-record message has no single record key
-    return vals.select(_null_key(), "value")
+    return frames.select(
+        F.lit(None).cast("string").alias("key"), "value", "topic"
+    )
 
 
 class KafkaBus:
@@ -239,32 +210,49 @@ class KafkaBus:
         self.port = int(conf.get("kafka_broker_port", name) or 9092)
 
     def frames(self, emit: DataFrame, fmt: str, ctype: str) -> DataFrame:
+        """``kafka_output`` (CONFIG-KEYS:1854): json is compose_json of
+        the record; avro_json the same over the union-branch-wrapped
+        record; avro one binary datum, Confluent-framed under
+        kafka_avro_schema_registry. ``kafka_multi_values`` (:1519)
+        packs newline-separated JSON records into ~N-byte messages;
+        plain Avro datums batch under avro_buffer_size, at most N per
+        message (:1866)."""
+        from pmacct_spark.sinks import avro as A
+        from pmacct_spark.sinks import kafka as K
         from pmacct_spark.sinks.msglog import apply_rr_suffix
 
-        conf, name = self.d.conf, self.name
+        conf, name, topic = self.d.conf, self.name, self.topic
         pk = conf.get("kafka_partition_key", name)
         key_cols = (
             [c.strip() for c in str(pk).split(",") if c.strip()] if pk else None
         )
+        rr = int(conf.get("kafka_topic_rr", name) or 0) or None
+        mv = int(conf.get("kafka_multi_values", name) or 0)
         reg = conf.get("kafka_avro_schema_registry", name)
-        if fmt == "avro" and reg:
-            # Confluent-framed datums, one per message
-            from pmacct_spark.sinks.avro import avro_registry_frames
+        if fmt == "json":
+            frames = K.kafka_frame(emit, topic, key_cols=key_cols, rr_topics=rr)
+            return _unkeyed(K.pack_multi_values(frames, mv)) if mv > 0 else frames
+        if fmt == "avro_json":
+            frames = K.kafka_frame(A.avro_json_wrap(emit), topic, key_cols=key_cols)
+        elif reg:  # Confluent-framed datums, one per message
             from pmacct_spark.sinks.registry import HttpSchemaRegistryClient
 
             hp = str(reg).split("//", 1)[-1].rstrip("/")
-            vals = avro_registry_frames(
-                emit,
+            frames = K.kafka_avro_frame(
+                emit, topic,
                 HttpSchemaRegistryClient(*conffile.split_host_port(hp, 8081)),
-                self.topic, key_cols=key_cols,
+                key_cols=key_cols,
             )
         else:
-            vals = _values(conf, name, "kafka", emit, fmt, key_cols)
-        rr = conf.get("kafka_topic_rr", name)
-        return apply_rr_suffix(
-            vals.withColumn("topic", F.lit(self.topic)), "topic",
-            self.topic, int(rr) if rr else None,
-        )
+            frames = A.avro_frames(emit, key_cols=key_cols).withColumn(
+                "topic", F.lit(topic)
+            )
+            if mv > 0:
+                buf = int(conf.get("avro_buffer_size", name) or 8192)
+                frames = _unkeyed(K.pack_multi_values(
+                    frames, buf, binary=True, max_records=mv
+                ))
+        return apply_rr_suffix(frames, "topic", topic, rr)
 
     def send(self, frames: DataFrame) -> None:
         from pmacct_spark.sources.kafka_wire import produce_frames
@@ -307,18 +295,39 @@ class AmqpBus:
         )
 
     def frames(self, emit: DataFrame, fmt: str, ctype: str) -> DataFrame:
-        from pmacct_spark.sinks.amqp import amqp_body_frame
+        """``amqp_output`` (CONFIG-KEYS:1854): json bodies are
+        compose_json of the record, packed newline-separated into
+        ~N-byte bodies under ``amqp_multi_values`` (mind amqp_frame_max);
+        avro_json the union-branch-wrapped record; avro one binary
+        datum per message (the registry is Kafka-only)."""
+        from pmacct_spark.sinks import amqp as Q
+        from pmacct_spark.sinks import avro as A
+        from pmacct_spark.sinks import kafka as K
 
         conf, name = self.d.conf, self.name
-        rr = conf.get("amqp_routing_key_rr", name)
-        vals = _values(conf, name, "amqp", emit, fmt)
-        return amqp_body_frame(
-            vals.select(F.col("value").alias("body")),
+        kw = dict(
             exchange=self.exchange, routing_key=self.rkey,
-            rr=int(rr) if rr else None, exchange_type=self.etype,
+            rr=int(conf.get("amqp_routing_key_rr", name) or 0) or None,
+            exchange_type=self.etype,
             persistent=conf.getbool("amqp_persistent_msg", name),
-            content_type=ctype,
         )
+        if fmt == "json":
+            frames = Q.amqp_frame(emit, **kw)
+            mv = int(conf.get("amqp_multi_values", name) or 0)
+            if mv > 0:
+                frames = K.pack_multi_values(
+                    frames, mv, value_col="body", group_cols=(
+                        "exchange", "exchange_type", "routing_key",
+                        "delivery_mode", "content_type",
+                    ),
+                )
+            return frames
+        if fmt == "avro_json":
+            rec = A.avro_json_wrap(emit)
+            bodies = rec.select(K.compose_json_value(rec).alias("body"))
+        else:
+            bodies = A.avro_frames(emit).select(F.col("value").alias("body"))
+        return Q.amqp_body_frame(bodies, content_type=ctype, **kw)
 
     def send(self, frames: DataFrame) -> None:
         from pmacct_spark.sinks.amqp_wire import publish_frames
@@ -593,28 +602,32 @@ def emit_probe(d, name: str, out: DataFrame, flows, ptype: str,
 
 class Plugin(NamedTuple):
     emit: Callable | None  # (daemon, name, out, flows); None: memory only
-    prefix: str | None = None  # <prefix>_refresh_time / _trigger_exec
+    prefix: str | None  # <prefix>_refresh_time / _trigger_exec
 
 
 # sql_num_hosts is a MySQL / SQLite key
 _sql_num_hosts = partial(emit_sql, num_hosts=True)
 
-PLUGINS: dict[str, Plugin] = {
-    "memory": Plugin(None),
-    "print": Plugin(emit_print, "print"),
-    "sql": Plugin(emit_sql, "sql"),
-    "mysql": Plugin(_sql_num_hosts, "sql"),
-    "pgsql": Plugin(emit_sql, "sql"),
-    "sqlite3": Plugin(_sql_num_hosts, "sql"),
-    "kafka": Plugin(partial(emit_bus, transport=KafkaBus), "kafka"),
-    "amqp": Plugin(partial(emit_bus, transport=AmqpBus), "amqp"),
-    "nfprobe": Plugin(partial(
+_EMITTERS: dict[str, Callable | None] = {
+    "memory": None,
+    "print": emit_print,
+    "sql": emit_sql,
+    "mysql": _sql_num_hosts,
+    "pgsql": emit_sql,
+    "sqlite3": _sql_num_hosts,
+    "kafka": partial(emit_bus, transport=KafkaBus),
+    "amqp": partial(emit_bus, transport=AmqpBus),
+    "nfprobe": partial(
         emit_probe, ptype="nfprobe", port=2100, datagrams=_nfprobe_datagrams
-    )),
-    "sfprobe": Plugin(partial(
+    ),
+    "sfprobe": partial(
         emit_probe, ptype="sfprobe", port=6343, datagrams=_sfprobe_datagrams
-    )),
-    "tee": Plugin(emit_tee),
+    ),
+    "tee": emit_tee,
+}
+# the conf prefixes are conffile's, the one place they are kept
+PLUGINS: dict[str, Plugin] = {
+    t: Plugin(emit, conffile.PLUGIN_PREFIXES[t]) for t, emit in _EMITTERS.items()
 }
 
 

@@ -30,8 +30,6 @@ def _free_port() -> int:
 def test_plugin_table_covers_every_plugin_type():
     assert set(PLUGINS) == set(conffile._PLUGIN_TYPES)
     assert PLUGINS["memory"].emit is None
-    prefixes = {row.prefix for row in PLUGINS.values()} - {None}
-    assert prefixes == set(conffile._TYPE_PREFIXES)
     sql = {t for t, row in PLUGINS.items() if row.prefix == "sql"}
     assert sql == {"sql", "mysql", "pgsql", "sqlite3"}
     for t in sql:  # one SQL emitter
@@ -105,6 +103,36 @@ plugins: {ptype}[b]
         assert staging._STAGE_DIRS == before
     finally:
         d.stop()
+
+
+def test_bus_transports_send_the_sink_module_frames(spark):
+    """The Kafka and AMQP transports ship the frames sinks/kafka and
+    sinks/amqp shape: same key, payload and round-robin target."""
+    from types import SimpleNamespace
+
+    from pmacct_spark.sinks.amqp import amqp_frame
+    from pmacct_spark.sinks.kafka import kafka_frame
+    from pmacct_spark.sinks.plugins import AmqpBus, KafkaBus
+
+    d = SimpleNamespace(conf=conffile.parse_conf("""
+kafka_partition_key[b]: src_as
+kafka_topic_rr[b]: 3
+amqp_routing_key_rr[b]: 4
+amqp_persistent_msg[b]: true
+"""))
+    out = spark.createDataFrame(
+        [(i, i % 5, 100 * i) for i in range(40)], "src_as int, dst_as int, bytes long"
+    )
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    assert rows(KafkaBus(d, "b", "t").frames(out, "json", "")) == rows(
+        kafka_frame(out, "t", key_cols=["src_as"], rr_topics=3)
+    )
+    assert rows(AmqpBus(d, "b", "k").frames(out, "json", "")) == rows(
+        amqp_frame(out, "pmacct", "k", rr=4, persistent=True)
+    )
 
 
 def test_sql_family_refresh_time_sets_serving_trigger(spark, tmp_path):
