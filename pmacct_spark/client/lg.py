@@ -104,7 +104,7 @@ class LookingGlass:
         self._provider = rib_provider
         # flat-cost serving: the RIB recompute+collect runs once per
         # DATA GENERATION (version_provider, e.g. the spool's file
-        # count), not once per request — a busy LG otherwise re-decodes
+        # list), not once per request — a busy LG otherwise re-decodes
         # the session history for every query
         self._version_provider = version_provider
         self._cache: tuple[object, list] | None = None

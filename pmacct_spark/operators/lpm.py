@@ -58,11 +58,13 @@ def lpm_join(
     exporter, then LPM within it; reference src/bgp/bgp_lookup.c:89).
 
     ``masklens`` overrides the driver-side discovery of distinct mask
-    lengths. Pass it for STREAMING plans over a live dimension: the
-    collect() freezes the set at plan-build time, so a dim that is
-    empty (or missing a length) at startup would never match routes
-    arriving later — a fixed range keeps every per-masklen join in
-    the plan and the stream-static dim re-evaluates per micro-batch.
+    lengths. Pass it when the set is already known (the daemon's RIB
+    snapshot carries its own), and for STREAMING plans over a live
+    dimension: the collect() freezes the set at plan-build time, so a
+    dim that is empty (or missing a length) at startup would never
+    match routes arriving later — a fixed range keeps every
+    per-masklen join in the plan and the stream-static dim
+    re-evaluates per micro-batch.
 
     ``dim_cache``: a caller-owned dict for CHAINED lookups over the
     same ``networks``/``attrs``/``extra_keys`` (follow_nexthop /
@@ -327,6 +329,7 @@ def follow_default_join(
     peer_col: str,
     follow_default: int,
     out_col: str = "__fd_peer",
+    masklens: list[int] | None = None,
 ) -> DataFrame:
     """bgp_follow_default (CONFIG-KEYS; the start_again_follow_default
     recursion, reference src/bgp/bgp_lookup.c:87,403-476): when the
@@ -344,11 +347,14 @@ def follow_default_join(
     the fact table never shuffles (the follow_nexthop_join shape).
 
     ``rib`` columns: ``peer_ip``, ``net_int``, ``masklen``,
-    ``nexthop`` (string)."""
-    masklens = sorted(
-        (r[0] for r in rib.select("masklen").distinct().collect()),
-        reverse=True,
-    )
+    ``nexthop`` (string). ``masklens``: the RIB's mask lengths, when
+    the caller knows them (default: one discovery collect, as
+    :func:`lpm_join` does)."""
+    if masklens is None:
+        masklens = [
+            r[0] for r in rib.select("masklen").distinct().collect()
+        ]
+    masklens = sorted(masklens, reverse=True)
     lookups = max(int(follow_default), 0) + 1
     out = flows.withColumn("__fd_sa", F.col(peer_col)).withColumn(
         "__fd_final", F.lit(None).cast("string")

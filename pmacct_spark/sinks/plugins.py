@@ -412,15 +412,14 @@ def emit_tee(d, name: str, out: DataFrame, flows) -> None:
             max_receivers=int(conf.get("tee_max_receivers", name) or 32),
         )
     dgrams = d._spool_batch().withColumn("export_proto_seqno", F.col("seqno"))
-    ptm = conf.get("pre_tag_map")
-    if ptm:
-        from pmacct_spark.operators.pretag import apply_pretag
-
-        with open(ptm) as fh:
-            rules = conffile.parse_pretag_map(fh.read())
-        dgrams = apply_pretag(
-            dgrams.withColumn("peer_src_ip", F.col("exporter_ip")), rules
-        ).drop("peer_src_ip")
+    ptm = d._pretag_map()
+    if ptm is not None:
+        tags = {c: e for c, e in ptm.columns.items() if c != "label"}
+        dgrams = (
+            dgrams.withColumn("peer_src_ip", F.col("exporter_ip"))
+            .withColumns(tags)
+            .drop("peer_src_ip")
+        )
     else:
         dgrams = dgrams.withColumn("tag", F.lit(0).cast("bigint"))
     receivers = [

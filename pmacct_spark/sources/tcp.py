@@ -21,6 +21,7 @@ import threading
 import time
 
 _BGP_MARKER = b"\xff" * 16
+SPOOL_DDL = "exporter_ip string, seqno long, epoch long, payload binary"
 
 # PROXY protocol (haproxy.org spec) — bmp_daemon_parse_proxy_header
 # (reference CONFIG-KEYS, parser src/network.c:33 parse_proxy_header):
@@ -800,15 +801,26 @@ class TcpSpool:
             time.sleep(0.02)
 
     # -- Spark surfaces -----------------------------------------------
-    def batch(self, spark):
-        return spark.read.schema(
-            "exporter_ip string, seqno long, epoch long, payload binary"
-        ).parquet(self.spool_dir)
+    def files(self) -> list[str]:
+        """The spool files written so far, oldest first. A file is
+        listed only once it is renamed in, so the list and the bytes a
+        read of it returns always agree (``_nfile`` is bumped before
+        the rename)."""
+        import glob
+
+        return sorted(glob.glob(os.path.join(self.spool_dir, "*.parquet")))
+
+    def batch(self, spark, files: list[str] | None = None):
+        """The spooled messages of ``files`` (default: the whole spool
+        directory)."""
+        if files is None:
+            return spark.read.schema(SPOOL_DDL).parquet(self.spool_dir)
+        if not files:
+            return spark.createDataFrame([], SPOOL_DDL)
+        return spark.read.schema(SPOOL_DDL).parquet(*files)
 
     def stream(self, spark, max_files_per_trigger: int | None = None):
-        r = spark.readStream.schema(
-            "exporter_ip string, seqno long, epoch long, payload binary"
-        )
+        r = spark.readStream.schema(SPOOL_DDL)
         if max_files_per_trigger is not None:
             r = r.option("maxFilesPerTrigger", max_files_per_trigger)
         return r.parquet(self.spool_dir)

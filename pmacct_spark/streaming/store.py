@@ -1,4 +1,5 @@
-"""The daemon's decoded-flow store: each spool file is decoded once.
+"""The daemon's batch-path stores: each flow spool file is decoded
+once, and the lookup RIB is built once per BGP/BMP spool generation.
 
 A batch drain or replan tick syncs the store with the live spool
 files. Files the store has not seen are decoded once, together in one
@@ -20,12 +21,17 @@ exporter-id join and the learned sampling rates.
   :meth:`DecodedStore.sync` returns None and the caller takes the
   ordered whole-spool path.
 
-Segments are released through ``operators.staging.release``, never
-while a pinned snapshot reads them, and never before two more
-unpinned drains have started since the last unpinned drain that read
-them (the window that keeps a drain's lazy results readable). Daemon
-stop releases the rest, except segments still inside that window:
-those go with the staging module's exit cleanup.
+:class:`RibStore` holds the lookup RIB (``Daemon.rib()``'s rows)
+``stage()``d, with its sorted mask lengths, and rebuilds it only when
+the list of live BGP/BMP spool files changes.
+
+Both stores release what they ``stage()`` by one rule (:class:`_Retention`):
+through ``operators.staging.release``, never while a pinned snapshot
+reads it, and never before two more unpinned drains have started since
+the last unpinned drain that read it (the window that keeps a drain's
+lazy results readable). Daemon stop releases the rest, except what is
+still inside that window: that goes with the staging module's exit
+cleanup.
 """
 
 from __future__ import annotations
@@ -108,19 +114,58 @@ class Snapshot:
             self._store._unpin(self._segments)
 
 
-class DecodedStore:
+class _Retention:
+    """The release rule both stores share. An entry (anything with
+    ``df``, ``pins`` and ``last_drain``) a sync reads is either pinned
+    (replan ticks, compaction: until the snapshot's release) or marked
+    with the unpinned drain that read it. A retired entry is released
+    once it has no pins and two more unpinned drains have started."""
+
+    def __init__(self):
+        self._lock = threading.Lock()
+        self._retired: list = []
+        self._drains = 0  # unpinned syncs so far
+
+    def _read(self, entries, pin: bool) -> None:
+        """Mark ``entries`` as read by the current sync. Callers hold
+        the lock and counted the sync (``_drains``) first."""
+        for s in entries:
+            if pin:
+                s.pins += 1
+            else:
+                s.last_drain = self._drains
+
+    def _unpin(self, entries) -> None:
+        with self._lock:
+            for s in entries:
+                s.pins -= 1
+            self._collect()
+
+    def _collect(self) -> None:
+        from pmacct_spark.operators.staging import release
+
+        keep = []
+        for s in self._retired:
+            if s.pins or (
+                s.last_drain is not None and self._drains < s.last_drain + 2
+            ):
+                keep.append(s)
+            else:
+                release(s.df)
+        self._retired = keep
+
+
+class DecodedStore(_Retention):
     """Per-spool-file decoded rows for one daemon. Thread-safe: the
     update in :meth:`sync` is single-flight under one lock, so N replan
     channels decode each file once between them."""
 
     def __init__(self):
-        self._lock = threading.Lock()
+        super().__init__()
         self._defs: dict = {}  # live spool file -> template defs (None: conflicting)
         self._segments: list[_Segment] = []
-        self._retired: list[_Segment] = []
         self._key = None  # decode key the live segments were built under
         self._ids = itertools.count()
-        self._drains = 0  # unpinned syncs so far
         self._logged: set = set()
 
     def sync(
@@ -177,11 +222,7 @@ class DecodedStore:
             reading = [s for s in self._segments if live & s.fids.keys()]
             self._retired.extend(s for s in self._segments if s not in reading)
             self._segments = reading
-            for s in reading:
-                if pin:
-                    s.pins += 1
-                else:
-                    s.last_drain = self._drains
+            self._read(reading, pin)
             self._collect()
             return Snapshot(
                 self, list(reading),  # later syncs append to _segments
@@ -244,30 +285,106 @@ class DecodedStore:
             None if opts is None else [c for c in opts.columns if c != FID],
         )
 
-    def _unpin(self, segments) -> None:
-        with self._lock:
-            for s in segments:
-                s.pins -= 1
-            self._collect()
-
-    def _collect(self) -> None:
-        from pmacct_spark.operators.staging import release
-
-        keep = []
-        for s in self._retired:
-            if s.pins or (
-                s.last_drain is not None and self._drains < s.last_drain + 2
-            ):
-                keep.append(s)
-            else:
-                release(s.df)
-        self._retired = keep
-
     def _note(self, msg: str, level: int) -> None:
         """Log each distinct store event once."""
         if msg not in self._logged:
             self._logged.add(msg)
             log.log(level, "decoded-flow store: %s", msg)
+
+
+@dataclass(eq=False)
+class _Rib:
+    df: DataFrame  # staged lookup RIB
+    files: tuple  # the spool files it was built from
+    masklens: list  # its distinct mask lengths, longest first
+    pins: int = 0
+    last_drain: int | None = None
+
+
+class RibSnapshot:
+    """A lookup RIB as enrichment reads it: ``df`` (one row per peer
+    and prefix) and ``masklens``, the mask lengths every LPM join over
+    it probes, longest first. A pinned snapshot keeps its staged rows
+    until :meth:`release`; a snapshot built without a store (the
+    streaming plans' live RIB) has nothing to release."""
+
+    def __init__(self, df: DataFrame, masklens: list, store=None, entry=None):
+        self.df = df
+        self.masklens = masklens
+        self._store = store
+        self._entry = entry
+
+    def release(self) -> None:
+        if self._store is not None:
+            store, self._store = self._store, None
+            store._unpin([self._entry])
+
+
+class RibStore(_Retention):
+    """The daemon's lookup RIB, built once per BGP/BMP spool
+    generation. Thread-safe: a rebuild is single-flight under the lock,
+    so N replan channels rebuild once between them."""
+
+    def __init__(self):
+        super().__init__()
+        self._rib: _Rib | None = None
+
+    def sync(
+        self, listing: Callable, build: Callable, pin: bool = False
+    ) -> RibSnapshot:
+        """The lookup RIB of the live spool files. ``listing()`` returns
+        them, one sorted tuple per session spool; it runs under the
+        lock, so a sync never goes back to an older list than another
+        sync already built. ``build(files)`` returns the RIB rows of
+        exactly those files; it runs only when they differ from the
+        current snapshot's."""
+        with self._lock:
+            if not pin:
+                self._drains += 1
+            files = listing()
+            old = self._rib
+            if old is None or old.files != files:
+                self._rib = self._build(files, build, old)
+                if old is not None:
+                    self._retired.append(old)
+            rib = self._rib
+            self._read([rib], pin)
+            self._collect()
+            return RibSnapshot(
+                rib.df, rib.masklens, self if pin else None, rib
+            )
+
+    def close(self) -> None:
+        """Daemon stop: release the RIB unless something still reads it
+        (see :meth:`DecodedStore.close`)."""
+        with self._lock:
+            if self._rib is not None:
+                self._retired.append(self._rib)
+                self._rib = None
+            self._collect()
+            self._retired = []
+
+    def _build(self, files, build, old) -> _Rib:
+        from pmacct_spark.operators.staging import stage
+
+        df = stage(build(files))
+        counts = df.groupBy("masklen").count().collect()
+        masklens = sorted(
+            (r[0] for r in counts if r[0] is not None), reverse=True
+        )
+        log.info(
+            "RIB snapshot rebuilt (%s): %d rows, %d masklens",
+            _rib_change(old, files), sum(r[1] for r in counts), len(masklens),
+        )
+        return _Rib(df, files, masklens)
+
+
+def _rib_change(old: _Rib | None, files: tuple) -> str:
+    """Why the RIB snapshot was rebuilt, for the log line."""
+    if old is None:
+        return "first build"
+    new = sum(len(set(n) - set(o)) for o, n in zip(old.files, files))
+    return f"{new} new spool files" if new else "spool files changed"
 
 
 def _canon(templates: dict) -> tuple:
