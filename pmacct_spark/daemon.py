@@ -423,7 +423,7 @@ class Daemon:
             lg_user = conf.get("bgp_daemon_lg_user")
             d.lg = LookingGlass(
                 lambda: d.rib(for_lookup=False),
-                version_provider=lambda: tuple(bgp_spool.files()),
+                version_provider=lambda: tuple(bgp_spool.rib_files()),
                 host=str(conf.get("bgp_daemon_lg_ip", default=host) or host),
                 port=int(conf.get("bgp_daemon_lg_port", default=0) or 0),
                 credentials=(
@@ -716,10 +716,12 @@ class Daemon:
         return out
 
     def _rib_files(self) -> tuple:
-        """The live spool files of both session spools, ``(bgp, bmp)``,
-        each sorted: the RIB snapshot's key."""
+        """The live spool files of both session spools that can change
+        the RIB (``TcpSpool.rib_files``: a live peer's keepalive-only
+        files do not), ``(bgp, bmp)``, each sorted: the RIB snapshot's
+        key."""
         return tuple(
-            tuple(sp.files()) if sp is not None else ()
+            tuple(sp.rib_files()) if sp is not None else ()
             for sp in (self.bgp_spool, self.bmp_spool)
         )
 
@@ -745,13 +747,9 @@ class Daemon:
         after startup would never be joined for the lifetime of the
         query. With the fixed range, the per-masklen dims are
         stream-static relations re-read every micro-batch. Otherwise
-        the mask lengths are read once from the RIB."""
-        df = self.rib()
-        if streaming:
-            return RibSnapshot(df, list(range(32, -1, -1)))
-        rows = df.select("masklen").distinct().collect()
+        the LPM joins discover the mask lengths themselves."""
         return RibSnapshot(
-            df, sorted((r[0] for r in rows if r[0] is not None), reverse=True)
+            self.rib(), list(range(32, -1, -1)) if streaming else None
         )
 
     # ---- spool compaction (bounded-replay serving, VERDICT r4 #4) ----
@@ -816,8 +814,9 @@ class Daemon:
             flows_dir, opts_dir = self._compact_dirs()
             dg = self._datagrams(victims)
             snap = self._store_sync(live, pin=True)
-            rib = self._rib_snapshot(pin=True)
+            rib = None
             try:
+                rib = self._rib_snapshot(pin=True)
                 if snap is None:  # conflicting templates: ordered path
                     flows = self._enrich_datagrams(
                         dg, streaming=False, rib=rib
@@ -1379,9 +1378,11 @@ class Daemon:
             files = self._live_spool_files()
             comp = self._compacted_flows()
             snap = self._store_sync(files, pin=held is not None)
+        if held is not None and snap is not None:
+            held.append(snap)  # before the RIB sync, which may raise
         rib = self._rib_snapshot(pin=held is not None)
-        if held is not None:
-            held.extend(s for s in (snap, rib) if s is not None)
+        if held is not None and rib is not None:
+            held.append(rib)
         live = self._datagrams(files)
         self._forward_templates(live)
         if snap is None:
@@ -1627,8 +1628,8 @@ class Daemon:
         ``rib`` is the lookup RIB: the batch path passes its RIB
         snapshot (:meth:`_rib_snapshot`); None reads the live RIB
         (:meth:`_live_rib`), as streaming plans do. Every LPM join
-        probes exactly ``rib.masklens``, so no lookup runs its own
-        masklen discovery collect."""
+        probes exactly ``rib.masklens``, so with a snapshot no lookup
+        runs its own masklen discovery collect."""
         from pmacct_spark.operators.lpm import lpm_join
 
         amap = self._agent_map_entries()

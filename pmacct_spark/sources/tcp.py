@@ -305,6 +305,32 @@ class BgpSpeaker:
         return _BGP_MARKER + ln.to_bytes(2, "big") + b"\x01" + body
 
 
+# Where a message's length (offset, size) and type sit
+_HEADERS = {"bgp": (16, 2, 18), "bmp": (1, 4, 5)}
+
+
+def changes_rib(framing: str, payload: bytes) -> bool:
+    """Whether a complete-message ``payload`` holds a message type the
+    RIB reads (``streaming.bmp.RIB_MSG_TYPES``; always True for
+    framings that carry no RIB)."""
+    from pmacct_spark.streaming.bmp import RIB_MSG_TYPES
+
+    if framing not in _HEADERS:
+        return True
+    len_at, len_size, type_at = _HEADERS[framing]
+    rib = RIB_MSG_TYPES[framing]
+    off = 0
+    while off + type_at < len(payload):
+        if payload[off + type_at] in rib:
+            return True
+        at = off + len_at
+        mlen = int.from_bytes(payload[at : at + len_size], "big")
+        if mlen <= type_at:
+            return True  # not a framed message: assume it matters
+        off += mlen
+    return False
+
+
 _FRAMERS = {
     "bgp": complete_prefix_bgp,
     "bmp": complete_prefix_bmp,
@@ -439,6 +465,12 @@ class TcpSpool:
         # the max epoch per peer (reference src/bgp/bgp.c session
         # teardown clears the peer's RIB)
         self._epochs: dict[str, int] = {}
+        # spool files holding session plumbing only (keepalives, BMP
+        # stats): rib_files() leaves them out. Per peer, the newest
+        # epoch spooled so far: a session's first file always counts,
+        # since its new epoch replaces the older session in every read
+        self._plumbing: set[str] = set()
+        self._rib_epochs: dict[str, int] = {}
         self.messages_spooled = 0
         # acknowledged-flush handshake: flush() bumps the generation,
         # each session thread emits its prefix then records the gen
@@ -755,11 +787,18 @@ class TcpSpool:
 
         from pmacct_spark.sources.spoolio import write_spool_file
 
+        rib = changes_rib(self.framing, payload)
         with self._lock:
             seq, nfile = self._seq, self._nfile
             self._seq += 1
             self._nfile += 1
             self.messages_spooled += 1
+            if epoch > self._rib_epochs.get(peer, 0):
+                self._rib_epochs[peer] = epoch
+            elif not rib:
+                # recorded before the rename: rib_files() never lists
+                # this file without knowing it is plumbing
+                self._plumbing.add(f"s{nfile:08d}.parquet")
         table = pa.table(
             {
                 "exporter_ip": [peer],
@@ -809,6 +848,16 @@ class TcpSpool:
         import glob
 
         return sorted(glob.glob(os.path.join(self.spool_dir, "*.parquet")))
+
+    def rib_files(self) -> list[str]:
+        """The subset of :meth:`files` that can change the RIB: files
+        this spool wrote holding only session plumbing (a live peer's
+        KEEPALIVEs, BMP Stats Reports) are left out, unless they open
+        a new session epoch. Files it did not write all count."""
+        files = self.files()  # list first: see _emit
+        with self._lock:
+            plumbing = set(self._plumbing)
+        return [f for f in files if os.path.basename(f) not in plumbing]
 
     def batch(self, spark, files: list[str] | None = None):
         """The spooled messages of ``files`` (default: the whole spool

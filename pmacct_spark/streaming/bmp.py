@@ -1128,6 +1128,16 @@ def encode_bmp_streams(rib: DataFrame, peer_as: int = 64500) -> DataFrame:
     return rib.groupBy("peer_ip").applyInPandas(pack, schema)
 
 
+# The message types the RIB is built from, per session framing: BGP
+# OPEN (ADD-PATH capabilities), UPDATE and NOTIFICATION (the peer-down
+# purge); BMP Route Monitoring, Peer Down and Peer Up (capabilities).
+# Neither rib_state nor the capability passes read the rest (BGP
+# KEEPALIVE and ROUTE-REFRESH, BMP Stats Report, Initiation,
+# Termination and Route Mirroring), so TcpSpool.rib_files leaves out
+# spool files holding only those.
+RIB_MSG_TYPES = {"bgp": (1, 2, 3), "bmp": (0, 2, 3)}
+
+
 def rib_state(updates: DataFrame, peer_down: bool = True) -> DataFrame:
     """Compact a decoded update stream into current RIB state: the
     latest message per (exporter, peer, rd, prefix) wins; withdrawals

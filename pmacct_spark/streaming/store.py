@@ -23,7 +23,9 @@ exporter-id join and the learned sampling rates.
 
 :class:`RibStore` holds the lookup RIB (``Daemon.rib()``'s rows)
 ``stage()``d, with its sorted mask lengths, and rebuilds it only when
-the list of live BGP/BMP spool files changes.
+the list of live BGP/BMP spool files that can change the RIB changes
+(``TcpSpool.rib_files``: files holding only a live peer's keepalives
+or BMP stats reports do not).
 
 Both stores release what they ``stage()`` by one rule (:class:`_Retention`):
 through ``operators.staging.release``, never while a pinned snapshot
@@ -304,9 +306,10 @@ class _Rib:
 class RibSnapshot:
     """A lookup RIB as enrichment reads it: ``df`` (one row per peer
     and prefix) and ``masklens``, the mask lengths every LPM join over
-    it probes, longest first. A pinned snapshot keeps its staged rows
-    until :meth:`release`; a snapshot built without a store (the
-    streaming plans' live RIB) has nothing to release."""
+    it probes, longest first (None: each join discovers them). A
+    pinned snapshot keeps its staged rows until :meth:`release`; a
+    snapshot built without a store (the streaming plans' live RIB) has
+    nothing to release."""
 
     def __init__(self, df: DataFrame, masklens: list, store=None, entry=None):
         self.df = df
@@ -384,7 +387,9 @@ def _rib_change(old: _Rib | None, files: tuple) -> str:
     if old is None:
         return "first build"
     new = sum(len(set(n) - set(o)) for o, n in zip(old.files, files))
-    return f"{new} new spool files" if new else "spool files changed"
+    if not new:
+        return "spool files changed"
+    return f"{new} new RIB-changing spool files"
 
 
 def _canon(templates: dict) -> tuple:

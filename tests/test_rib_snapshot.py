@@ -10,15 +10,23 @@ import functools
 import itertools
 import logging
 import os
+import socket
 import sys
 import threading
 import time
 
 import pyarrow as pa
+import pytest
 
-from pmacct_spark.daemon import Daemon
+from pmacct_spark.daemon import Daemon, _ReplanLoop
 from pmacct_spark.sources.spoolio import write_spool_file
-from pmacct_spark.streaming.bmp import encode_bgp_update
+from pmacct_spark.sources.tcp import TcpSpool
+from pmacct_spark.streaming.bmp import (
+    _bmp_frame,
+    encode_bgp_open,
+    encode_bgp_update,
+    encode_bmp_peer_up,
+)
 from pmacct_spark.streaming.store import RibStore
 from tests.test_streaming import _v5_datagram
 
@@ -62,9 +70,11 @@ def _bgp(d: Daemon, name: str, *msgs: bytes) -> None:
     )
 
 
-def _flows(d: Daemon, name: str, nbytes: tuple = (100, 200)) -> None:
-    """One flow spool file: a v5 datagram from EXPORTER, every record
-    towards DST."""
+def _flows(
+    d: Daemon, name: str, nbytes: tuple = (100, 200), exporter: str = EXPORTER
+) -> None:
+    """One flow spool file: a v5 datagram from ``exporter``, every
+    record towards DST."""
     recs = [
         {"src": 0x0A000001 + i, "dst": DST, "pkts": 1, "bytes": b,
          "sport": 1, "dport": 2}
@@ -75,7 +85,7 @@ def _flows(d: Daemon, name: str, nbytes: tuple = (100, 200)) -> None:
         f"{name}.parquet",
         pa.table(
             {
-                "exporter_ip": pa.array([EXPORTER], pa.string()),
+                "exporter_ip": pa.array([exporter], pa.string()),
                 "seqno": pa.array([1], pa.int64()),
                 "payload": pa.array([_v5_datagram(1, recs)], pa.binary()),
             }
@@ -197,6 +207,129 @@ def test_route_changes_show_up_in_the_next_drain(spark, tmp_path):
         assert _paths(d) == {"65001": 300}
         _bgp(d, "r4", _withdraw(0x0B000000, 8))
         assert _paths(d) == {"": 300}
+    finally:
+        d.stop()
+
+
+KEEPALIVE = b"\xff" * 16 + (19).to_bytes(2, "big") + b"\x04"
+
+
+def _spooled(spool: TcpSpool, n: int) -> None:
+    """Wait until ``spool`` has written ``n`` files."""
+    t0 = time.monotonic()
+    while spool.messages_spooled < n and time.monotonic() - t0 < 15:
+        time.sleep(0.05)
+    assert spool.messages_spooled == n
+
+
+def test_live_peer_keepalives_reuse_the_rib(spark, tmp_path, monkeypatch):
+    """An established peer keeps its session open and sends KEEPALIVEs,
+    each spooled as its own file. Drains between them reuse the RIB
+    snapshot; the next UPDATE rebuilds it."""
+    import pmacct_spark.streaming.bmp as bmp
+
+    calls = _Calls(monkeypatch, bmp, ("decode_bgp", "learn_bgp_caps"))
+    d = _daemon(spark, tmp_path)
+    peer = socket.create_connection(("127.0.0.1", d.bgp_port))
+    try:
+        peer.sendall(
+            encode_bgp_open(asn=65000)
+            + encode_bgp_update(0x0B000000, 8, "65000 65100")
+        )
+        _spooled(d.bgp_spool, 1)
+        _flows(d, "f1", exporter="127.0.0.1")
+        assert _paths(d) == {"65000 65100": 300}
+        assert calls.take() == {"decode_bgp": 1, "learn_bgp_caps": 1}
+        for n in range(2, 5):
+            peer.sendall(KEEPALIVE)
+            _spooled(d.bgp_spool, n)
+            assert _paths(d) == {"65000 65100": 300}
+            assert calls.take() == {"decode_bgp": 0, "learn_bgp_caps": 0}
+        assert len(d.bgp_spool.files()) == 4
+        assert len(d.bgp_spool.rib_files()) == 1
+        peer.sendall(KEEPALIVE + encode_bgp_update(0x0B000000, 8, "65000 65200"))
+        _spooled(d.bgp_spool, 5)
+        assert _paths(d) == {"65000 65200": 300}
+        assert calls.take() == {"decode_bgp": 1, "learn_bgp_caps": 1}
+    finally:
+        peer.close()
+        d.stop()
+
+
+def test_rib_files_leave_out_session_plumbing(tmp_path):
+    """A spool file counts for the RIB when it holds a message the RIB
+    reads (BGP OPEN/UPDATE/NOTIFICATION, BMP Route Monitoring/Peer
+    Up/Peer Down) or opens a new session epoch, whose first file
+    replaces the peer's older session even when it holds no route."""
+    notification = b"\xff" * 16 + (21).to_bytes(2, "big") + b"\x03\x06\x02"
+    spools = {
+        "bgp": [
+            (1, encode_bgp_open() + KEEPALIVE, True),
+            (1, KEEPALIVE + KEEPALIVE, False),
+            (1, KEEPALIVE + encode_bgp_update(0x0B000000, 8, "65001"), True),
+            (1, KEEPALIVE + notification, True),
+            (2, KEEPALIVE, True),  # a reconnect
+            (2, KEEPALIVE, False),
+        ],
+        "bmp": [
+            (1, _bmp_frame(4, "10.0.0.1", 65000), True),  # Initiation
+            (1, _bmp_frame(1, "10.0.0.1", 65000), False),  # Stats Report
+            (1, encode_bmp_peer_up("10.0.0.1"), True),
+            (1, _bmp_frame(0, "10.0.0.1", 65000), True),  # Route Monitoring
+            (1, _bmp_frame(2, "10.0.0.1", 65000), True),  # Peer Down
+            (1, _bmp_frame(5, "10.0.0.1", 65000), False),  # Termination
+        ],
+    }
+    for framing, emits in spools.items():
+        sp = TcpSpool(framing, spool_dir=str(tmp_path / framing))
+        os.makedirs(sp.spool_dir)
+        for epoch, payload, _ in emits:
+            sp._emit("192.0.2.1", payload, epoch)
+        names = [os.path.basename(f) for f in sp.rib_files()]
+        want = [f"s{i:08d}.parquet" for i, (*_, rib) in enumerate(emits) if rib]
+        assert names == want, framing
+        assert len(sp.files()) == len(emits)
+
+
+def _pins(d: Daemon) -> int:
+    """Pins held on the daemon's stored flow segments and RIBs."""
+    ribs = d._ribs._retired + ([d._ribs._rib] if d._ribs._rib else [])
+    segs = d._store._segments + d._store._retired
+    return sum(s.pins for s in ribs + segs)
+
+
+def test_failed_rib_build_leaves_no_pins(spark, tmp_path, monkeypatch):
+    """A replan tick or a compaction whose RIB build raises (a corrupt
+    session spool file, a Spark or disk error) drops the flow-store
+    pin it took before, so the stored segments stay releasable."""
+    fail: list = []
+    orig = RibStore._build
+
+    def flaky(self, files, build, old):
+        if fail:
+            raise fail.pop()
+        return orig(self, files, build, old)
+
+    monkeypatch.setattr(RibStore, "_build", flaky)
+    d = _daemon(spark, tmp_path)
+    tick = _ReplanLoop(d, "paths", d.channels["paths"], 0.2)._tick
+    try:
+        _bgp(d, "r1", encode_bgp_update(0x0B000000, 8, "65001"))
+        _flows(d, "f1")
+        for _ in range(2):
+            fail.append(OSError("corrupt spool file"))
+            with pytest.raises(OSError):
+                tick()
+            assert _pins(d) == 0
+        tick()
+        rows = spark.table("imt_paths").collect()
+        assert {r["as_path"]: r["bytes"] for r in rows} == {"65001": 300}
+        assert _pins(d) == 0
+        _bgp(d, "r2", encode_bgp_update(0x0B000000, 8, "65002"))
+        fail.append(OSError("corrupt spool file"))
+        with pytest.raises(OSError):
+            d.compact_spool(keep_files=0)
+        assert _pins(d) == 0
     finally:
         d.stop()
 
