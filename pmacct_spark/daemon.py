@@ -36,6 +36,8 @@ from pmacct_spark.sources.udp import UdpSpool
 from pmacct_spark.streaming.store import (
     FID,
     DecodedStore,
+    Lease,
+    Retention,
     RibSnapshot,
     RibStore,
 )
@@ -113,12 +115,27 @@ class Daemon:
     _compact_lock: threading.Lock = field(
         default_factory=threading.Lock, repr=False
     )
+    # the replan loops' spool-flush debounce, checked and set under
+    # its own lock by the N channel threads
+    _flush_lock: threading.Lock = field(
+        default_factory=threading.Lock, repr=False
+    )
+    _last_spool_flush: float = field(default=float("-inf"), repr=False)
+    # the one owner of the batch path's staged scratch: every drain,
+    # replan tick and compaction reads it under a lease
+    _scratch: Retention = field(default_factory=Retention, repr=False)
+    # compacted side table -> its scratch dir, made by the first append
+    _compacted: dict = field(default_factory=dict, repr=False)
     # each live spool file's decoded rows, decoded once (batch drains
     # and replan ticks read it; the streaming path does not)
-    _store: DecodedStore = field(default_factory=DecodedStore, repr=False)
+    _store: DecodedStore = field(init=False, repr=False)
     # the batch path's lookup RIB, staged once per BGP/BMP spool
     # generation (streaming plans read the live rib() instead)
-    _ribs: RibStore = field(default_factory=RibStore, repr=False)
+    _ribs: RibStore = field(init=False, repr=False)
+
+    def __post_init__(self):
+        self._store = DecodedStore(self._scratch)
+        self._ribs = RibStore(self._scratch)
 
     @classmethod
     def from_conf(
@@ -598,21 +615,13 @@ class Daemon:
         ):
             if sp is not None:
                 sp.stop()
-        from pmacct_spark.operators.staging import release
-
-        for st in getattr(self, "_drain_stages", []):
-            release(st)
-        self._drain_stages = []
         self._store.close()
         self._ribs.close()
+        self._scratch.close()
         import shutil as _sh
 
-        for d in (
-            getattr(self, "_compact_flows_dir", None),
-            getattr(self, "_compact_opts_dir", None),
-        ):
-            if d:
-                _sh.rmtree(d, ignore_errors=True)
+        for d in self._compacted.values():
+            _sh.rmtree(d, ignore_errors=True)
 
     def _ptype_by_name(self) -> dict:
         return dict(
@@ -725,17 +734,16 @@ class Daemon:
             for sp in (self.bgp_spool, self.bmp_spool)
         )
 
-    def _rib_snapshot(self, pin: bool = False) -> RibSnapshot | None:
+    def _rib_snapshot(self, lease: Lease) -> RibSnapshot | None:
         """The batch path's lookup RIB (drains, replan ticks,
-        compaction): ``rib()`` of exactly the live session spool files,
-        staged with its mask lengths and rebuilt only when that file
-        list changes (``streaming/store.RibStore``). None without a
-        BGP/BMP daemon. ``pin`` keeps it readable until its
-        ``release()``."""
+        compaction), read under ``lease``: ``rib()`` of exactly the live
+        session spool files, staged with its mask lengths and rebuilt
+        only when that file list changes (``streaming/store.RibStore``).
+        None without a BGP/BMP daemon."""
         if self.bgp_spool is None and self.bmp_spool is None:
             return None
         return self._ribs.sync(
-            self._rib_files, lambda files: self.rib(files=files), pin
+            self._rib_files, lambda files: self.rib(files=files), lease
         )
 
     def _live_rib(self, streaming: bool) -> RibSnapshot:
@@ -789,17 +797,20 @@ class Daemon:
             return self.spark.createDataFrame([], DATAGRAM_DDL)
         return self.spark.read.schema(DATAGRAM_DDL).parquet(*files)
 
-    def _compact_dirs(self) -> tuple[str, str]:
-        if not hasattr(self, "_compact_flows_dir"):
+    def _compact_append(self, table: str, df: DataFrame) -> None:
+        """Append ``df`` to the compacted side table ``table`` ("flows",
+        "options" or "counters"), a scratch dir stop() removes."""
+        if table not in self._compacted:
             import tempfile as _tmp
 
-            self._compact_flows_dir = _tmp.mkdtemp(prefix="pmacct_compact_fl_")
-            self._compact_opts_dir = _tmp.mkdtemp(prefix="pmacct_compact_op_")
-            self._compact_ctrs_dir = _tmp.mkdtemp(prefix="pmacct_compact_ct_")
-            self._n_compacted_flow_files = 0
-            self._n_compacted_opt_files = 0
-            self._n_compacted_ctr_files = 0
-        return self._compact_flows_dir, self._compact_opts_dir
+            self._compacted[table] = _tmp.mkdtemp(prefix=f"pmacct_compact_{table}_")
+        df.write.mode("append").parquet(self._compacted[table])
+
+    def _compacted_table(self, table: str) -> DataFrame | None:
+        """The compacted side table ``table``; None before the first
+        compaction wrote it."""
+        d = self._compacted.get(table)
+        return None if d is None else self.spark.read.parquet(d)
 
     def compact_spool(self, keep_files: int = 4) -> int:
         """Retire all but the newest ``keep_files`` live spool files:
@@ -811,20 +822,17 @@ class Daemon:
             victims = live[:-keep_files] if keep_files else live
             if not victims:
                 return 0
-            flows_dir, opts_dir = self._compact_dirs()
             dg = self._datagrams(victims)
-            snap = self._store_sync(live, pin=True)
-            rib = None
-            try:
-                rib = self._rib_snapshot(pin=True)
+            with self._scratch.lease(pin=True) as lease:
+                snap = self._store_sync(live, lease)
+                rib = self._rib_snapshot(lease)
                 if snap is None:  # conflicting templates: ordered path
                     flows = self._enrich_datagrams(
                         dg, streaming=False, rib=rib
                     )
                 else:
                     flows = self._enrich_snapshot(snap, dg, victims, rib)
-                flows.write.mode("append").parquet(flows_dir)
-                self._n_compacted_flow_files += 1
+                self._compact_append("flows", flows)
                 if self.flavor == "netflow":
                     if snap is None:
                         from pmacct_spark.streaming.decode import (
@@ -836,12 +844,7 @@ class Daemon:
                         )
                     else:
                         opts = snap.options(victims)
-                    opts.write.mode("append").parquet(opts_dir)
-                    self._n_compacted_opt_files += 1
-            finally:
-                for s in (snap, rib):
-                    if s is not None:
-                        s.release()
+                    self._compact_append("options", opts)
             if self.flavor == "sflow":
                 # counter samples ride the same datagrams as the flow
                 # samples: without this, retiring a spool file would
@@ -852,9 +855,7 @@ class Daemon:
                     decode_sflow_counters,
                 )
 
-                ctrs = decode_sflow_counters(dg)
-                ctrs.write.mode("append").parquet(self._compact_ctrs_dir)
-                self._n_compacted_ctr_files += 1
+                self._compact_append("counters", decode_sflow_counters(dg))
             retired = getattr(self, "_retired_files", set())
             retired.update(victims)
             self._retired_files = retired
@@ -872,21 +873,6 @@ class Daemon:
             return 0
         return self.compact_spool()
 
-    def _compacted_flows(self) -> DataFrame | None:
-        if not getattr(self, "_n_compacted_flow_files", 0):
-            return None
-        return self.spark.read.parquet(self._compact_flows_dir)
-
-    def _compacted_options(self) -> DataFrame | None:
-        if not getattr(self, "_n_compacted_opt_files", 0):
-            return None
-        return self.spark.read.parquet(self._compact_opts_dir)
-
-    def _compacted_counters(self) -> DataFrame | None:
-        if not getattr(self, "_n_compacted_ctr_files", 0):
-            return None
-        return self.spark.read.parquet(self._compact_ctrs_dir)
-
     def _sflow_counters(self) -> DataFrame:
         """Full counter-sample history: live spool tail decoded fresh,
         unioned with counters preserved at compaction time. Snapshot
@@ -896,7 +882,7 @@ class Daemon:
 
         with self._compact_lock:
             live = self._spool_batch()
-            comp = self._compacted_counters()
+            comp = self._compacted_table("counters")
         ctrs = decode_sflow_counters(live)
         if comp is not None:
             ctrs = ctrs.unionByName(comp, allowMissingColumns=True)
@@ -1216,12 +1202,12 @@ class Daemon:
             .drop("__sock", "__exp_id")
         )
 
-    def _store_sync(self, files: list[str], pin: bool = False):
+    def _store_sync(self, files: list[str], lease: Lease):
         """Sync the decoded-flow store with ``files`` (the live spool)
-        and return its snapshot, or None when the batch path must take
-        the whole-spool decode instead: an empty spool, a flavor the
-        store does not hold, or conflicting template definitions.
-        Callers hold ``_compact_lock``."""
+        under ``lease`` and return its snapshot, or None when the batch
+        path must take the whole-spool decode instead: an empty spool,
+        a flavor the store does not hold, or conflicting template
+        definitions. Callers hold ``_compact_lock``."""
         if not files or self.flavor not in ("netflow", "sflow"):
             return None
         allow = self._allow_entries()
@@ -1240,7 +1226,7 @@ class Daemon:
             None if sflow else self._templates_seed(),
             None if sflow else self._learn_spool_files,
             self._decode_spool_files,
-            pin=pin,
+            lease,
         )
 
     def _tagged_datagrams(self, tags: dict) -> DataFrame:
@@ -1359,11 +1345,10 @@ class Daemon:
             memo = self._exporter_ids_memo = (key, found)
         return memo[1]
 
-    def _decoded(self, streaming: bool, held: list | None = None) -> DataFrame:
-        """The flow frame every channel aggregates. ``held`` (replan
-        ticks) pins the store snapshot and the RIB snapshot the frame
-        reads; the caller releases the snapshots it collects there once
-        it has materialized its result."""
+    def _decoded(self, streaming: bool, lease: Lease | None = None) -> DataFrame:
+        """The flow frame every channel aggregates. The batch frame
+        reads the stores, and the scratch its enrichment stages, under
+        the caller's ``lease``."""
         if streaming:
             return self._enrich_datagrams(
                 self.spool.stream(self.spark), streaming=True
@@ -1376,13 +1361,9 @@ class Daemon:
         # that file's flows for one drain
         with self._compact_lock:
             files = self._live_spool_files()
-            comp = self._compacted_flows()
-            snap = self._store_sync(files, pin=held is not None)
-        if held is not None and snap is not None:
-            held.append(snap)  # before the RIB sync, which may raise
-        rib = self._rib_snapshot(pin=held is not None)
-        if held is not None and rib is not None:
-            held.append(rib)
+            comp = self._compacted_table("flows")
+            snap = self._store_sync(files, lease)
+        rib = self._rib_snapshot(lease)
         live = self._datagrams(files)
         self._forward_templates(live)
         if snap is None:
@@ -1594,25 +1575,6 @@ class Daemon:
                     )
         return self._agent_map_cache
 
-    def _note_lpm_scratch(self, df: DataFrame) -> None:
-        """Bound the staged per-masklen dims the follow_* chains leave
-        behind (lpm.py dim_cache): each replan tick may stage fresh
-        dims, and the returned plan reads them lazily — retain two
-        generations (the _drain_stages pattern) so the previous tick's
-        results stay drainable, release anything older (ADVICE r13:
-        the daemon leaked one dir per masklen per tick)."""
-        paths = getattr(df, "lpm_stage_dirs", [])
-        if not paths:
-            return
-        from pmacct_spark.operators.staging import release
-
-        gens = getattr(self, "_lpm_scratch_gens", [])
-        gens.append(list(paths))
-        while len(gens) > 2:
-            for p in gens.pop(0):
-                release(p)
-        self._lpm_scratch_gens = gens
-
     def _bgp_enrich(
         self,
         df: DataFrame,
@@ -1694,7 +1656,8 @@ class Daemon:
                 df, fd_rib, "ip_dst_i", "peer_ip_src", fdef,
                 masklens=masklens,
             )
-            self._note_lpm_scratch(df)
+            if snap.lease is not None:
+                snap.lease.hold(df.lpm_stage_dirs)
             lookup_peer = "__fd_peer"
         out = lpm_join(
             df, rib, "ip_dst_i", attrs, default=defaults,
@@ -1705,7 +1668,8 @@ class Daemon:
         fnh = self.conf.get("bgp_follow_nexthop")
         if fnh and not streaming:
             # bgp_follow_nexthop (+_external) — recursive next-hop
-            # resolution for peer_dst_ip (bgp_follow_nexthop_lookup
+            # resolution for peer_dst_ip, into the registry's column
+            # peer_ip_dst (bgp_follow_nexthop_lookup
             # src/bgp/bgp_lookup.c:480; CONFIG-KEYS:3040-3055). Live
             # serving rides the daemon's per-tick replan (the dim-side
             # depth/masklen probes re-run each tick), so the streaming
@@ -1727,10 +1691,11 @@ class Daemon:
                 out, nh_rib, "ip_dst_i", "peer_ip_src", prefixes,
                 out_col="__fnh_follow", external_col="__fnh_ext",
             )
-            self._note_lpm_scratch(out)
+            if snap.lease is not None:
+                snap.lease.hold(out.lpm_stage_dirs)
             ext = self.conf.getbool("bgp_follow_nexthop_external")
             out = out.withColumn(
-                "peer_dst_ip",
+                "peer_ip_dst",
                 F.col("__fnh_ext" if ext else "__fnh_follow"),
             ).drop("__fnh_follow", "__fnh_ext")
         radius = self.conf.get("bgp_aspath_radius")
@@ -2158,7 +2123,7 @@ class Daemon:
                 opts = decode_options(
                     self._spool_batch().select("exporter_ip", "payload")
                 )
-            comp_opts = self._compacted_options()
+            comp_opts = self._compacted_table("options")
             if comp_opts is not None:
                 # expositions whose datagrams were compacted away must
                 # still rate new flows (latest per exporter wins below)
@@ -2316,23 +2281,16 @@ class Daemon:
                 if batch_df is None:
                     from pmacct_spark.operators.staging import (
                         plan_recomputes,
-                        release,
                         stage,
                     )
 
-                    batch_df = self._decoded(False)
+                    # one drain: what it reads stays readable for the
+                    # caller's lazy results until two more drains start
+                    lease = self._scratch.lease()
+                    batch_df = self._decoded(False, lease)
                     if n_batch > 1 and plan_recomputes(batch_df):
-                        # bound the per-drain staged copies WITHOUT
-                        # invalidating handles the caller still holds:
-                        # the previous drain's results stay readable
-                        # (they lazily read their stage) until two
-                        # more drains happen; stop() releases the rest
                         batch_df = stage(batch_df)
-                        stages = getattr(self, "_drain_stages", [])
-                        stages.append(batch_df)
-                        while len(stages) > 2:
-                            release(stages.pop(0))
-                        self._drain_stages = stages
+                        lease.hold([batch_df])
                 out = build_aggregation(batch_df, cfg)
             ptype = ptype_by_name.get(name, "memory")
             wid = self.conf.get("writer_id_string", name)
@@ -3016,7 +2974,9 @@ class Daemon:
                 # config error
                 from pmacct_spark.pipeline import build_aggregation
 
-                build_aggregation(self._decoded(False), cfg)
+                # a pinned lease: the checked plan is never collected
+                with self._scratch.lease(pin=True) as lease:
+                    build_aggregation(self._decoded(False, lease), cfg)
                 plans[name] = _ReplanLoop(self, name, cfg, triggers[name])
             else:
                 plans[name] = stream_aggregation(
@@ -3081,9 +3041,11 @@ class _ReplanLoop:
         # flush serves every loop in the same interval instead of
         # 3 x N flush round-trips per trigger
         now = _t.monotonic()
-        last = getattr(d, "_last_spool_flush", 0.0)
-        if now - last >= self.trigger_secs / 2:
-            d._last_spool_flush = now
+        with d._flush_lock:
+            due = now - d._last_spool_flush >= self.trigger_secs / 2
+            if due:
+                d._last_spool_flush = now
+        if due:
             d.spool.flush()
             for sp in (d.bgp_spool, d.bmp_spool):
                 if sp is not None:
@@ -3094,13 +3056,9 @@ class _ReplanLoop:
             # and store union — stays flat with uptime (the reference
             # rotates its memory tables the same way)
             d.maybe_compact_spool()
-        held: list = []  # store snapshots this tick's plan reads
-        try:
-            df = build_aggregation(d._decoded(False, held), self.cfg)
+        with d._scratch.lease(pin=True) as lease:
+            df = build_aggregation(d._decoded(False, lease), self.cfg)
             rows = df.collect()
-        finally:
-            for snap in held:
-                snap.release()
         d.spark.createDataFrame(rows, df.schema).createOrReplaceTempView(
             f"imt_{self.name}"
         )

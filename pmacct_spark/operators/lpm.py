@@ -112,13 +112,6 @@ def lpm_join(
                 from pmacct_spark.operators.staging import stage
 
                 dim = stage(dim)
-                # surface the scratch dirs so chain owners (follow_*)
-                # can hand them to a long-running caller for release —
-                # a daemon replanning every tick would otherwise leak
-                # one staged dir per masklen per tick (ADVICE r13)
-                dim_cache.setdefault("__stage_paths", []).append(
-                    dim.stage_path
-                )
                 dim_cache[m] = dim
         cond = F.expr(f"{ip_col} DIV {div}") == F.col(f"__net_{m}")
         for fcol, dcol in extra.items():
@@ -132,6 +125,14 @@ def lpm_join(
         out = out.withColumn(dst, expr)
         out = out.drop(*[f"__{dst}_{m}" for m in masklens])
     return out
+
+
+def _stage_dirs(dim_cache: dict | None) -> list[str]:
+    """The scratch dirs of a chain's staged dims, which the returned
+    plan still reads: the caller owns their release once the result is
+    drained (a daemon replanning every tick would otherwise leak one
+    staged dir per masklen per tick)."""
+    return [dim.stage_path for dim in (dim_cache or {}).values()]
 
 
 def follow_nexthop_join(
@@ -314,11 +315,7 @@ def follow_nexthop_join(
         "__fnh_sa", "__fnh_saved", "__fnh_saved_ext", "__fnh_first",
         "__fnh_self",
     )
-    # scratch dirs the returned plan still reads — the caller owns
-    # their release once the result is drained (ADVICE r13)
-    out.lpm_stage_dirs = (
-        dim_cache.get("__stage_paths", []) if dim_cache else []
-    )
+    out.lpm_stage_dirs = _stage_dirs(dim_cache)
     return out
 
 
@@ -409,9 +406,7 @@ def follow_default_join(
     out = out.withColumn(
         out_col, F.coalesce(F.col("__fd_final"), F.col(peer_col))
     ).drop("__fd_sa", "__fd_final")
-    out.lpm_stage_dirs = (
-        dim_cache.get("__stage_paths", []) if dim_cache else []
-    )
+    out.lpm_stage_dirs = _stage_dirs(dim_cache)
     return out
 
 

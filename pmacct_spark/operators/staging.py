@@ -29,16 +29,28 @@ is enough.
 from __future__ import annotations
 
 import atexit
+import logging
 import shutil
 import tempfile
 import uuid
 
 from pyspark.sql import DataFrame
 
+log = logging.getLogger("pmacct_spark")
+
 STAGING_ROOT_CONF = "spark.pmacct.stagingRoot"
 
 _STAGING_ROOT: str | None = None  # explicit override via set_staging_root
-_STAGE_DIRS: list[str] = []
+_STAGE_DIRS: list[str] = []  # every dir the exit hook removes
+_LOGGED: set = set()  # fallbacks already logged
+
+
+def _log_once(kind: str, msg: str, *args) -> None:
+    """Log the first fallback of each ``kind``; later ones of that kind
+    are not logged."""
+    if kind not in _LOGGED:
+        _LOGGED.add(kind)
+        log.warning(msg, *args)
 
 
 def set_staging_root(path: str | None) -> None:
@@ -77,8 +89,8 @@ def _rm(path: str) -> None:
             spark._jsc.hadoopConfiguration()
         )
         fs.delete(jpath, True)
-    except Exception:  # pragma: no cover - best-effort cleanup
-        pass
+    except Exception as exc:  # best-effort cleanup
+        _log_once("rm", "staging: could not delete %s: %r", path, exc)
 
 
 def _cleanup() -> None:  # pragma: no cover - exit hook
@@ -87,6 +99,12 @@ def _cleanup() -> None:  # pragma: no cover - exit hook
 
 
 atexit.register(_cleanup)
+
+
+def retain(path: str) -> None:
+    """Keep a scratch dir that returned DataFrames read until
+    interpreter exit, then remove it with the staged dirs."""
+    _STAGE_DIRS.append(path)
 
 
 def release(df_or_path: DataFrame | str) -> None:
@@ -173,7 +191,8 @@ def stage_if_heavy(df: DataFrame, source: DataFrame) -> DataFrame:
             )
         )
         heavy = plan_size_bytes(source) >= threshold
-    except Exception:  # pragma: no cover - stats unavailable: be safe
+    except Exception as exc:  # stats unavailable: be safe
+        _log_once("stats", "staging: no size estimate, staging: %r", exc)
         heavy = True
     return stage(df) if heavy else df
 

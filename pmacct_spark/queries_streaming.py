@@ -18,9 +18,9 @@ from pmacct_spark.driver_queries import FLOWS_DUCK_CTE, register
 from pmacct_spark.operators.windows import duck_bucket_sql
 from pmacct_spark.operators import sketch as _sketch_mod
 from pmacct_spark.config import History
+from pmacct_spark.operators.staging import retain
 from pmacct_spark.streaming.jobs import (
     flows_stream,
-    retain_scratch,
     run_to_memory,
     scoped_stream_partitions,
     stream_aggregation,
@@ -1242,7 +1242,7 @@ def stream_dedup_minhash(spark, sf_dir):
     # the per-batch MERGE already materialized these as parquet — read
     # them in place and retain the scratch dir (re-staging was a
     # redundant write+read on every run)
-    retain_scratch(d)
+    retain(d)
     owners = spark.read.parquet(versions[-1])
     all_bands = spark.read.parquet(*band_paths)
     # no broadcast hint: the owner table grows with the corpus's
@@ -1342,9 +1342,9 @@ def stream_ann_ivf_ingest(spark, sf_dir):
         )
         q.awaitTermination()
     # read the final posting-table version in place (see
-    # retain_scratch: re-staging an already-materialized parquet was a
+    # retain: re-staging an already-materialized parquet was a
     # redundant write+read per run)
-    retain_scratch(d)
+    retain(d)
     items_idx = spark.read.parquet(versions[-1])
     return S.ivf_pq_query(
         items_idx, base, cents_df, cb, k=3, refine=3, nprobe=2
@@ -1433,9 +1433,9 @@ def stream_ann_ivf_delete(spark, sf_dir):
         )
         q.awaitTermination()
     # read the final posting-table version in place (see
-    # retain_scratch: re-staging an already-materialized parquet was a
+    # retain: re-staging an already-materialized parquet was a
     # redundant write+read per run)
-    retain_scratch(d)
+    retain(d)
     items_idx = spark.read.parquet(versions[-1])
     return S.ivf_pq_query(
         items_idx, base, cents_df, cb, k=3, refine=3, nprobe=2
@@ -1554,7 +1554,7 @@ def stream_dedup_phash(spark, sf_dir):
     # (the per-batch MERGE wrote them) — re-staging them through
     # operators/staging was a second write+read of the same rows, the
     # bulk of this query's former fixed cost over its oracle
-    retain_scratch(d)
+    retain(d)
     owners = spark.read.parquet(versions[-1])
     all_bands = spark.read.parquet(*band_paths)
     # no broadcast hint: the owner table grows with distinct band
@@ -1681,7 +1681,7 @@ def stream_bm25_index(spark, sf_dir):
             .start()
         )
         q.awaitTermination()
-    retain_scratch(d)
+    retain(d)
     postings = spark.read.parquet(post_v[-1])
     stats = spark.read.parquet(dl_v[-1]).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pmacct_spark.config import PluginConfig
+from pmacct_spark.operators.staging import retain
 from pmacct_spark.sources.tables import nano_ts_fields
 from pmacct_spark.views.flows import flows_select_exprs
 
@@ -122,30 +123,6 @@ class scoped_stream_partitions:
             self.spark.conf.set("spark.sql.shuffle.partitions", self.old)
         return False
 
-# scratch dirs whose parquet a RETURNED DataFrame still reads from:
-# kept for the process lifetime, removed at exit. Re-staging those
-# files through operators/staging just to free the dir early was a
-# measurable second write+read on every stateful streaming query.
-_RETAINED_SCRATCH: list = []
-
-
-def retain_scratch(d: str) -> None:
-    """Keep a bounded-replay scratch dir alive until process exit (the
-    caller returns a DataFrame whose lineage reads parquet inside it —
-    tmpfs-resident, a few hundred KB per query at bench scale)."""
-    import atexit
-    import shutil
-
-    if not _RETAINED_SCRATCH:
-        atexit.register(
-            lambda: [
-                shutil.rmtree(x, ignore_errors=True)
-                for x in _RETAINED_SCRATCH
-            ]
-        )
-    _RETAINED_SCRATCH.append(d)
-
-
 def flows_stream(spark, sf_dir: str, path: str | None = None) -> DataFrame:
     """The flows view as a STREAMING DataFrame (file source over the
     events parquet — the stand-in for the UDP/Kafka live feed)."""
@@ -164,10 +141,11 @@ def flows_stream(spark, sf_dir: str, path: str | None = None) -> DataFrame:
         # file, cached for the process lifetime — a fresh mkdtemp per
         # call leaked hundreds of scratch dirs over a long session,
         # and the dir must outlive any stream still reading it, so
-        # per-call cleanup isn't an option.
+        # per-call cleanup isn't an option: it goes at exit.
         d = _FLOWS_SCRATCH.get(os.path.abspath(p))
         if d is None or not os.path.isdir(d):
             d = scratch_dir("flows_stream_")
+            retain(d)
             os.symlink(os.path.abspath(p), os.path.join(d, os.path.basename(p)))
             _FLOWS_SCRATCH[os.path.abspath(p)] = d
         p = d

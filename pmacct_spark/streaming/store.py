@@ -1,13 +1,31 @@
-"""The daemon's batch-path stores: each flow spool file is decoded
-once, and the lookup RIB is built once per BGP/BMP spool generation.
+"""The daemon's scratch owner and its batch-path stores: each flow
+spool file is decoded once, and the lookup RIB is built once per
+BGP/BMP spool generation.
 
-A batch drain or replan tick syncs the store with the live spool
-files. Files the store has not seen are decoded once, together in one
-pass, into one ``stage()``d parquet segment. A segment holds each of
-its files' flow rows and options rows, stamped with a per-file id,
-and the store keeps each file's template definitions on the driver.
-Later drains union the stored segments and run no Python decode pass
-unless new files arrived.
+One :class:`Retention` per daemon owns every ``stage()``d frame the
+batch path leaves behind: the stores' segments and RIBs, a drain's
+``stage()`` barrier and the staged dims of the ``follow_*`` LPM
+chains. Every consumer takes a :class:`Lease` from it and registers
+what it reads:
+
+- a batch drain takes an unpinned lease, and counts as one drain;
+- a replan tick or a compaction takes a pinned lease and releases it
+  once, when its action completes.
+
+A frame is released, through ``operators.staging.release``, once its
+producer has retired it, no pinned lease reads it, and two more
+drains have started since the last unpinned drain that read it (the
+window that keeps a drain's lazy results readable). Daemon stop
+releases the rest, except what is still inside that window: that goes
+with the staging module's exit cleanup.
+
+A batch drain or replan tick syncs :class:`DecodedStore` with the live
+spool files. Files the store has not seen are decoded once, together
+in one pass, into one ``stage()``d parquet segment. A segment holds
+each of its files' flow rows and options rows, stamped with a per-file
+id, and the store keeps each file's template definitions on the
+driver. Later drains union the stored segments and run no Python
+decode pass unless new files arrived.
 
 A segment depends only on its files' bytes, the merged template set
 and the daemon conf (the decode key). Work that crosses files stays
@@ -26,14 +44,6 @@ exporter-id join and the learned sampling rates.
 the list of live BGP/BMP spool files that can change the RIB changes
 (``TcpSpool.rib_files``: files holding only a live peer's keepalives
 or BMP stats reports do not).
-
-Both stores release what they ``stage()`` by one rule (:class:`_Retention`):
-through ``operators.staging.release``, never while a pinned snapshot
-reads it, and never before two more unpinned drains have started since
-the last unpinned drain that read it (the window that keeps a drain's
-lazy results readable). Daemon stop releases the rest, except what is
-still inside that window: that goes with the staging module's exit
-cleanup.
 """
 
 from __future__ import annotations
@@ -55,27 +65,136 @@ FID = "__fid"  # spool-file id stamped on every stored row
 KIND = "__kind"  # 0: flow row, 1: options row
 
 
+class Lease:
+    """One consumer's claim on staged frames (see :class:`Retention`):
+    a batch drain (unpinned) or a replan tick or compaction (pinned,
+    until :meth:`release`; also on leaving a ``with`` block)."""
+
+    def __init__(self, owner: "Retention", drain: int | None):
+        self._owner = owner
+        self.drain = drain  # the unpinned drain's number; None: pinned
+        self._pinned: list = []  # ledger entries this lease pins
+
+    def read(self, staged) -> None:
+        """Register staged frames (DataFrames from ``stage()``, or
+        their paths) the consumer reads."""
+        self._owner._read(self, staged)
+
+    def hold(self, staged) -> None:
+        """Register scratch staged for this consumer alone: it is
+        released as soon as the lease no longer keeps it."""
+        self.read(staged)
+        self._owner.retire(staged)
+
+    def release(self) -> None:
+        """Drop the lease's pins: the consuming action has completed."""
+        self._owner._unpin(self)
+
+    def __enter__(self) -> "Lease":
+        return self
+
+    def __exit__(self, *exc) -> bool:
+        self.release()
+        return False
+
+
+@dataclass(eq=False)
+class _Held:
+    staged: object  # what ``release()`` gets: the staged frame or its path
+    pins: int = 0  # pinned leases reading it
+    last_drain: int | None = None  # last unpinned drain that read it
+    retired: bool = False  # its producer serves it to no new lease
+
+
+class Retention:
+    """The daemon's one scratch owner: a ledger of staged frames, the
+    drain counter and the lock both are read under. Thread-safe: N
+    replan channels, a compaction and a drain may lease at once."""
+
+    def __init__(self):
+        self._lock = threading.Lock()
+        self._held: dict = {}  # stage path -> _Held
+        self._drains = 0  # unpinned leases so far
+
+    def lease(self, pin: bool = False) -> Lease:
+        """A lease for one drain (``pin=False``: counts a drain) or one
+        tick or compaction (``pin=True``)."""
+        with self._lock:
+            if pin:
+                return Lease(self, None)
+            self._drains += 1
+            self._collect()
+            return Lease(self, self._drains)
+
+    def retire(self, staged) -> None:
+        """Their producer serves ``staged`` frames to no new lease:
+        release each once no lease keeps it."""
+        with self._lock:
+            for x in staged:
+                self._entry(x).retired = True
+            self._collect()
+
+    def close(self) -> None:
+        """Daemon stop: release every frame but those still read — by a
+        pinned lease, or by the lazy results of the last two drains,
+        which callers may collect after stop(). The staging module
+        removes those at interpreter exit."""
+        with self._lock:
+            for h in self._held.values():
+                h.retired = True
+            self._collect()
+            self._held = {}
+
+    def _read(self, lease: Lease, staged) -> None:
+        with self._lock:
+            for x in staged:
+                h = self._entry(x)
+                if lease.drain is None:
+                    h.pins += 1
+                    lease._pinned.append(h)
+                else:
+                    h.last_drain = lease.drain
+
+    def _unpin(self, lease: Lease) -> None:
+        with self._lock:
+            for h in lease._pinned:
+                h.pins -= 1
+            lease._pinned = []
+            self._collect()
+
+    def _entry(self, staged) -> _Held:
+        return self._held.setdefault(
+            getattr(staged, "stage_path", staged), _Held(staged)
+        )
+
+    def _collect(self) -> None:
+        from pmacct_spark.operators.staging import release
+
+        for path, h in list(self._held.items()):
+            if h.retired and not h.pins and (
+                h.last_drain is None or self._drains >= h.last_drain + 2
+            ):
+                del self._held[path]
+                release(h.staged)
+
+
 @dataclass(eq=False)
 class _Segment:
     df: DataFrame  # staged rows of every file in ``fids``
     fids: dict  # spool file -> id on its rows
     flow_cols: list
     opt_cols: list | None  # None: the flavor has no options rows
-    pins: int = 0  # pinned snapshots reading it
-    last_drain: int | None = None  # last unpinned drain that read it
 
 
 class Snapshot:
     """The store as one drain, tick or compaction reads it: the stored
-    rows of exactly the spool files it was synced with. A pinned
-    snapshot keeps its segments until :meth:`release`."""
+    rows of exactly the spool files it was synced with, kept readable
+    by the lease it was synced under."""
 
-    def __init__(self, store, segments, fids, templates, pinned):
-        self._store = store
+    def __init__(self, segments, fids, templates):
         self._segments = segments
         self.fids = fids  # spool file -> id, the snapshot's files
         self.templates = templates  # merged template defs of those files
-        self._pinned = pinned
 
     def _rows(self, kind: int, files) -> DataFrame | None:
         want = {self.fids[f] for f in (self.fids if files is None else files)}
@@ -110,60 +229,16 @@ class Snapshot:
             sorted(self.fids[f] for f in (self.fids if files is None else files))
         )
 
-    def release(self) -> None:
-        if self._pinned:
-            self._pinned = False
-            self._store._unpin(self._segments)
 
+class DecodedStore:
+    """Per-spool-file decoded rows for one daemon; ``owner`` releases
+    the segments it retires. Thread-safe: the update in :meth:`sync`
+    is single-flight under one lock, so N replan channels decode each
+    file once between them."""
 
-class _Retention:
-    """The release rule both stores share. An entry (anything with
-    ``df``, ``pins`` and ``last_drain``) a sync reads is either pinned
-    (replan ticks, compaction: until the snapshot's release) or marked
-    with the unpinned drain that read it. A retired entry is released
-    once it has no pins and two more unpinned drains have started."""
-
-    def __init__(self):
+    def __init__(self, owner: Retention):
+        self._owner = owner
         self._lock = threading.Lock()
-        self._retired: list = []
-        self._drains = 0  # unpinned syncs so far
-
-    def _read(self, entries, pin: bool) -> None:
-        """Mark ``entries`` as read by the current sync. Callers hold
-        the lock and counted the sync (``_drains``) first."""
-        for s in entries:
-            if pin:
-                s.pins += 1
-            else:
-                s.last_drain = self._drains
-
-    def _unpin(self, entries) -> None:
-        with self._lock:
-            for s in entries:
-                s.pins -= 1
-            self._collect()
-
-    def _collect(self) -> None:
-        from pmacct_spark.operators.staging import release
-
-        keep = []
-        for s in self._retired:
-            if s.pins or (
-                s.last_drain is not None and self._drains < s.last_drain + 2
-            ):
-                keep.append(s)
-            else:
-                release(s.df)
-        self._retired = keep
-
-
-class DecodedStore(_Retention):
-    """Per-spool-file decoded rows for one daemon. Thread-safe: the
-    update in :meth:`sync` is single-flight under one lock, so N replan
-    channels decode each file once between them."""
-
-    def __init__(self):
-        super().__init__()
         self._defs: dict = {}  # live spool file -> template defs (None: conflicting)
         self._segments: list[_Segment] = []
         self._key = None  # decode key the live segments were built under
@@ -177,10 +252,10 @@ class DecodedStore(_Retention):
         seed: dict | None,
         learn: Callable | None,
         decode: Callable,
-        pin: bool = False,
+        lease: Lease,
     ) -> Snapshot | None:
         """Bring the store up to ``files`` (the live spool files, oldest
-        first) and return a snapshot of them.
+        first) and return a snapshot of them, read under ``lease``.
 
         ``learn(files)`` returns ``{file: template defs}`` for new files
         (None for a file that redefines a template with another
@@ -192,8 +267,6 @@ class DecodedStore(_Retention):
         template definitions conflict: the caller then takes the
         whole-spool path."""
         with self._lock:
-            if not pin:
-                self._drains += 1
             live = set(files)
             self._defs = {f: d for f, d in self._defs.items() if f in live}
             new = [f for f in files if f not in self._defs]
@@ -203,7 +276,6 @@ class DecodedStore(_Retention):
                     self._defs[f] = learned.get(f, {})
             templates = self._merged(files)
             if templates is None:
-                self._collect()
                 return None
             seeded = {**(seed or {}), **templates}
             key = (conf_key, _canon(seeded))
@@ -214,7 +286,7 @@ class DecodedStore(_Retention):
                         + _change(self._key, key),
                         logging.INFO,
                     )
-                    self._retired.extend(self._segments)
+                    self._owner.retire([s.df for s in self._segments])
                     self._segments = []
                 self._key = key
             covered = {f for s in self._segments for f in s.fids}
@@ -222,26 +294,22 @@ class DecodedStore(_Retention):
             if todo:
                 self._segments.append(self._decode(todo, decode, seeded))
             reading = [s for s in self._segments if live & s.fids.keys()]
-            self._retired.extend(s for s in self._segments if s not in reading)
+            gone = [s.df for s in self._segments if s not in reading]
             self._segments = reading
-            self._read(reading, pin)
-            self._collect()
+            lease.read([s.df for s in reading])
+            if gone:
+                self._owner.retire(gone)
             return Snapshot(
-                self, list(reading),  # later syncs append to _segments
+                list(reading),  # later syncs append to _segments
                 {f: fid for s in reading for f, fid in s.fids.items() if f in live},
-                templates, pin,
+                templates,
             )
 
     def close(self) -> None:
-        """Daemon stop: release every segment but those still read — by
-        a pinned snapshot, or by the lazy results of the last two
-        drains, which callers may collect after stop(). The staging
-        module removes those at interpreter exit."""
+        """Daemon stop: retire every segment (see :meth:`Retention.close`)."""
         with self._lock:
-            self._retired.extend(self._segments)
+            self._owner.retire([s.df for s in self._segments])
             self._segments = []
-            self._collect()
-            self._retired = []
             self._defs, self._key = {}, None
 
     # -- internals ----------------------------------------------------
@@ -299,73 +367,57 @@ class _Rib:
     df: DataFrame  # staged lookup RIB
     files: tuple  # the spool files it was built from
     masklens: list  # its distinct mask lengths, longest first
-    pins: int = 0
-    last_drain: int | None = None
 
 
+@dataclass
 class RibSnapshot:
     """A lookup RIB as enrichment reads it: ``df`` (one row per peer
     and prefix) and ``masklens``, the mask lengths every LPM join over
-    it probes, longest first (None: each join discovers them). A
-    pinned snapshot keeps its staged rows until :meth:`release`; a
-    snapshot built without a store (the streaming plans' live RIB) has
-    nothing to release."""
+    it probes, longest first (None: each join discovers them).
+    ``lease`` is the lease the daemon's batch path read it under; the
+    ``follow_*`` chains register their staged dims with it. The live
+    RIB (streaming plans, direct enrichment calls) has none."""
 
-    def __init__(self, df: DataFrame, masklens: list, store=None, entry=None):
-        self.df = df
-        self.masklens = masklens
-        self._store = store
-        self._entry = entry
-
-    def release(self) -> None:
-        if self._store is not None:
-            store, self._store = self._store, None
-            store._unpin([self._entry])
+    df: DataFrame
+    masklens: list | None
+    lease: Lease | None = None
 
 
-class RibStore(_Retention):
+class RibStore:
     """The daemon's lookup RIB, built once per BGP/BMP spool
-    generation. Thread-safe: a rebuild is single-flight under the lock,
-    so N replan channels rebuild once between them."""
+    generation; ``owner`` releases the RIBs it retires. Thread-safe: a
+    rebuild is single-flight under one lock, so N replan channels
+    rebuild once between them."""
 
-    def __init__(self):
-        super().__init__()
+    def __init__(self, owner: Retention):
+        self._owner = owner
+        self._lock = threading.Lock()
         self._rib: _Rib | None = None
 
-    def sync(
-        self, listing: Callable, build: Callable, pin: bool = False
-    ) -> RibSnapshot:
-        """The lookup RIB of the live spool files. ``listing()`` returns
-        them, one sorted tuple per session spool; it runs under the
-        lock, so a sync never goes back to an older list than another
-        sync already built. ``build(files)`` returns the RIB rows of
-        exactly those files; it runs only when they differ from the
-        current snapshot's."""
+    def sync(self, listing: Callable, build: Callable, lease: Lease) -> RibSnapshot:
+        """The lookup RIB of the live spool files, read under ``lease``.
+        ``listing()`` returns them, one sorted tuple per session spool;
+        it runs under the lock, so a sync never goes back to an older
+        list than another sync already built. ``build(files)`` returns
+        the RIB rows of exactly those files; it runs only when they
+        differ from the current snapshot's."""
         with self._lock:
-            if not pin:
-                self._drains += 1
             files = listing()
             old = self._rib
             if old is None or old.files != files:
                 self._rib = self._build(files, build, old)
                 if old is not None:
-                    self._retired.append(old)
+                    self._owner.retire([old.df])
             rib = self._rib
-            self._read([rib], pin)
-            self._collect()
-            return RibSnapshot(
-                rib.df, rib.masklens, self if pin else None, rib
-            )
+            lease.read([rib.df])
+            return RibSnapshot(rib.df, rib.masklens, lease)
 
     def close(self) -> None:
-        """Daemon stop: release the RIB unless something still reads it
-        (see :meth:`DecodedStore.close`)."""
+        """Daemon stop: retire the RIB (see :meth:`Retention.close`)."""
         with self._lock:
             if self._rib is not None:
-                self._retired.append(self._rib)
+                self._owner.retire([self._rib.df])
                 self._rib = None
-            self._collect()
-            self._retired = []
 
     def _build(self, files, build, old) -> _Rib:
         from pmacct_spark.operators.staging import stage

@@ -1920,14 +1920,14 @@ def test_bgp_follow_nexthop_config_resolves_peer_dst_ip(spark):
 
     d = make("bgp_daemon: true\nbgp_follow_nexthop: 172.16.0.0/16\n")
     row = d._bgp_enrich(fl).collect()[0]
-    assert row["peer_dst_ip"] == "172.16.2.1"  # last in-set next-hop
+    assert row["peer_ip_dst"] == "172.16.2.1"  # last in-set next-hop
 
     d = make(
         "bgp_daemon: true\nbgp_follow_nexthop: 172.16.0.0/16\n"
         "bgp_follow_nexthop_external: true\n"
     )
     row = d._bgp_enrich(fl).collect()[0]
-    assert row["peer_dst_ip"] == "198.51.100.9"  # first out-of-set
+    assert row["peer_ip_dst"] == "198.51.100.9"  # first out-of-set
 
 
 def test_pre_tag_label_encode_as_map(spark, tmp_path):

@@ -98,6 +98,22 @@ class _Calls:
         return out
 
 
+def _count_stages(monkeypatch) -> list:
+    """Records every ``staging.stage`` call (the daemon and the store
+    look it up at call time)."""
+    from pmacct_spark.operators import staging
+
+    calls: list = []
+    orig = staging.stage
+
+    def counting(df):
+        calls.append(df)
+        return orig(df)
+
+    monkeypatch.setattr(staging, "stage", counting)
+    return calls
+
+
 def test_store_late_template_counts_earlier_records(spark, tmp_path, caplog):
     """A data file that sorts before its template's file: the first
     drain cannot decode it, and the drain after the template file
@@ -132,6 +148,7 @@ def test_store_decodes_each_file_once(spark, tmp_path, monkeypatch):
     a drain after one new file decodes only that file. Two batch
     channels read the bare store, so no per-drain stage is written."""
     calls = _Calls(monkeypatch)
+    stages = _count_stages(monkeypatch)
     d = Daemon.from_conf(spark, CONF, spool_dir=str(tmp_path / "spool"))
     files: list[set] = []
     orig = d._decode_spool_files
@@ -158,7 +175,7 @@ def test_store_decodes_each_file_once(spark, tmp_path, monkeypatch):
         assert _total_bytes(d) == _bytes(recs[0] + recs[1] + recs[2])
         assert calls.take() == one_pass
         assert files[1:] == [{"b3.parquet"}]
-        assert not getattr(d, "_drain_stages", [])
+        assert len(stages) == 2  # the two segments, no drain stage
     finally:
         d.stop()
 
@@ -291,7 +308,9 @@ sql_history[b]: 5m
 
 
 @pytest.mark.parametrize("enriched", [False, True])
-def test_store_drain_stage_only_above_a_join(spark, tmp_path, enriched):
+def test_store_drain_stage_only_above_a_join(
+    spark, tmp_path, monkeypatch, enriched
+):
     """With several batch channels the drain stages its frame only
     when enrichment puts a join above the store (here: a
     networks_file LPM)."""
@@ -299,10 +318,14 @@ def test_store_drain_stage_only_above_a_join(spark, tmp_path, enriched):
     nets.write_text("65100,10.0.0.0/8\n")
     conf = CONF + (f"nfacctd_as: file\nnetworks_file: {nets}\n" if enriched else "")
     d = Daemon.from_conf(spark, conf, spool_dir=str(tmp_path / "spool"))
+    stages = _count_stages(monkeypatch)
     try:
         _spool(d, "b1", [_v9(1, [_rec(0), _rec(1)])])
         assert _total_bytes(d) == _bytes([_rec(0), _rec(1)])
-        assert bool(getattr(d, "_drain_stages", [])) is enriched
+        assert len(stages) == 1 + enriched  # the segment, then the drain's
+        del stages[:]
+        assert _total_bytes(d) == _bytes([_rec(0), _rec(1)])
+        assert len(stages) == int(enriched)  # a warm drain: its own only
     finally:
         d.stop()
 
@@ -311,14 +334,17 @@ def test_store_sync_stress_pins_and_single_flight(spark, monkeypatch):
     """More reader threads than cores pin, read and release snapshots
     while the spool grows and old files retire: every file is decoded
     exactly once, and no segment is released while a pinned snapshot
-    or the last two unpinned drains still read it. Staging is faked,
-    so the segments are unexecuted plans. As in the daemon, listing
-    the files and syncing happen under one lock."""
+    or the last two unpinned drains still read it. Each tick and
+    drain also holds scratch of its own (the follow_* dims), released
+    by the same rule. Staging is faked, so the segments are unexecuted
+    plans. As in the daemon, listing the files and syncing happen
+    under one lock."""
     import itertools
     import sys
+    import types
 
     from pmacct_spark.operators import staging
-    from pmacct_spark.streaming.store import DecodedStore
+    from pmacct_spark.streaming.store import DecodedStore, Retention
 
     lock = threading.Lock()
     ids = itertools.count()
@@ -326,6 +352,7 @@ def test_store_sync_stress_pins_and_single_flight(spark, monkeypatch):
     released: list[str] = []
     violations: list[str] = []
     decoded: dict[str, int] = {}
+    held: dict[int, list] = {}  # drain number (0: ticks) -> scratch held
 
     def fake_stage(df):
         df.stage_path = f"seg-{next(ids)}"
@@ -350,17 +377,22 @@ def test_store_sync_stress_pins_and_single_flight(spark, monkeypatch):
 
     monkeypatch.setattr(staging, "stage", fake_stage)
     monkeypatch.setattr(staging, "release", fake_release)
-    store = DecodedStore()
+    owner = Retention()
+    store = DecodedStore(owner)
     listing = threading.Lock()  # the daemon's _compact_lock
     files = ["f000"]
     stop = threading.Event()
 
     def reader():
         while not stop.is_set():
+            lease = owner.lease(pin=True)
             with listing:
-                snap = store.sync(list(files), "k", None, None, decode, pin=True)
-            paths = [s.df.stage_path for s in snap._segments]
+                snap = store.sync(list(files), "k", None, None, decode, lease)
+            dim = fake_stage(types.SimpleNamespace())
+            lease.hold([dim])
+            paths = [s.df.stage_path for s in snap._segments] + [dim.stage_path]
             with lock:
+                held.setdefault(0, []).append(dim.stage_path)
                 for p in paths:
                     active[p] = active.get(p, 0) + 1
                 k0 = started[0]
@@ -371,7 +403,7 @@ def test_store_sync_stress_pins_and_single_flight(spark, monkeypatch):
             with lock:
                 for p in paths:
                     active[p] -= 1
-            snap.release()
+            lease.release()
 
     def writer():
         for i in range(1, 40):
@@ -384,9 +416,14 @@ def test_store_sync_stress_pins_and_single_flight(spark, monkeypatch):
                     started[0] += 1
                     k = started[0]
                 # a drain: its lazy results hold no pin
-                snap = store.sync(list(files), "k", None, None, decode)
+                lease = owner.lease()
+                snap = store.sync(list(files), "k", None, None, decode, lease)
+                dim = fake_stage(types.SimpleNamespace())
+                lease.hold([dim])
             with lock:
                 drains[k] = {s.df.stage_path for s in snap._segments}
+                drains[k].add(dim.stage_path)
+                held[k] = [dim.stage_path]
                 done[0] = k
 
     old = sys.getswitchinterval()
@@ -407,5 +444,13 @@ def test_store_sync_stress_pins_and_single_flight(spark, monkeypatch):
     assert not any(t.is_alive() for t in threads)
     assert violations == []
     assert released  # retired segments do get released
+    # a tick's scratch goes with its lease, a drain's two drains later
+    last = max(drains)
+    assert all(
+        p in released
+        for k, paths in held.items() if k < last - 1
+        for p in paths
+    )
     assert set(decoded.values()) == {1}, decoded
     store.close()
+    owner.close()

@@ -27,7 +27,7 @@ from pmacct_spark.streaming.bmp import (
     encode_bgp_update,
     encode_bmp_peer_up,
 )
-from pmacct_spark.streaming.store import RibStore
+from pmacct_spark.streaming.store import Retention, RibStore
 from tests.test_streaming import _v5_datagram
 
 EXPORTER = "198.51.100.9"  # flow exporter and BGP peer
@@ -293,9 +293,7 @@ def test_rib_files_leave_out_session_plumbing(tmp_path):
 
 def _pins(d: Daemon) -> int:
     """Pins held on the daemon's stored flow segments and RIBs."""
-    ribs = d._ribs._retired + ([d._ribs._rib] if d._ribs._rib else [])
-    segs = d._store._segments + d._store._retired
-    return sum(s.pins for s in ribs + segs)
+    return sum(h.pins for h in d._scratch._held.values())
 
 
 def test_failed_rib_build_leaves_no_pins(spark, tmp_path, monkeypatch):
@@ -471,7 +469,8 @@ def test_rib_store_stress_pins_and_single_flight(spark, monkeypatch):
 
     monkeypatch.setattr(staging, "stage", fake_stage)
     monkeypatch.setattr(staging, "release", fake_release)
-    store = RibStore()
+    owner = Retention()
+    store = RibStore(owner)
     files = [("s0",)]
     stop = threading.Event()
     mismatched: list = []
@@ -482,7 +481,8 @@ def test_rib_store_stress_pins_and_single_flight(spark, monkeypatch):
     def reader():
         last = 0
         while not stop.is_set():
-            snap = store.sync(listing, build, pin=True)
+            lease = owner.lease(pin=True)
+            snap = store.sync(listing, build, lease)
             # each list is one file longer: its masklen is its length
             if snap.masklens[0] < last:
                 mismatched.append((last, snap.masklens))
@@ -497,7 +497,7 @@ def test_rib_store_stress_pins_and_single_flight(spark, monkeypatch):
                 time.sleep(0.002)
             with lock:
                 active[p] -= 1
-            snap.release()
+            lease.release()
 
     def writer():
         for i in range(1, 25):
@@ -507,7 +507,7 @@ def test_rib_store_stress_pins_and_single_flight(spark, monkeypatch):
                 started[0] += 1
                 k = started[0]
             # a drain: its lazy results hold no pin
-            snap = store.sync(listing, build)
+            snap = store.sync(listing, build, owner.lease())
             with lock:
                 drains[k] = snap.df.stage_path
                 done[0] = k
@@ -532,3 +532,4 @@ def test_rib_store_stress_pins_and_single_flight(spark, monkeypatch):
     assert released  # superseded snapshots do get released
     assert set(built.values()) == {1}, built
     store.close()
+    owner.close()
