@@ -19,11 +19,14 @@ ports list ``src/plugin_common.c:1419``, custom primitives
 from __future__ import annotations
 
 import ipaddress
+import logging
 import re
 from dataclasses import dataclass, field
 
 from pmacct_spark.config import PluginConfig, Preprocess
 from pmacct_spark.operators.pretag import Rule
+
+log = logging.getLogger("pmacct_spark")
 
 # plugin type -> its conf-key prefix (<prefix>_refresh_time,
 # <prefix>_trigger_exec, ...; "sql" for the whole SQL family), None for
@@ -523,7 +526,6 @@ def parse_allow_file(text: str) -> list[str]:
     (src/util.c:2033) so check_allow's loop matches nothing; callers
     must distinguish [] (deny all) from no-file (accept all)."""
     import ipaddress
-    import logging
 
     out: list[str] = []
     for line in text.splitlines():
@@ -533,7 +535,7 @@ def parse_allow_file(text: str) -> list[str]:
         try:
             ipaddress.ip_network(line, strict=False)
         except ValueError:
-            logging.getLogger("pmacct_spark").warning(
+            log.warning(
                 "allow_file: Bad IP address '%s'. Ignored.", line
             )
             continue
@@ -574,8 +576,6 @@ def parse_tee_receivers(
     32): pools beyond the cap and receivers beyond the per-pool cap
     are warned and dropped — the reference's fixed allocation made
     them hard limits, so honoring them keeps conf portability."""
-    import logging
-
     out: list[dict] = []
     for line in text.splitlines():
         line = line.strip()
@@ -622,19 +622,19 @@ def parse_tee_receivers(
             elif not entry.get("pool") and not entry.get("zmq_address"):
                 raise ValueError("id and ip are mandatory")
         except ValueError as e:
-            logging.getLogger("pmacct_spark").warning(
+            log.warning(
                 "tee_receivers: bad line %r (%s). Ignored.", line, e
             )
             continue
         pool = entry.get("pool")
         if pool and len(pool) > max_receivers:
-            logging.getLogger("pmacct_spark").warning(
+            log.warning(
                 "tee_receivers: pool %s exceeds tee_max_receivers=%d;"
                 " extra receivers dropped.", entry.get("id"), max_receivers,
             )
             entry["pool"] = pool[:max_receivers]
         if len(out) >= max_pools:
-            logging.getLogger("pmacct_spark").warning(
+            log.warning(
                 "tee_receivers: more than tee_max_receiver_pools=%d"
                 " pools; line %r dropped.", max_pools, line,
             )
@@ -649,8 +649,6 @@ def parse_kafka_config_file(text: str) -> dict[str, dict[str, str]]:
     value is passed through unparsed (it may itself contain commas),
     so split on the FIRST TWO commas only. Comment/blank lines and
     lines with an unknown type are warned and skipped."""
-    import logging
-
     out: dict[str, dict[str, str]] = {"global": {}, "topic": {}}
     for line in text.splitlines():
         line = line.strip()
@@ -658,7 +656,7 @@ def parse_kafka_config_file(text: str) -> dict[str, dict[str, str]]:
             continue
         parts = line.split(",", 2)
         if len(parts) != 3 or parts[0].strip() not in ("global", "topic"):
-            logging.getLogger("pmacct_spark").warning(
+            log.warning(
                 "kafka_config_file: bad line %r. Ignored.", line
             )
             continue
@@ -675,7 +673,6 @@ def parse_bgp_peer_src_as_map(text: str) -> list[dict]:
     through to the native RIB lookup (the exception-handling hook).
     Malformed lines are warned and skipped like every reference map."""
     import ipaddress
-    import logging
 
     out: list[dict] = []
     for line in text.splitlines():
@@ -699,7 +696,7 @@ def parse_bgp_peer_src_as_map(text: str) -> list[dict]:
             if "id" not in entry:
                 raise ValueError("missing id")
         except ValueError as e:
-            logging.getLogger("pmacct_spark").warning(
+            log.warning(
                 "bgp_peer_src_as_map: bad line %r (%s). Ignored.",
                 line, e,
             )
@@ -828,7 +825,6 @@ def parse_bgp_peer_dst_ip_map(text: str) -> list[dict]:
     accepted and currently unrestricted. Malformed lines are warned
     and skipped like every reference map."""
     import ipaddress
-    import logging
 
     out: list[dict] = []
     for line in text.splitlines():
@@ -852,7 +848,7 @@ def parse_bgp_peer_dst_ip_map(text: str) -> list[dict]:
             if "id" not in entry or "bgp_nexthop" not in entry:
                 raise ValueError("id and bgp_nexthop are mandatory")
         except ValueError as e:
-            logging.getLogger("pmacct_spark").warning(
+            log.warning(
                 "bgp_peer_dst_ip_map: bad line %r (%s). Ignored.",
                 line, e,
             )

@@ -83,6 +83,16 @@ def _has_options_template(templates: dict) -> bool:
     )
 
 
+# the map files enrichment re-reads on every drain, so their bytes key
+# the stored enriched rows; every other map is parsed once per load
+_REREAD_MAPS = (
+    "sampling_map",
+    "bgp_peer_src_as_map",
+    "bgp_src_local_pref_map",
+    "bgp_src_med_map",
+)
+
+
 @dataclass
 class Daemon:
     """A running collector: the socket spool plus one streaming (or
@@ -126,8 +136,13 @@ class Daemon:
     _scratch: Retention = field(default_factory=Retention, repr=False)
     # compacted side table -> its scratch dir, made by the first append
     _compacted: dict = field(default_factory=dict, repr=False)
-    # each live spool file's decoded rows, decoded once (batch drains
-    # and replan ticks read it; the streaming path does not)
+    # compacted side table -> appends so far
+    _appends: dict = field(default_factory=dict, repr=False)
+    # bumped by reload_maps(): part of the enriched rows' key
+    _maps_gen: int = field(default=0, repr=False)
+    # each live spool file's decoded rows, decoded once, and its
+    # enriched rows, enriched once per RIB and maps generation (batch
+    # drains and replan ticks read it; the streaming path does not)
     _store: DecodedStore = field(init=False, repr=False)
     # the batch path's lookup RIB, staged once per BGP/BMP spool
     # generation (streaming plans read the live rib() instead)
@@ -557,25 +572,33 @@ class Daemon:
         return d
 
     def reload_maps(self) -> None:
-        """Drop every parse-once map cache so the next drain re-reads
-        the files — the SIGUSR2 reload (load_networks/load_ports/
-        map reload dispatch in the reference's signal handler;
-        CONFIG-KEYS:2270 maps_refresh). The pre_tag_map is one of
-        them: it is parsed and compiled once per load, and an edit
-        takes effect only after this reload. The sampling map is still
-        re-read per drain. The RIB and the live ROA feed need no
-        reload: the RIB snapshot is rebuilt whenever new BGP/BMP spool
-        files arrive, and the ROA feed is re-read per drain."""
+        """The SIGUSR2 reload (load_networks/load_ports/map reload
+        dispatch in the reference's signal handler; CONFIG-KEYS:2270
+        maps_refresh): drop every parse-once map cache, so the next
+        drain re-reads the files — the allow, ports, networks, agent,
+        pre_tag, protos/tos and ROA files — and bump the maps
+        generation, which retires every stored enriched row, so the
+        next drain enriches the live spool again under the reloaded
+        maps. An edit to one of those files takes effect only after
+        this reload. The files enrichment re-reads on every drain
+        (sampling_map, bgp_peer_src_as_map, bgp_src_local_pref_map,
+        bgp_src_med_map) need none: their bytes are part of the
+        enriched rows' key. Neither do the RIB and the live ROA feed:
+        the RIB snapshot is rebuilt whenever a RIB-changing BGP/BMP
+        spool file arrives, the ROA feed is re-read from the RTR spool
+        files, and both are part of that key too."""
         for attr in (
             "_allow_cache",
             "_ports_cache",
             "_networks_cache",
             "_agent_map_cache",
             "_pretag_cache",
+            "_bucket_cache",
             "_roa_df",
         ):
             if hasattr(self, attr):
                 delattr(self, attr)
+        self._maps_gen += 1
 
     @staticmethod
     def _tcp_allow(conf, fam: str) -> list[str] | None:
@@ -763,17 +786,21 @@ class Daemon:
     # ---- spool compaction (bounded-replay serving, VERDICT r4 #4) ----
     #
     # Each live spool file is decoded once, by the first drain or tick
-    # that sees it, into the decoded-flow store (streaming/store.py);
-    # later drains read the stored rows and re-run only maps and
-    # enrichment. Compaction adds two things on top. It folds retired
-    # files' stored rows through maps+enrich once and appends the
-    # resulting flow rows to a columnar side table: enrichment state
-    # (RIB, learned sampling rates) is captured as of compaction time —
-    # enrich-at-arrival, exactly the reference's semantics. And it
-    # bounds the live file count, so the per-drain enrichment and the
-    # union over stored segments stay flat with uptime. Spool files
-    # are retired logically (never deleted), so streaming channels that
-    # tail the spool directory are unaffected.
+    # that sees it, into the store's decoded layer (streaming/store.py).
+    # When maps and enrichment put a join above those rows, the file's
+    # enriched rows are stored too, once per enrichment key (the RIB
+    # snapshot, the maps, the ROA feed, see _enrich_key): a drain with
+    # no new file and no key change reads the stored rows and builds no
+    # enrichment plan; a key change re-enriches every live file once.
+    # Compaction adds two things on top. It takes the retired files'
+    # enriched rows (stored, or enriched on demand) and appends them to
+    # a columnar side table: enrichment state (RIB, learned sampling
+    # rates) is captured as of compaction time — enrich-at-arrival,
+    # exactly the reference's semantics. And it bounds the live file
+    # count, so a re-enrichment and the union over stored segments stay
+    # flat with uptime. Spool files are retired logically (never
+    # deleted), so streaming channels that tail the spool directory are
+    # unaffected.
 
     def _spool_files(self) -> list[str]:
         import glob as _glob
@@ -805,6 +832,7 @@ class Daemon:
 
             self._compacted[table] = _tmp.mkdtemp(prefix=f"pmacct_compact_{table}_")
         df.write.mode("append").parquet(self._compacted[table])
+        self._appends[table] = self._appends.get(table, 0) + 1
 
     def _compacted_table(self, table: str) -> DataFrame | None:
         """The compacted side table ``table``; None before the first
@@ -814,9 +842,10 @@ class Daemon:
 
     def compact_spool(self, keep_files: int = 4) -> int:
         """Retire all but the newest ``keep_files`` live spool files:
-        enrich their stored rows once, append the flow rows (and any
-        decoded options-data rows, which later renormalize passes still
-        need) to the compacted side tables. Returns files retired."""
+        append their enriched flow rows (:meth:`_enriched_flows`) and
+        any decoded options-data rows, which later renormalize passes
+        still need, to the compacted side tables. Returns files
+        retired."""
         with self._compact_lock:
             live = self._live_spool_files()
             victims = live[:-keep_files] if keep_files else live
@@ -831,7 +860,7 @@ class Daemon:
                         dg, streaming=False, rib=rib
                     )
                 else:
-                    flows = self._enrich_snapshot(snap, dg, victims, rib)
+                    flows = self._enriched_flows(snap, dg, rib, lease, victims)
                 self._compact_append("flows", flows)
                 if self.flavor == "netflow":
                     if snap is None:
@@ -1295,19 +1324,101 @@ class Daemon:
             )
         return flows, decode_options(dg, seed_templates=seed, by=FID)
 
+    def _enriched_flows(
+        self,
+        snap,
+        dg: DataFrame,
+        rib: RibSnapshot | None,
+        lease: Lease,
+        files: list[str] | None = None,
+    ) -> DataFrame:
+        """Enriched flows of ``files`` (default: the whole snapshot),
+        read under ``lease``; ``dg`` are those files' datagrams. When
+        maps and enrichment put a join above the decoded rows, these
+        come from the store's enriched layer: each file is enriched
+        once per :meth:`_enrich_key`, so a drain with no new file and
+        no key change builds no enrichment plan. Otherwise the frame is
+        built lazily per call (:meth:`_enrich_snapshot`), as it is under
+        nfacctd_account_options, whose options-data rows are decoded
+        from the whole live spool per drain."""
+        if self.conf.getbool("nfacctd_account_options"):
+            self._store.note(
+                "enriched rows not stored: nfacctd_account_options "
+                "decodes options-data rows from the live spool per drain",
+                logging.INFO,
+            )
+            return self._enrich_snapshot(snap, dg, files, rib)
+        if rib is not None:
+            rib = _replace(
+                rib,
+                roa_files=None if self.rtr_client is None
+                else self.rtr_client.files(),
+            )
+        df = self._store.enriched(
+            snap,
+            self._enrich_key(snap, rib),
+            lambda todo, tmp: self._enrich_snapshot(
+                snap, self._datagrams(todo), todo,
+                None if rib is None else _replace(rib, lease=tmp), fid=True,
+            ),
+            lease,
+            files,
+        )
+        if df is None:
+            df = self._enrich_snapshot(snap, dg, files, rib)
+        return df
+
+    def _enrich_key(self, snap, rib: RibSnapshot | None) -> tuple:
+        """What a stored file's enriched rows depend on besides its
+        decoded rows (the store adds the decode key), computed without
+        building a plan, as ``(part, value)`` pairs: the RIB snapshot's
+        spool files; the maps generation (:meth:`reload_maps`); the
+        bytes of the map files enrichment re-reads on every drain; the
+        RTR spool files the ROA table is read from; and, when the
+        exporter-id join or the learned sampling rates apply, which
+        read options rows across files, the whole snapshot and the
+        compacted options appends."""
+        reread = []
+        for k in _REREAD_MAPS:
+            path = self.conf.get(k)
+            if not path:
+                reread.append(None)
+                continue
+            try:
+                with open(str(path), "rb") as fh:
+                    reread.append(fh.read())
+            except OSError:  # enrichment raises, if it reads the file
+                reread.append(None)
+        cross = None
+        if self._learns_rates() or (
+            self.flavor == "netflow"
+            and not self.conf.getbool("nfacctd_ignore_exporter_address")
+            and self._has_exporter_ids(snap, None)
+        ):
+            cross = (snap.key(), self._appends.get("options", 0))
+        return (
+            ("RIB snapshot", None if rib is None else rib.files),
+            ("maps generation", self._maps_gen),
+            ("re-read maps", tuple(reread)),
+            ("RTR ROA files", None if rib is None else rib.roa_files),
+            ("options rows across files", cross),
+        )
+
     def _enrich_snapshot(
         self,
         snap,
         dg: DataFrame,
         files: list[str] | None = None,
         rib: RibSnapshot | None = None,
+        fid: bool = False,
     ) -> DataFrame:
         """Enriched flows of ``files`` (default: the whole snapshot)
-        from the store's decoded rows; ``dg`` are those files'
-        datagrams. The exporter-id join reads the same files' options
-        rows; the sampling rates read every live file's. ``rib``: the
-        RIB snapshot (see :meth:`_enrich`)."""
-        decoded = snap.flows(files)
+        from the store's decoded rows, built lazily; ``dg`` are those
+        files' datagrams. The exporter-id join reads the same files'
+        options rows; the sampling rates read every live file's.
+        ``rib``: the RIB snapshot (see :meth:`_enrich`). With ``fid``,
+        each row keeps its file's id in column ``FID``."""
+        decoded = snap.flows(files, fid)
         if self.flavor == "sflow":
             return self._enrich(
                 canonical_flows(decoded), streaming=False, rib=rib
@@ -1330,20 +1441,22 @@ class Daemon:
         (IE 130); a drain whose spool exposes none skips the join. With
         no options template in the decode's template set there are no
         options rows to look at; otherwise the answer is memoized on
-        the stored rows it reads."""
+        the stored rows it reads (the last few: a drain asks for the
+        whole snapshot, then for the files it enriches)."""
         if not _has_options_template(
             {**(self._templates_seed() or {}), **snap.templates}
         ):
             return False
         key = snap.key(files)
-        memo = getattr(self, "_exporter_ids_memo", None)
-        if memo is None or memo[0] != key:
+        memo = self.__dict__.setdefault("_exporter_ids_memo", {})
+        if key not in memo:
             opts = snap.options(files)
-            found = bool(
+            if len(memo) >= 4:
+                memo.clear()
+            memo[key] = bool(
                 opts.filter(F.col("exporter_v4") > 0).limit(1).collect()
             )
-            memo = self._exporter_ids_memo = (key, found)
-        return memo[1]
+        return memo[key]
 
     def _decoded(self, streaming: bool, lease: Lease | None = None) -> DataFrame:
         """The flow frame every channel aggregates. The batch frame
@@ -1354,24 +1467,27 @@ class Daemon:
                 self.spool.stream(self.spark), streaming=True
             )
         self._ingest_replicated_templates()
-        # snapshot the live file list, the store and the compacted side
+        # snapshot the live file list, the stores and the compacted side
         # table under one lock: a concurrent tick's maybe_compact_spool
         # could otherwise retire a file after it was listed and append
         # its compacted copy before the union runs — double-counting
-        # that file's flows for one drain
+        # that file's flows for one drain. Syncing the RIB and the
+        # enriched rows under it too keeps concurrent drains and ticks
+        # in one order, so none brings back files or a RIB that a
+        # newer one already retired.
         with self._compact_lock:
             files = self._live_spool_files()
             comp = self._compacted_table("flows")
             snap = self._store_sync(files, lease)
-        rib = self._rib_snapshot(lease)
-        live = self._datagrams(files)
+            rib = self._rib_snapshot(lease)
+            live = self._datagrams(files)
+            if snap is not None:
+                df = self._enriched_flows(snap, live, rib, lease)
         self._forward_templates(live)
         if snap is None:
             df = self._enrich_datagrams(live, streaming=False, rib=rib)
-        else:
-            if self.flavor == "netflow":
-                self._persist_templates(snap.templates)
-            df = self._enrich_snapshot(snap, live, rib=rib)
+        elif self.flavor == "netflow":
+            self._persist_templates(snap.templates)
         if comp is not None:
             df = df.unionByName(comp, allowMissingColumns=True)
         return df
@@ -1509,12 +1625,9 @@ class Daemon:
         return self._networks_cache
 
     def _roa_table(self) -> DataFrame | None:
-        """The ROA dim. From rpki_roas_file: parsed once per daemon
-        (the reference reloads it only on SIGUSR2 too). From a live
-        RTR session (rpki_rtr_cache): re-compacted from the PDU spool
-        on EVERY call, so a delta the cache pushed between drains
-        flips validation statuses immediately — the live-reload
-        semantics of the BGP RIB. Both configured -> union."""
+        """The ROA dim of rpki_roas_file: parsed once per daemon (the
+        reference reloads it only on SIGUSR2 too); None without the
+        key. A live RTR session's ROAs join it (:meth:`_rtr_roas`)."""
         if not hasattr(self, "_roa_df"):
             roas_path = self.conf.get("rpki_roas_file")
             if not roas_path:
@@ -1527,16 +1640,19 @@ class Daemon:
                      for r in rows],
                     "net_int long, masklen int, maxlen int, asn long",
                 )
-        if self.rtr_client is None:
-            return self._roa_df
+        return self._roa_df
+
+    def _rtr_roas(self, files: list[str] | None) -> DataFrame:
+        """The ROA dim of the live RTR session (rpki_rtr_cache):
+        re-compacted from the RTR spool ``files`` (None: those spooled
+        now) on EVERY call, so a delta the cache pushed between drains
+        flips validation statuses at the next drain — the live-reload
+        semantics of the BGP RIB."""
         from pmacct_spark.sources.rtr import roa_state
 
-        live = roa_state(self.rtr_client.batch(self.spark)).filter(
+        return roa_state(self.rtr_client.batch(self.spark, files)).filter(
             "afi = 1"
         ).selectExpr("prefix AS net_int", "masklen", "maxlen", "asn")
-        if self._roa_df is not None:
-            live = live.unionByName(self._roa_df)
-        return live
 
     def _pretag_map(self) -> _PretagMap | None:
         """pre_tag_map, parsed and compiled once per load (the
@@ -1615,6 +1731,9 @@ class Daemon:
             "as_path": "", "local_pref": 0, "med": 0, "std_comm": "",
         }
         roa_df = self._roa_table()
+        if self.rtr_client is not None:  # both configured: union
+            live = self._rtr_roas(snap.roa_files)
+            roa_df = live if roa_df is None else live.unionByName(roa_df)
         if roa_df is not None:
             # validate each RIB route against the ROA table BEFORE the
             # flow join, so flows inherit the looked-up route's status

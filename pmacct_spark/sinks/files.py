@@ -12,10 +12,13 @@ directory per token value, which is the cluster-scalable form of
 
 from __future__ import annotations
 
+import logging
 import re
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+log = logging.getLogger("pmacct_spark")
 
 # pmacct dynamic-name tokens -> (partition column name, column expr builder)
 # strftime tokens derive from the window start (stamp_inserted).
@@ -75,9 +78,7 @@ def write_print(
         # print_write_empty_file default false (CONFIG-KEYS:1272): an
         # empty purge produces no file at all, only the reference's
         # "ET: X" log line
-        import logging
-
-        logging.getLogger("pmacct_spark").info(
+        log.info(
             "write_print: no data to output (print_write_empty_file "
             "false) — ET: X"
         )

@@ -33,6 +33,7 @@ and per-partition offset ordering all survive a real socket.
 
 from __future__ import annotations
 
+import logging
 import socket
 import struct
 import threading
@@ -40,6 +41,8 @@ import zlib
 from dataclasses import dataclass, field
 
 from pmacct_spark.sources.sockio import recv_exact
+
+log = logging.getLogger("pmacct_spark")
 
 # --- primitive codecs (big-endian, per the Kafka protocol guide) -----
 
@@ -531,14 +534,12 @@ def wire_producer_options(cfg: dict[str, dict[str, str]]) -> dict:
     parameters. Properties without a wire equivalent (compression,
     TLS, SASL, ...) warn and no-op — the reference likewise hands
     unknown keys to librdkafka unvalidated."""
-    import logging
-
     out: dict = {}
     for scope, props in cfg.items():
         for key, value in props.items():
             param = _WIRE_PROPS.get((scope, key))
             if param is None:
-                logging.getLogger("pmacct_spark").warning(
+                log.warning(
                     "kafka_config_file: %s property %r has no wire-"
                     "producer equivalent here; ignored", scope, key
                 )

@@ -21,6 +21,7 @@ BGP RIB.
 
 from __future__ import annotations
 
+import glob
 import os
 import socket
 import tempfile
@@ -244,8 +245,8 @@ class RtrClient:
                 )
             elif ptype == PDU_END_OF_DATA and len(body) >= 4:
                 self.serial = int.from_bytes(body[0:4], "big")
-                self.eods_received += 1
                 self._flush()  # the delta is complete: make it readable
+                self.eods_received += 1  # counted once it is listable
             elif ptype == PDU_SERIAL_NOTIFY:
                 # cache has news: ask for the delta since our serial
                 self._send(
@@ -308,13 +309,19 @@ class RtrClient:
         return self.eods_received >= n
 
     # -- Spark surfaces -----------------------------------------------
-    def batch(self, spark) -> DataFrame:
-        files = sorted(
-            f for f in os.listdir(self.spool_dir) if f.endswith(".parquet")
-        )
+    def files(self) -> list[str]:
+        """The spool files written so far, oldest first. A file is
+        listed only once it is renamed in (``write_spool_file``), so
+        the list and the rows a read of it returns always agree."""
+        return sorted(glob.glob(os.path.join(self.spool_dir, "*.parquet")))
+
+    def batch(self, spark, files: list[str] | None = None) -> DataFrame:
+        """The ROA events of exactly ``files`` (default: :meth:`files`
+        now)."""
+        files = self.files() if files is None else list(files)
         if not files:
             return spark.createDataFrame([], ROA_EVENT_DDL)
-        return spark.read.schema(ROA_EVENT_DDL).parquet(self.spool_dir)
+        return spark.read.schema(ROA_EVENT_DDL).parquet(*files)
 
 
 def roa_state(events: DataFrame) -> DataFrame:

@@ -14,11 +14,14 @@ the remainder stays buffered. The output feeds the same decoders and
 
 from __future__ import annotations
 
+import logging
 import os
 import socket
 import tempfile
 import threading
 import time
+
+log = logging.getLogger("pmacct_spark")
 
 _BGP_MARKER = b"\xff" * 16
 SPOOL_DDL = "exporter_ip string, seqno long, epoch long, payload binary"
@@ -376,9 +379,7 @@ class TcpSpool:
         # consume room (the batch_rollback net effect). Both keys must
         # be set together, like the reference warns-and-disables.
         if bool(batch) != bool(batch_interval):
-            import logging
-
-            logging.getLogger("pmacct_spark").warning(
+            log.warning(
                 "batch and batch_interval must be set together; "
                 "peer batching disabled"
             )
@@ -395,7 +396,6 @@ class TcpSpool:
         # num=-1 so check_allow matches nothing). Malformed entries are
         # warned and skipped like src/util.c:2026, never fatal.
         import ipaddress as _ip
-        import logging as _logging
 
         self.allow_nets: list | None
         if allow is None:
@@ -408,7 +408,7 @@ class TcpSpool:
                         _ip.ip_network(e, strict=False)
                     )
                 except ValueError:
-                    _logging.getLogger("pmacct_spark").warning(
+                    log.warning(
                         "allow_file: Bad IP address '%s'. Ignored.", e
                     )
         self.sessions_refused_by_allow = 0
@@ -792,7 +792,6 @@ class TcpSpool:
             seq, nfile = self._seq, self._nfile
             self._seq += 1
             self._nfile += 1
-            self.messages_spooled += 1
             if epoch > self._rib_epochs.get(peer, 0):
                 self._rib_epochs[peer] = epoch
             elif not rib:
@@ -808,6 +807,8 @@ class TcpSpool:
             }
         )
         write_spool_file(self.spool_dir, f"s{nfile:08d}.parquet", table)
+        with self._lock:  # counted once a listing can see the file
+            self.messages_spooled += 1
 
     def flush(self, timeout: float = 5.0) -> None:
         """Ask every live session to emit its complete-message prefix

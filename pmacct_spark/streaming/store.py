@@ -1,6 +1,7 @@
 """The daemon's scratch owner and its batch-path stores: each flow
-spool file is decoded once, and the lookup RIB is built once per
-BGP/BMP spool generation.
+spool file is decoded once, and enriched once per RIB and maps
+generation, and the lookup RIB is built once per BGP/BMP spool
+generation.
 
 One :class:`Retention` per daemon owns every ``stage()``d frame the
 batch path leaves behind: the stores' segments and RIBs, a drain's
@@ -19,25 +20,33 @@ window that keeps a drain's lazy results readable). Daemon stop
 releases the rest, except what is still inside that window: that goes
 with the staging module's exit cleanup.
 
-A batch drain or replan tick syncs :class:`DecodedStore` with the live
-spool files. Files the store has not seen are decoded once, together
-in one pass, into one ``stage()``d parquet segment. A segment holds
-each of its files' flow rows and options rows, stamped with a per-file
-id, and the store keeps each file's template definitions on the
-driver. Later drains union the stored segments and run no Python
-decode pass unless new files arrived.
+:class:`DecodedStore` keeps two staged layers of per-spool-file
+segments, each built under one key; a segment holds the rows of every
+file one update covered, stamped with a per-file id (``FID``), and a
+key change retires every segment of its layer.
 
-A segment depends only on its files' bytes, the merged template set
-and the daemon conf (the decode key). Work that crosses files stays
-with the caller and reads the snapshot: the merged template set, the
-exporter-id join and the learned sampling rates.
+- The decoded layer. A batch drain or replan tick syncs it with the
+  live spool files: files it has not seen are decoded once, together
+  in one pass, into one segment of their flow rows and options rows,
+  and the store keeps each file's template definitions on the driver.
+  Its key is the decode key: the merged template set, the seed and
+  the daemon's decode conf. When two live files define one template
+  with different layouts, :meth:`DecodedStore.sync` returns None and
+  the caller takes the ordered whole-spool path.
+- The enriched layer, above it (:meth:`DecodedStore.enriched`): the
+  rows maps and enrichment make of the decoded ones, ``FID`` kept.
+  Files no segment covers are enriched together, in one call and one
+  ``stage()``. Its key is the decode key plus what the caller's
+  enrichment reads (the daemon's ``_enrich_key``: the RIB snapshot,
+  the maps generation, re-read map files, the RTR feed, options rows
+  read across files), so a drain with no new file and no key change
+  builds no enrichment plan. Rows are stored only when their plan
+  would recompute a join or a Python node; otherwise the caller keeps
+  its lazy frame.
 
-- When the decode key changes (a new or changed template definition
-  anywhere in the live spool, a new seed, a new allow list), every
-  segment is decoded again under the new key.
-- When two live files define one template with different layouts,
-  :meth:`DecodedStore.sync` returns None and the caller takes the
-  ordered whole-spool path.
+Work that crosses files (the exporter-id join, the learned sampling
+rates) is the caller's: it reads the snapshot, and the enriched layer
+tracks it only through its key.
 
 :class:`RibStore` holds the lookup RIB (``Daemon.rib()``'s rows)
 ``stage()``d, with its sorted mask lengths, and rebuilds it only when
@@ -181,9 +190,73 @@ class Retention:
 @dataclass(eq=False)
 class _Segment:
     df: DataFrame  # staged rows of every file in ``fids``
-    fids: dict  # spool file -> id on its rows
-    flow_cols: list
-    opt_cols: list | None  # None: the flavor has no options rows
+    fids: dict  # spool file -> id on its rows (column ``FID``)
+    flow_cols: list  # the flow rows' columns, ``FID`` left out
+    # the options rows' columns; None: a flavor without options
+    # records, or an enriched segment
+    opt_cols: list | None = None
+
+
+class _Layer:
+    """Staged per-spool-file segments built under one key: what the
+    decoded and the enriched layers of :class:`DecodedStore` share.
+    The store's lock is held around every call."""
+
+    def __init__(self, owner: Retention):
+        self._owner = owner
+        self.segments: list[_Segment] = []
+        self.key = None  # the key the segments were built under
+
+    def rekey(self, key) -> None:
+        """Adopt ``key``; a change retires every segment."""
+        if key != self.key:
+            self.retire()
+            self.key = key
+
+    def todo(self, files) -> list:
+        """The ``files`` no segment covers, in order."""
+        covered = {f for s in self.segments for f in s.fids}
+        return [f for f in files if f not in covered]
+
+    def read(self, files, lease: Lease) -> list[_Segment]:
+        """The segments holding any of ``files`` (the live spool), read
+        under ``lease``; the others are retired."""
+        live = set(files)
+        reading = [s for s in self.segments if live & s.fids.keys()]
+        gone = [s.df for s in self.segments if s not in reading]
+        self.segments = reading
+        lease.read([s.df for s in reading])
+        if gone:
+            self._owner.retire(gone)
+        return list(reading)  # later updates append to self.segments
+
+    def retire(self) -> None:
+        self._owner.retire([s.df for s in self.segments])
+        self.segments = []
+
+
+def _union(segments, ids: set, rows: Callable) -> DataFrame | None:
+    """The rows of the files whose ids are in ``ids``: ``rows(segment,
+    df)`` of each segment holding any of them (None: it has none of
+    that kind), ``df`` filtered by ``FID`` where the segment also
+    holds other files."""
+    parts = []
+    for seg in segments:
+        have = set(seg.fids.values())
+        keep = have & ids
+        if not keep:
+            continue
+        df = seg.df
+        if keep != have:
+            df = df.filter(F.col(FID).isin(sorted(keep)))
+        df = rows(seg, df)
+        if df is not None:
+            parts.append(df)
+    if not parts:
+        return None
+    return functools.reduce(
+        lambda a, b: a.unionByName(b, allowMissingColumns=True), parts
+    )
 
 
 class Snapshot:
@@ -191,31 +264,29 @@ class Snapshot:
     rows of exactly the spool files it was synced with, kept readable
     by the lease it was synced under."""
 
-    def __init__(self, segments, fids, templates):
+    def __init__(self, segments, fids, templates, decode_key):
         self._segments = segments
         self.fids = fids  # spool file -> id, the snapshot's files
         self.templates = templates  # merged template defs of those files
+        self.decode_key = decode_key  # the key its segments were decoded under
 
-    def _rows(self, kind: int, files) -> DataFrame | None:
+    def _rows(self, kind: int, files, fid: bool = False) -> DataFrame | None:
         want = {self.fids[f] for f in (self.fids if files is None else files)}
-        parts = []
-        for seg in self._segments:
-            cols = seg.flow_cols if kind == 0 else seg.opt_cols
-            have = set(seg.fids.values())
-            ids = have & want
-            if cols is None or not ids:
-                continue
-            df = seg.df.filter(F.col(KIND) == kind)
-            if ids != have:
-                df = df.filter(F.col(FID).isin(sorted(ids)))
-            parts.append(df.select(*cols))
-        if not parts:
-            return None
-        return functools.reduce(DataFrame.unionByName, parts)
 
-    def flows(self, files=None) -> DataFrame:
-        """Decoded flow rows of ``files`` (default: every file)."""
-        return self._rows(0, files)
+        def rows(seg, df):
+            cols = seg.flow_cols if kind == 0 else seg.opt_cols
+            if cols is None:
+                return None
+            return df.filter(F.col(KIND) == kind).select(
+                *cols, *([FID] if fid else [])
+            )
+
+        return _union(self._segments, want, rows)
+
+    def flows(self, files=None, fid: bool = False) -> DataFrame:
+        """Decoded flow rows of ``files`` (default: every file); with
+        ``fid``, each row keeps its file's id in column ``FID``."""
+        return self._rows(0, files, fid)
 
     def options(self, files=None) -> DataFrame | None:
         """Decoded options rows of ``files``; None for a flavor without
@@ -231,19 +302,28 @@ class Snapshot:
 
 
 class DecodedStore:
-    """Per-spool-file decoded rows for one daemon; ``owner`` releases
-    the segments it retires. Thread-safe: the update in :meth:`sync`
-    is single-flight under one lock, so N replan channels decode each
-    file once between them."""
+    """Per-spool-file rows for one daemon, in two staged layers: the
+    decoded rows, and above them the enriched rows (:meth:`enriched`).
+    ``owner`` releases the segments it retires. Thread-safe: every
+    update is single-flight under one lock, so N replan channels decode
+    and enrich each file once between them."""
 
     def __init__(self, owner: Retention):
         self._owner = owner
         self._lock = threading.Lock()
         self._defs: dict = {}  # live spool file -> template defs (None: conflicting)
-        self._segments: list[_Segment] = []
-        self._key = None  # decode key the live segments were built under
+        self._decoded = _Layer(owner)  # keyed on the decode key
+        self._enriched = _Layer(owner)  # keyed on the enrichment key
+        # whether enriched rows are stored under the enrichment key
+        # (None: not decided yet)
+        self._stored: bool | None = None
         self._ids = itertools.count()
         self._logged: set = set()
+
+    @property
+    def _segments(self) -> list[_Segment]:
+        """Every segment the store holds, both layers."""
+        return self._decoded.segments + self._enriched.segments
 
     def sync(
         self,
@@ -279,38 +359,101 @@ class DecodedStore:
                 return None
             seeded = {**(seed or {}), **templates}
             key = (conf_key, _canon(seeded))
-            if key != self._key:
-                if self._segments:
-                    self._note(
-                        "re-decoding every stored spool file: "
-                        + _change(self._key, key),
-                        logging.INFO,
-                    )
-                    self._owner.retire([s.df for s in self._segments])
-                    self._segments = []
-                self._key = key
-            covered = {f for s in self._segments for f in s.fids}
-            todo = [f for f in files if f not in covered]
+            layer = self._decoded
+            if key != layer.key and layer.segments:
+                self.note(
+                    "re-decoding every stored spool file: "
+                    + _change(layer.key, key),
+                    logging.INFO,
+                )
+            layer.rekey(key)
+            todo = layer.todo(files)
             if todo:
-                self._segments.append(self._decode(todo, decode, seeded))
-            reading = [s for s in self._segments if live & s.fids.keys()]
-            gone = [s.df for s in self._segments if s not in reading]
-            self._segments = reading
-            lease.read([s.df for s in reading])
-            if gone:
-                self._owner.retire(gone)
+                layer.segments.append(self._decode(todo, decode, seeded))
+            reading = layer.read(files, lease)
             return Snapshot(
-                list(reading),  # later syncs append to _segments
+                reading,
                 {f: fid for s in reading for f, fid in s.fids.items() if f in live},
                 templates,
+                key,
             )
+
+    def enriched(
+        self,
+        snap: Snapshot,
+        key,
+        enrich: Callable,
+        lease: Lease,
+        files=None,
+    ) -> DataFrame | None:
+        """The enriched flow rows of ``files`` (default: every file of
+        ``snap``), read under ``lease``, or None when this key's
+        enrichment is left lazy and the caller builds the frame.
+
+        ``key`` is what enrichment reads besides the decoded rows (the
+        snapshot's decode key is added here); a change retires every
+        enriched segment. The snapshot's files that no segment covers
+        are enriched together, ``enrich(todo, tmp)``, which returns
+        their enriched rows with ``FID`` kept and registers any scratch
+        it stages with the pinned lease ``tmp``, and stored as one
+        ``stage()``d segment; ``tmp`` is released once it is written.
+        Enriched rows are stored only when their plan recomputes
+        (``staging.plan_recomputes``: a join or a Python node above the
+        decoded rows). That is decided once per key, on the first
+        plan: when it does not, that plan is returned lazily, and
+        later calls under the key return None."""
+        from pmacct_spark.operators.staging import plan_recomputes, stage
+
+        want = {snap.fids[f] for f in (snap.fids if files is None else files)}
+        with self._lock:
+            layer = self._enriched
+            key = (snap.decode_key, key)
+            if key != layer.key:
+                if layer.segments:
+                    self.note(
+                        "re-enriching every stored spool file: "
+                        + _enrich_change(layer.key, key),
+                        logging.INFO,
+                    )
+                layer.rekey(key)
+                self._stored = None
+            if self._stored is False:
+                return None
+            todo = layer.todo(snap.fids)
+            if todo:
+                with self._owner.lease(pin=True) as tmp:
+                    df = enrich(todo, tmp)
+                    if self._stored is None:
+                        self._stored = plan_recomputes(df)
+                    if not self._stored:
+                        # the key's first plan covers every file; the
+                        # caller's lease keeps what it staged
+                        lease.read([h.staged for h in tmp._pinned])
+                        if files is not None:
+                            df = df.filter(F.col(FID).isin(sorted(want)))
+                        return df.drop(FID)
+                    layer.segments.append(
+                        _Segment(
+                            stage(df),
+                            {f: snap.fids[f] for f in todo},
+                            [c for c in df.columns if c != FID],
+                        )
+                    )
+            reading = layer.read(snap.fids, lease)
+        return _union(reading, want, lambda seg, df: df.select(*seg.flow_cols))
 
     def close(self) -> None:
         """Daemon stop: retire every segment (see :meth:`Retention.close`)."""
         with self._lock:
-            self._owner.retire([s.df for s in self._segments])
-            self._segments = []
-            self._defs, self._key = {}, None
+            self._decoded.rekey(None)
+            self._enriched.rekey(None)
+            self._defs, self._stored = {}, None
+
+    def note(self, msg: str, level: int) -> None:
+        """Log each distinct store event once."""
+        if msg not in self._logged:
+            self._logged.add(msg)
+            log.log(level, "decoded-flow store: %s", msg)
 
     # -- internals ----------------------------------------------------
     def _merged(self, files) -> dict | None:
@@ -319,7 +462,7 @@ class DecodedStore:
         for f in files:
             defs = self._defs[f]
             if defs is None:
-                self._note(
+                self.note(
                     f"whole-spool decode: {f} redefines a template with "
                     "a different layout",
                     logging.WARNING,
@@ -327,7 +470,7 @@ class DecodedStore:
                 return None
             for k, spec in defs.items():
                 if k in merged and merged[k] != spec:
-                    self._note(
+                    self.note(
                         f"whole-spool decode: template {k} has different "
                         f"layouts in {where[k]} and {f}",
                         logging.WARNING,
@@ -355,12 +498,6 @@ class DecodedStore:
             None if opts is None else [c for c in opts.columns if c != FID],
         )
 
-    def _note(self, msg: str, level: int) -> None:
-        """Log each distinct store event once."""
-        if msg not in self._logged:
-            self._logged.add(msg)
-            log.log(level, "decoded-flow store: %s", msg)
-
 
 @dataclass(eq=False)
 class _Rib:
@@ -376,11 +513,16 @@ class RibSnapshot:
     it probes, longest first (None: each join discovers them).
     ``lease`` is the lease the daemon's batch path read it under; the
     ``follow_*`` chains register their staged dims with it. The live
-    RIB (streaming plans, direct enrichment calls) has none."""
+    RIB (streaming plans, direct enrichment calls) has none, and no
+    ``files``."""
 
     df: DataFrame
     masklens: list | None
     lease: Lease | None = None
+    files: tuple = ()  # the session spool files it was built from
+    # the RTR spool files enrichment reads the ROA table from (None:
+    # those spooled at read time)
+    roa_files: list | None = None
 
 
 class RibStore:
@@ -410,7 +552,7 @@ class RibStore:
                     self._owner.retire([old.df])
             rib = self._rib
             lease.read([rib.df])
-            return RibSnapshot(rib.df, rib.masklens, lease)
+            return RibSnapshot(rib.df, rib.masklens, lease, rib.files)
 
     def close(self) -> None:
         """Daemon stop: retire the RIB (see :meth:`Retention.close`)."""
@@ -448,6 +590,15 @@ def _canon(templates: dict) -> tuple:
     """Order- and shape-insensitive form of a template set (JSON specs
     compare equal whether they hold tuples or lists)."""
     return tuple(sorted((k, json.dumps(v)) for k, v in templates.items()))
+
+
+def _enrich_change(old, new) -> str:
+    """Why the enrichment key changed, for the log line: the key is
+    ``(decode key, ((part name, value), ...))``."""
+    if old[0] != new[0]:
+        return "the decode key changed"
+    was = dict(old[1])
+    return ", ".join(k for k, v in new[1] if was.get(k) != v) + " changed"
 
 
 def _change(old, new) -> str:

@@ -277,6 +277,34 @@ def test_no_collect_in_timed_query_paths():
     assert not offenders, "\n".join(offenders)
 
 
+def test_no_logging_import_inside_a_function():
+    """Every module logs through its module-level ``pmacct_spark``
+    logger: none imports ``logging`` inside a function."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parent.parent / "pmacct_spark"
+    offenders = []
+    for f in sorted(root.rglob("*.py")):
+        tree = ast.parse(f.read_text(), str(f))
+        for fn in ast.walk(tree):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            for node in ast.walk(fn):
+                names = (
+                    [a.name for a in node.names]
+                    if isinstance(node, ast.Import)
+                    else [node.module]
+                    if isinstance(node, ast.ImportFrom)
+                    else []
+                )
+                if any(n and n.split(".")[0] == "logging" for n in names):
+                    offenders.append(
+                        f"{f.relative_to(root)}:{node.lineno} in {fn.name}()"
+                    )
+    assert not offenders, "\n".join(sorted(set(offenders)))
+
+
 # --- VERDICT r4 what's-wrong #1: forced broadcast of SF-linear tables ---
 
 # Tables whose row count grows with scale factor; a forced F.broadcast
