@@ -40,6 +40,8 @@ from pmacct_spark.streaming.store import (
     Retention,
     RibSnapshot,
     RibStore,
+    Snapshot,
+    empty_frame,
 )
 
 log = logging.getLogger("pmacct_spark")
@@ -802,13 +804,13 @@ class Daemon:
     # deleted), so streaming channels that tail the spool directory are
     # unaffected.
 
-    def _spool_files(self) -> list[str]:
+    def _spool_files(self, spool=None) -> list[str]:
+        """The files of ``spool`` (default: the flow spool), in order."""
         import glob as _glob
         import os as _os
 
-        return sorted(
-            _glob.glob(_os.path.join(self.spool.spool_dir, "*.parquet"))
-        )
+        spool_dir = (spool or self.spool).spool_dir
+        return sorted(_glob.glob(_os.path.join(spool_dir, "*.parquet")))
 
     def _live_spool_files(self) -> list[str]:
         retired = getattr(self, "_retired_files", set())
@@ -843,48 +845,25 @@ class Daemon:
     def compact_spool(self, keep_files: int = 4) -> int:
         """Retire all but the newest ``keep_files`` live spool files:
         append their enriched flow rows (:meth:`_enriched_flows`) and
-        any decoded options-data rows, which later renormalize passes
-        still need, to the compacted side tables. Returns files
-        retired."""
+        their stored rows of the other kinds later passes still read
+        (options rows for the renormalize passes, sFlow counter
+        samples for the counter log) to the compacted side tables.
+        Returns files retired."""
         with self._compact_lock:
             live = self._live_spool_files()
             victims = live[:-keep_files] if keep_files else live
             if not victims:
                 return 0
-            dg = self._datagrams(victims)
             with self._scratch.lease(pin=True) as lease:
                 snap = self._store_sync(live, lease)
                 rib = self._rib_snapshot(lease)
-                if snap is None:  # conflicting templates: ordered path
-                    flows = self._enrich_datagrams(
-                        dg, streaming=False, rib=rib
-                    )
-                else:
-                    flows = self._enriched_flows(snap, dg, rib, lease, victims)
-                self._compact_append("flows", flows)
-                if self.flavor == "netflow":
-                    if snap is None:
-                        from pmacct_spark.streaming.decode import (
-                            decode_options,
-                        )
-
-                        opts = decode_options(
-                            dg.select("exporter_ip", "payload")
-                        )
-                    else:
-                        opts = snap.options(victims)
-                    self._compact_append("options", opts)
-            if self.flavor == "sflow":
-                # counter samples ride the same datagrams as the flow
-                # samples: without this, retiring a spool file would
-                # silently drop its counter history from the
-                # sfacctd_counter_* log (the counter path decodes only
-                # the live tail)
-                from pmacct_spark.streaming.decode import (
-                    decode_sflow_counters,
+                self._compact_append(
+                    "flows", self._enriched_flows(snap, rib, lease, victims)
                 )
-
-                self._compact_append("counters", decode_sflow_counters(dg))
+                for kind in ("options", "counters"):
+                    rows = snap.rows(kind, victims)
+                    if rows is not None:
+                        self._compact_append(kind, rows)
             retired = getattr(self, "_retired_files", set())
             retired.update(victims)
             self._retired_files = retired
@@ -902,17 +881,16 @@ class Daemon:
             return 0
         return self.compact_spool()
 
-    def _sflow_counters(self) -> DataFrame:
-        """Full counter-sample history: live spool tail decoded fresh,
-        unioned with counters preserved at compaction time. Snapshot
-        taken under the compact lock so a concurrent compaction can't
-        retire-and-append the same file between the two reads."""
-        from pmacct_spark.streaming.decode import decode_sflow_counters
-
+    def _sflow_counters(self, lease: Lease) -> DataFrame:
+        """Full counter-sample history, read under ``lease``: the
+        store's counter rows of the live spool, unioned with those
+        compaction preserved. Both are read under the compact lock so a
+        concurrent compaction can't retire-and-append the same file
+        between the two reads."""
         with self._compact_lock:
-            live = self._spool_batch()
+            snap = self._store_sync(self._live_spool_files(), lease)
             comp = self._compacted_table("counters")
-        ctrs = decode_sflow_counters(live)
+        ctrs = snap.rows("counters")
         if comp is not None:
             ctrs = ctrs.unionByName(comp, allowMissingColumns=True)
         return ctrs
@@ -964,26 +942,40 @@ class Daemon:
         the dedicated replication socket merge into the decode seed
         (and ONLY the seed — these datagrams carry no data sets worth
         accounting and are never re-forwarded, the reference's
-        infinite-loop guard)."""
+        infinite-loop guard). Each templates-spool file is learned
+        once, each datagram's definitions apart, in arrival order. A
+        key the templates spool already seeded keeps its first layout
+        (a redefinition is logged once); every other key seeds, over
+        the templates file's."""
         if self.tmpl_spool is None:
             return
-        import json
-
         from pmacct_spark.streaming.decode import learn_template_cache
 
-        self._templates_seed()
-        dg = self.tmpl_spool.batch(self.spark).select(
-            "exporter_ip", "payload"
-        )
-        try:
-            learned = learn_template_cache(dg)
-        except ValueError:
+        seen = self.__dict__.setdefault("_tmpl_learned", set())
+        new = [f for f in self._spool_files(self.tmpl_spool) if f not in seen]
+        if not new:
             return
-        if learned:
-            learned = {
-                k: json.loads(json.dumps(v)) for k, v in learned.items()
-            }
-            self._tmpl_seed = {**(self._tmpl_seed or {}), **learned}
+        seed = dict(self._templates_seed() or {})
+        first = self.__dict__.setdefault("_tmpl_replicated", {})
+        by_dg = learn_template_cache(
+            self._tagged_datagrams(
+                {f: i for i, f in enumerate(new)}, by_datagram=True
+            ),
+            by=FID,
+        )
+        for _, defs in sorted(by_dg.items()):
+            for k, spec in (defs or {}).items():
+                if first.setdefault(k, spec) == spec:
+                    seed[k] = spec
+                else:
+                    self._store.note(
+                        f"replicated template {k} redefined with a "
+                        "different layout: its first layout is kept",
+                        logging.WARNING,
+                        once=("replicated", k),
+                    )
+        self._tmpl_seed = seed
+        seen.update(new)
 
     def _allow_entries(self) -> list[str] | None:
         """The exporter allow list, parsed once per daemon; None when no
@@ -1094,60 +1086,31 @@ class Daemon:
         wm.update(new_wm)
         self._tmpl_fwd_wm = wm
 
-    def _enrich_datagrams(
-        self, dg: DataFrame, streaming: bool, rib: RibSnapshot | None = None
-    ) -> DataFrame:
-        """The whole-spool path: decode ``dg`` and enrich the flows. The
-        streaming plans use it, and batch drains whose spool files
-        define one template with different layouts. ``rib``: the
-        batch path's RIB snapshot (see :meth:`_enrich`)."""
-        from pmacct_spark.streaming.decode import decode_any, decode_sflow_any
+    def _enrich_datagrams(self, dg: DataFrame) -> DataFrame:
+        """The streaming plans' frame: decode the spool stream ``dg`` in
+        stream order and enrich the flows against the live RIB."""
+        from pmacct_spark.streaming.decode import (
+            decode_any,
+            decode_options_data,
+            decode_sflow_any,
+        )
 
-        dg = self._exporter_allow_filter(dg)
+        dg = self._exporter_allow_filter(dg).select("exporter_ip", "payload")
         if self.flavor == "sflow":
-            df = canonical_flows(
-                decode_sflow_any(
-                    dg.select("exporter_ip", "payload"),
-                    **self._sflow_decode_opts(),
-                )
-            )
+            df = canonical_flows(decode_sflow_any(dg, **self._sflow_decode_opts()))
         else:
-            seed = self._templates_seed()
-            if not streaming:
-                # batch drains: pre-learn the spool's own templates and
-                # broadcast them (decode_any_twophase's shape) so a v9/
-                # IPFIX template and its data records decode even when
-                # the spool files land in different partitions — the
-                # per-partition in-stream cache alone needs co-located,
-                # ordered datagrams (decode_v9's contract). In-stream
-                # definitions still overwrite seeds (fresher wins).
-                from pmacct_spark.streaming.decode import (
-                    learn_template_cache,
+            df = canonical_flows(
+                decode_any(
+                    dg,
+                    seed_templates=self._templates_seed(),
+                    **self._netflow_decode_opts(),
                 )
-
-                try:
-                    learned = learn_template_cache(dg)
-                except ValueError:
-                    learned = {}  # conflicting redefinitions: in-stream
-                if learned:
-                    seed = {**(seed or {}), **learned}
-            decoded = decode_any(
-                dg.select("exporter_ip", "payload"),
-                seed_templates=seed,
-                **self._netflow_decode_opts(),
             )
-            if not streaming and not self.conf.getbool(
-                "nfacctd_ignore_exporter_address"
-            ):
-                from pmacct_spark.streaming.decode import decode_options
-
-                decoded = self._join_exporter_ids(
-                    decoded,
-                    decode_options(dg.select("exporter_ip", "payload")),
-                )
-            df = canonical_flows(decoded)
-            df = self._account_options_union(dg, df)
-        return self._enrich(df, streaming, rib=rib)
+            customs = self._account_customs()
+            df = self._account_options_union(
+                df, decode_options_data(dg, customs) if customs else None
+            )
+        return self._enrich(df, streaming=True)
 
     def _enrich(
         self,
@@ -1158,7 +1121,8 @@ class Daemon:
     ) -> DataFrame:
         """Maps, then BGP/BMP and peer-AS enrichment of canonical flows.
         ``options`` are the decoded options rows the sampling rates are
-        learned from (None: decode them from the live spool). ``rib``
+        learned from (None: the streaming plans decode them from the
+        live spool). ``rib``
         is the RIB snapshot batch callers read (:meth:`_rib_snapshot`);
         streaming plans pass None and read the live RIB."""
         df = self._maps(df, options)
@@ -1231,14 +1195,10 @@ class Daemon:
             .drop("__sock", "__exp_id")
         )
 
-    def _store_sync(self, files: list[str], lease: Lease):
+    def _store_sync(self, files: list[str], lease: Lease) -> Snapshot:
         """Sync the decoded-flow store with ``files`` (the live spool)
-        under ``lease`` and return its snapshot, or None when the batch
-        path must take the whole-spool decode instead: an empty spool,
-        a flavor the store does not hold, or conflicting template
-        definitions. Callers hold ``_compact_lock``."""
-        if not files or self.flavor not in ("netflow", "sflow"):
-            return None
+        under ``lease`` and return its snapshot: the batch path's one
+        decode route. Callers hold ``_compact_lock``."""
         allow = self._allow_entries()
         sflow = self.flavor == "sflow"
         opts = (
@@ -1248,6 +1208,7 @@ class Daemon:
             self.flavor,
             None if allow is None else tuple(allow),
             tuple(sorted(opts.items())),
+            tuple(self._account_customs()),
         )
         return self._store.sync(
             files,
@@ -1258,23 +1219,25 @@ class Daemon:
             lease,
         )
 
-    def _tagged_datagrams(self, tags: dict) -> DataFrame:
+    def _tagged_datagrams(self, tags: dict, by_datagram: bool = False) -> DataFrame:
         """One scan of the spool files in ``tags`` (``{file: tag}``),
-        each datagram carrying its file's tag as column ``FID``. Files
-        are told apart by name: one spool directory holds them all."""
+        each datagram carrying its file's tag as column ``FID`` (with
+        ``by_datagram``, ``tag << 32 | seqno``: each datagram tagged
+        apart, in spool order). Files are told apart by name: one spool
+        directory holds them all. No file: an empty frame."""
         import os as _os
 
-        tag_of = F.create_map(
+        tag = F.create_map(
             *[
                 v
                 for f, t in tags.items()
                 for v in (F.lit(_os.path.basename(f)), F.lit(t))
             ]
-        )
+        )[F.col("_metadata.file_name")] if tags else F.lit(None).cast("int")
+        if by_datagram:
+            tag = tag.cast("long") * (1 << 32) + F.col("seqno")
         return self._datagrams(list(tags)).select(
-            "exporter_ip",
-            "payload",
-            tag_of[F.col("_metadata.file_name")].alias(FID),
+            "exporter_ip", "payload", tag.alias(FID)
         )
 
     def _learn_spool_files(self, files: list[str]) -> dict:
@@ -1291,14 +1254,19 @@ class Daemon:
 
     def _decode_spool_files(self, fids: dict, templates: dict):
         """The store's rows for the spool files in ``fids``, decoded in
-        one pass under the merged ``templates``: their flows
-        (allow-listed exporters only) and, for NetFlow/IPFIX, their
-        options records; every row carries its file's id."""
+        one pass under ``templates``: their flows (allow-listed
+        exporters only) and the other row kinds. NetFlow/IPFIX has
+        options records and, under nfacctd_account_options, option
+        records accounted as data rows (allow-listed); sFlow has
+        counter samples (allow-listed). Every row carries its file's
+        id."""
         from pmacct_spark.streaming.decode import (
             OPTIONS_SCHEMA,
             decode_any,
             decode_options,
+            decode_options_data,
             decode_sflow_any,
+            decode_sflow_counters,
         )
 
         dg = self._tagged_datagrams(fids)
@@ -1306,48 +1274,39 @@ class Daemon:
         if self.flavor == "sflow":
             return (
                 decode_sflow_any(allowed, by=FID, **self._sflow_decode_opts()),
-                None,
+                {"counters": decode_sflow_counters(allowed, by=FID)},
             )
         seed = templates or None
         flows = decode_any(
             allowed, seed_templates=seed, by=FID, **self._netflow_decode_opts()
         )
-        if not _has_options_template(templates):
-            # no options template to decode options records with: an
-            # empty frame planned in the JVM (createDataFrame([]) would
-            # run a Python task per partition)
-            return flows, self.spark.range(0).select(
-                *[
-                    F.lit(None).cast(f.dataType).alias(f.name)
-                    for f in OPTIONS_SCHEMA.fields
-                ]
+        # no options template to decode options records with: no pass
+        other = {
+            "options": decode_options(dg, seed_templates=seed, by=FID)
+            if _has_options_template(templates)
+            else empty_frame(self.spark, OPTIONS_SCHEMA)
+        }
+        customs = self._account_customs()
+        if customs:
+            other["account"] = decode_options_data(
+                allowed, customs, seed_templates=seed, by=FID
             )
-        return flows, decode_options(dg, seed_templates=seed, by=FID)
+        return flows, other
 
     def _enriched_flows(
         self,
-        snap,
-        dg: DataFrame,
+        snap: Snapshot,
         rib: RibSnapshot | None,
         lease: Lease,
         files: list[str] | None = None,
     ) -> DataFrame:
         """Enriched flows of ``files`` (default: the whole snapshot),
-        read under ``lease``; ``dg`` are those files' datagrams. When
-        maps and enrichment put a join above the decoded rows, these
-        come from the store's enriched layer: each file is enriched
-        once per :meth:`_enrich_key`, so a drain with no new file and
-        no key change builds no enrichment plan. Otherwise the frame is
-        built lazily per call (:meth:`_enrich_snapshot`), as it is under
-        nfacctd_account_options, whose options-data rows are decoded
-        from the whole live spool per drain."""
-        if self.conf.getbool("nfacctd_account_options"):
-            self._store.note(
-                "enriched rows not stored: nfacctd_account_options "
-                "decodes options-data rows from the live spool per drain",
-                logging.INFO,
-            )
-            return self._enrich_snapshot(snap, dg, files, rib)
+        read under ``lease``. When maps and enrichment put a join above
+        the decoded rows, these come from the store's enriched layer:
+        each file is enriched once per :meth:`_enrich_key`, so a drain
+        with no new file and no key change builds no enrichment plan.
+        Otherwise the frame is built lazily per call
+        (:meth:`_enrich_snapshot`)."""
         if rib is not None:
             rib = _replace(
                 rib,
@@ -1358,14 +1317,14 @@ class Daemon:
             snap,
             self._enrich_key(snap, rib),
             lambda todo, tmp: self._enrich_snapshot(
-                snap, self._datagrams(todo), todo,
-                None if rib is None else _replace(rib, lease=tmp), fid=True,
+                snap, todo, None if rib is None else _replace(rib, lease=tmp),
+                fid=True,
             ),
             lease,
             files,
         )
         if df is None:
-            df = self._enrich_snapshot(snap, dg, files, rib)
+            df = self._enrich_snapshot(snap, files, rib)
         return df
 
     def _enrich_key(self, snap, rib: RibSnapshot | None) -> tuple:
@@ -1406,18 +1365,17 @@ class Daemon:
 
     def _enrich_snapshot(
         self,
-        snap,
-        dg: DataFrame,
+        snap: Snapshot,
         files: list[str] | None = None,
         rib: RibSnapshot | None = None,
         fid: bool = False,
     ) -> DataFrame:
         """Enriched flows of ``files`` (default: the whole snapshot)
-        from the store's decoded rows, built lazily; ``dg`` are those
-        files' datagrams. The exporter-id join reads the same files'
-        options rows; the sampling rates read every live file's.
-        ``rib``: the RIB snapshot (see :meth:`_enrich`). With ``fid``,
-        each row keeps its file's id in column ``FID``."""
+        from the store's decoded rows, built lazily. The exporter-id
+        join reads the same files' options rows; the sampling rates
+        read every live file's. ``rib``: the RIB snapshot (see
+        :meth:`_enrich`). With ``fid``, each row keeps its file's id in
+        column ``FID``."""
         decoded = snap.flows(files, fid)
         if self.flavor == "sflow":
             return self._enrich(
@@ -1427,8 +1385,9 @@ class Daemon:
             "nfacctd_ignore_exporter_address"
         ) and self._has_exporter_ids(snap, files):
             decoded = self._join_exporter_ids(decoded, snap.options(files))
-        df = canonical_flows(decoded)
-        df = self._account_options_union(self._exporter_allow_filter(dg), df)
+        df = self._account_options_union(
+            canonical_flows(decoded), snap.rows("account", files, fid)
+        )
         return self._enrich(
             df,
             streaming=False,
@@ -1463,10 +1422,7 @@ class Daemon:
         reads the stores, and the scratch its enrichment stages, under
         the caller's ``lease``."""
         if streaming:
-            return self._enrich_datagrams(
-                self.spool.stream(self.spark), streaming=True
-            )
-        self._ingest_replicated_templates()
+            return self._enrich_datagrams(self.spool.stream(self.spark))
         # snapshot the live file list, the stores and the compacted side
         # table under one lock: a concurrent tick's maybe_compact_spool
         # could otherwise retire a file after it was listed and append
@@ -1474,19 +1430,17 @@ class Daemon:
         # that file's flows for one drain. Syncing the RIB and the
         # enriched rows under it too keeps concurrent drains and ticks
         # in one order, so none brings back files or a RIB that a
-        # newer one already retired.
+        # newer one already retired; the replicated templates are
+        # learned under it, so each templates-spool file once.
         with self._compact_lock:
+            self._ingest_replicated_templates()
             files = self._live_spool_files()
             comp = self._compacted_table("flows")
             snap = self._store_sync(files, lease)
-            rib = self._rib_snapshot(lease)
-            live = self._datagrams(files)
-            if snap is not None:
-                df = self._enriched_flows(snap, live, rib, lease)
-        self._forward_templates(live)
-        if snap is None:
-            df = self._enrich_datagrams(live, streaming=False, rib=rib)
-        elif self.flavor == "netflow":
+            df = self._enriched_flows(snap, self._rib_snapshot(lease), lease)
+        if self.flavor == "netflow":
+            if self.conf.get("nfacctd_templates_receiver"):
+                self._forward_templates(self._datagrams(files))
             self._persist_templates(snap.templates)
         if comp is not None:
             df = df.unionByName(comp, allowMissingColumns=True)
@@ -2120,13 +2074,23 @@ class Daemon:
             )
         return customs
 
+    def _account_customs(self) -> list:
+        """The aggregate_primitives entries option records are accounted
+        with under nfacctd_account_options; [] when it is off."""
+        if self.flavor != "netflow" or not self.conf.getbool(
+            "nfacctd_account_options"
+        ):
+            return []
+        return self._custom_primitives()
+
     def _account_options_union(
-        self, dg: DataFrame, df: DataFrame
+        self, df: DataFrame, opts: DataFrame | None
     ) -> DataFrame:
         """nfacctd_account_options (CONFIG-KEYS:2083-2102): option
         records enter the accounting channel as DATA rows (reference
         exec_plugins on option records, src/nfacctd.c:2443), with
-        aggregate_primitives supplying their columns. Every row gains
+        aggregate_primitives supplying their columns: ``opts``, the
+        decoded option rows (None: none are accounted). Every row gains
         ``flow_type`` (flows via NF_evaluate_flow_type semantics,
         option rows pre-stamped 200) so pre_tag_map
         ``sample_type=flow|option`` + per-plugin pre_tag_filter split
@@ -2135,24 +2099,16 @@ class Daemon:
         when the pre_tag_map carries sample_type rules but
         account_options is off, matching the reference where the
         pretag handler works on any record type."""
-        account = self.conf.getbool("nfacctd_account_options")
         ptm = self._pretag_map()
-        if not account and (ptm is None or not ptm.sample_type):
+        if not self.conf.getbool("nfacctd_account_options") and (
+            ptm is None or not ptm.sample_type
+        ):
             return df
-        from pmacct_spark.streaming.decode import (
-            decode_options_data,
-            flow_type_column,
-        )
+        from pmacct_spark.streaming.decode import flow_type_column
 
         df = df.withColumn("flow_type", flow_type_column(df))
-        if not account:
+        if opts is None:
             return df
-        customs = self._custom_primitives()
-        if not customs:
-            return df
-        opts = decode_options_data(
-            dg.select("exporter_ip", "payload"), customs
-        )
         opts = opts.withColumn(
             "peer_ip_src", F.col("exporter_ip")
         ).withColumn("peer_src_ip", F.col("exporter_ip"))
@@ -2174,7 +2130,7 @@ class Daemon:
         find_id / sampling-map passes tag and renormalize records
         before plugin fan-out (src/pretag.c:1117). ``options`` are the
         live spool's decoded options rows, for the learned sampling
-        rates (None: decode them from the spool)."""
+        rates (None: the streaming plans decode them from the spool)."""
         ptm = self._pretag_map()
         if ptm is not None:
             df = df.withColumns(ptm.columns)
@@ -2356,6 +2312,13 @@ class Daemon:
                 )
         return df
 
+    def _flush_spools(self) -> None:
+        """Make everything received so far readable before planning:
+        the flow, replicated-templates and BGP/BMP session spools."""
+        for sp in (self.spool, self.tmpl_spool, self.bgp_spool, self.bmp_spool):
+            if sp is not None:
+                sp.flush()
+
     def run_available(self, streaming: bool = True) -> dict[str, DataFrame]:
         """Process everything received so far through EVERY configured
         plugin channel (availableNow semantics) and deliver to each
@@ -2368,11 +2331,7 @@ class Daemon:
             stream_aggregation,
         )
 
-        # make everything received so far readable before planning
-        self.spool.flush()
-        for sp in (self.bgp_spool, self.bmp_spool):
-            if sp is not None:
-                sp.flush()
+        self._flush_spools()
         results: dict[str, DataFrame] = {}
         ptype_by_name = self._ptype_by_name()
 
@@ -2384,9 +2343,9 @@ class Daemon:
         # Each spool file is decoded ONCE, into the decoded-flow store
         # (the reference decodes once and fans out to plugins,
         # src/plugin_hooks.c); every batch channel reads the store
-        # directly. Only when maps/enrichment put a join above the
-        # store (or the whole-spool path runs the Python decode) is the
-        # drain's frame staged, so N channels don't repeat that work.
+        # directly. Only when maps/enrichment put a join or a Python
+        # node above the stored rows is the drain's frame staged, so N
+        # channels don't repeat that work.
         batch_df = None
         n_batch = sum(1 for c in self.channels.values() if not is_stream(c))
         for name, cfg in self.channels.items():
@@ -2811,47 +2770,52 @@ class Daemon:
             seen[family] = gen
             self._msglog_gen = seen
         # sFlow counter log (sfacctd_counter_file, src/sfacctd.c:2366):
-        # counter samples ride the same UDP spool as the flow samples
+        # counter samples ride the same UDP spool as the flow samples.
+        # The stored rows are read under one pinned lease, held until
+        # every counter sink is written.
         cpath = self.conf.get("sfacctd_counter_file")
-        if cpath and self.flavor == "sflow":
-            # sfacctd_counter_output (CONFIG-KEYS:2196): json is the
-            # only format the reference supports too — reject typos
-            # instead of silently writing json under a wrong label
-            cfmt = str(
-                self.conf.get("sfacctd_counter_output", default="json")
-                or "json"
-            ).lower()
-            if cfmt != "json":
-                raise ValueError(
-                    f"sfacctd_counter_output {cfmt!r} unsupported "
-                    "(json only, as in the reference)"
-                )
-            from pmacct_spark.sinks.msglog import write_counter_log
-
-            write_counter_log(self._sflow_counters(), cpath)
-            wrote.append(cpath)
         ctopic = self.conf.get("sfacctd_counter_kafka_topic")
-        if ctopic and self.flavor == "sflow":
-            from pmacct_spark.sinks.msglog import counter_log_kafka_frames
-            from pmacct_spark.sources.kafka_wire import produce_frames
+        if self.flavor == "sflow" and (cpath or ctopic):
+            with self._scratch.lease(pin=True) as lease:
+                ctrs = self._sflow_counters(lease)
+                if cpath:
+                    # sfacctd_counter_output (CONFIG-KEYS:2196): json is the
+                    # only format the reference supports too — reject typos
+                    # instead of silently writing json under a wrong label
+                    cfmt = str(
+                        self.conf.get("sfacctd_counter_output", default="json")
+                        or "json"
+                    ).lower()
+                    if cfmt != "json":
+                        raise ValueError(
+                            f"sfacctd_counter_output {cfmt!r} unsupported "
+                            "(json only, as in the reference)"
+                        )
+                    from pmacct_spark.sinks.msglog import write_counter_log
 
-            khost = str(
-                self.conf.get(
-                    "sfacctd_counter_kafka_broker_host", default="127.0.0.1"
-                )
-                or "127.0.0.1"
-            )
-            kport = int(
-                self.conf.get("sfacctd_counter_kafka_broker_port", default=9092)
-                or 9092
-            )
-            produce_frames(
-                counter_log_kafka_frames(self._sflow_counters(), str(ctopic)),
-                khost,
-                kport,
-                **self._kafka_wire_opts("sfacctd_counter"),
-            )
-            wrote.append(f"kafka://{khost}:{kport}/{ctopic}")
+                    write_counter_log(ctrs, cpath)
+                    wrote.append(cpath)
+                if ctopic:
+                    from pmacct_spark.sinks.msglog import counter_log_kafka_frames
+                    from pmacct_spark.sources.kafka_wire import produce_frames
+
+                    khost = str(
+                        self.conf.get(
+                            "sfacctd_counter_kafka_broker_host", default="127.0.0.1"
+                        )
+                        or "127.0.0.1"
+                    )
+                    kport = int(
+                        self.conf.get("sfacctd_counter_kafka_broker_port", default=9092)
+                        or 9092
+                    )
+                    produce_frames(
+                        counter_log_kafka_frames(ctrs, str(ctopic)),
+                        khost,
+                        kport,
+                        **self._kafka_wire_opts("sfacctd_counter"),
+                    )
+                    wrote.append(f"kafka://{khost}:{kport}/{ctopic}")
         # telemetry msglog (telemetry_daemon_msglog_file,
         # src/telemetry/telemetry_logdump.c): the pmtelemetryd flavor
         # wraps each received message in the ietf-telemetry-message
@@ -3165,10 +3129,7 @@ class _ReplanLoop:
             if due:
                 d._last_spool_flush = now
         if due:
-            d.spool.flush()
-            for sp in (d.bgp_spool, d.bmp_spool):
-                if sp is not None:
-                    sp.flush()
+            d._flush_spools()
             # rotate on the purge cadence: retired spool files' stored
             # rows are enriched once into a columnar side table, so the
             # live file count — and with it the per-tick enrichment

@@ -750,7 +750,10 @@ def _decode_option_records_custom(
 
 
 def decode_options_data(
-    datagrams: DataFrame, customs: list["CustomIE"]
+    datagrams: DataFrame,
+    customs: list["CustomIE"],
+    seed_templates: dict | None = None,
+    by: str | None = None,
 ) -> DataFrame:
     """nfacctd_account_options (CONFIG-KEYS:2083): decode option
     records from v9/IPFIX datagrams as accounted DATA rows, one typed
@@ -760,7 +763,10 @@ def decode_options_data(
     Flow/data records in the same datagrams are skipped — they keep
     flowing through decode_any/decode_any_ext; the daemon unions the
     two row streams into one plugin channel and pre_tag_map
-    ``sample_type`` splits them (reference src/nfacctd.c:2443)."""
+    ``sample_type`` splits them (reference src/nfacctd.c:2443).
+
+    ``seed_templates`` pre-populates every partition's template cache
+    and ``by`` is carried along, as in :func:`decode_any`."""
     cmap = {c.key: c for c in customs}
     fields = [
         T.StructField("exporter_ip", T.StringType()),
@@ -776,32 +782,19 @@ def decode_options_data(
             str_cols.add(c.name)
     schema = T.StructType(fields)
     frozen_str = frozenset(str_cols)
+    seeded = _seeded(datagrams, seed_templates)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        templates: dict = {}
+        templates = seeded()
         cols = [f.name for f in schema.fields]
-        for pdf in batches:
-            rows: list = []
-            for exporter, payload in zip(pdf["exporter_ip"], pdf["payload"]):
-                b = bytes(payload)
-                ver = int.from_bytes(b[:2], "big") if len(b) >= 2 else 0
-                if ver == 9:
-                    rows.extend(
-                        _v9_packet(
-                            exporter, b, templates, want="opt_data",
-                            customs=cmap,
-                        )
-                    )
-                elif ver == 10:
-                    rows.extend(
-                        _v10_packet(
-                            exporter, b, templates, want="opt_data",
-                            customs=cmap,
-                        )
-                    )
-            yield _flow_frame(rows, cols, str_cols=frozen_str)
 
-    return datagrams.mapInPandas(gen, schema)
+        def options(pdf: pd.DataFrame) -> pd.DataFrame:
+            rows = _v9_v10_records(pdf, templates, want="opt_data", customs=cmap)
+            return _flow_frame(rows, cols, str_cols=frozen_str)
+
+        yield from _per_tag(batches, by, options)
+
+    return datagrams.mapInPandas(gen, _tagged_schema(schema, datagrams, by))
 
 
 def flow_type_column(df: DataFrame) -> Column:
@@ -1236,6 +1229,31 @@ class _RecordingTemplates(dict):
         super().__setitem__(key, value)
 
 
+def _seeded(datagrams: DataFrame, seed_templates: dict | None):
+    """A zero-argument function returning a fresh template cache
+    holding ``seed_templates`` (broadcast once), for each partition."""
+    bc = (
+        datagrams.sparkSession.sparkContext.broadcast(seed_templates)
+        if seed_templates
+        else None
+    )
+    return lambda: {tuple(k): v for k, v in bc.value.items()} if bc else {}
+
+
+def _v9_v10_records(pdf: pd.DataFrame, templates: dict, **kw) -> list:
+    """The records of the v9 and IPFIX datagrams in ``pdf``, in order,
+    each datagram decoded by ``_v9_packet`` / ``_v10_packet`` against
+    ``templates`` with ``kw``; other versions are skipped."""
+    out: list = []
+    for exporter, payload in zip(pdf["exporter_ip"], pdf["payload"]):
+        b = bytes(payload)
+        ver = int.from_bytes(b[:2], "big") if len(b) >= 2 else 0
+        if ver in (9, 10):
+            packet = _v9_packet if ver == 9 else _v10_packet
+            out.extend(packet(exporter, b, templates, **kw))
+    return out
+
+
 def _tagged_schema(
     schema: T.StructType, datagrams: DataFrame, by: str | None
 ) -> T.StructType:
@@ -1274,13 +1292,7 @@ def extract_template_defs(
 
     def defs(pdf: pd.DataFrame) -> pd.DataFrame:
         tmpls = _RecordingTemplates()
-        for exporter, payload in zip(pdf["exporter_ip"], pdf["payload"]):
-            b = bytes(payload)
-            ver = int.from_bytes(b[:2], "big") if len(b) >= 2 else 0
-            if ver == 9:
-                _v9_packet(exporter, b, tmpls, want="templates")
-            elif ver == 10:
-                _v10_packet(exporter, b, tmpls, want="templates")
+        _v9_v10_records(pdf, tmpls, want="templates")
         rows = [
             (exp, sid, tid, json.dumps(spec))
             for (exp, sid, tid), spec in tmpls.defs
@@ -1376,12 +1388,6 @@ def load_templates_file(path: str) -> dict:
     return out
 
 
-def _despec(spec):
-    """JSON round trip turns tuples into lists; normalize a spec back
-    into the walker's shape (nested lists unpack identically)."""
-    return spec
-
-
 def decode_any_twophase(
     datagrams: DataFrame,
     parallelism: int | None = None,
@@ -1397,55 +1403,12 @@ def decode_any_twophase(
     ``seed_templates`` merges under the capture's own definitions
     (in-capture wins); ``templates_file`` persists the merged cache
     after learning — together the nfacctd_templates_file cycle."""
-    spark = datagrams.sparkSession
     cache = {**(seed_templates or {}), **learn_template_cache(datagrams)}
     if templates_file:
         save_templates_file(cache, templates_file)
-    bc = spark.sparkContext.broadcast(cache)
     if parallelism:
         datagrams = datagrams.repartition(parallelism)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        templates = {tuple(k) if not isinstance(k, tuple) else k: _despec(v)
-                     for k, v in bc.value.items()}
-        compiled: dict = {}
-        cols = [f.name for f in FLOW_SCHEMA.fields]
-        for pdf in batches:
-            items: list = []
-            acc = _V5Acc()
-            for exporter, payload in zip(pdf["exporter_ip"], pdf["payload"]):
-                b = bytes(payload)
-                ver = int.from_bytes(b[:2], "big") if len(b) >= 2 else 0
-                if ver == 5:
-                    acc.scan(exporter, b)
-                elif ver == 9:
-                    items.extend(
-                        _v9_packet(
-                            exporter, b, templates, compiled=compiled,
-                            pre_checks=pre_checks,
-                        )
-                    )
-                elif ver == 10:
-                    items.extend(
-                        _v10_packet(
-                            exporter, b, templates, compiled=compiled,
-                            pre_checks=pre_checks,
-                        )
-                    )
-            frame = _flow_frame(items, cols)
-            v5f = acc.frame(cols)
-            if v5f is not None:
-                frame = (
-                    pd.concat([frame, v5f], ignore_index=True)
-                    if len(frame)
-                    else v5f
-                )
-                for c in cols:
-                    if frame[c].dtype == "float64":
-                        frame[c] = frame[c].astype("Int64")
-            yield frame
-
-    return datagrams.mapInPandas(gen, FLOW_SCHEMA)
+    return decode_any(datagrams, seed_templates=cache, pre_checks=pre_checks)
 
 
 # ---------------------------------------------------------------------------
@@ -1638,16 +1601,10 @@ def decode_any(
     instead of dropping until the next template refresh. In-stream
     definitions still overwrite seeds (fresher wins). ``by`` names a
     datagram column every decoded row carries along."""
-    bc = (
-        datagrams.sparkSession.sparkContext.broadcast(seed_templates)
-        if seed_templates
-        else None
-    )
+    seeded = _seeded(datagrams, seed_templates)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        templates: dict[tuple[str, int, int], list[tuple[int, int]]] = (
-            {tuple(k): v for k, v in bc.value.items()} if bc else {}
-        )
+        templates = seeded()
         compiled: dict = {}
         cols = [f.name for f in FLOW_SCHEMA.fields]
 
@@ -1757,24 +1714,9 @@ def decode_any_custom(
         compiled: dict = {}
         cols = [f.name for f in schema.fields]
         for pdf in batches:
-            items: list = []
-            for exporter, payload in zip(pdf["exporter_ip"], pdf["payload"]):
-                b = bytes(payload)
-                ver = int.from_bytes(b[:2], "big") if len(b) >= 2 else 0
-                if ver == 9:
-                    items.extend(
-                        _v9_packet(
-                            exporter, b, templates,
-                            compiled=compiled, customs=cmap,
-                        )
-                    )
-                elif ver == 10:
-                    items.extend(
-                        _v10_packet(
-                            exporter, b, templates,
-                            compiled=compiled, customs=cmap,
-                        )
-                    )
+            items = _v9_v10_records(
+                pdf, templates, compiled=compiled, customs=cmap
+            )
             yield _flow_frame(items, cols, str_cols=frozen_str)
 
     return datagrams.mapInPandas(gen, schema)
@@ -1799,37 +1741,16 @@ def decode_options(
 
     ``seed_templates`` pre-populates every partition's template cache
     and ``by`` is carried along, as in :func:`decode_any`."""
-    bc = (
-        datagrams.sparkSession.sparkContext.broadcast(seed_templates)
-        if seed_templates
-        else None
-    )
+    seeded = _seeded(datagrams, seed_templates)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        templates: dict = (
-            {tuple(k): v for k, v in bc.value.items()} if bc else {}
-        )
+        templates = seeded()
         cols = [f.name for f in OPTIONS_SCHEMA.fields]
 
         def options(pdf: pd.DataFrame) -> pd.DataFrame:
-            rows: list[dict] = []
-            for exporter, payload in zip(pdf["exporter_ip"], pdf["payload"]):
-                b = bytes(payload)
-                ver = int.from_bytes(b[:2], "big") if len(b) >= 2 else 0
-                if ver == 9:
-                    rows.extend(
-                        _v9_packet(
-                            exporter, b, templates, want="options",
-                            opt_scope_check=opt_scope_check,
-                        )
-                    )
-                elif ver == 10:
-                    rows.extend(
-                        _v10_packet(
-                            exporter, b, templates, want="options",
-                            opt_scope_check=opt_scope_check,
-                        )
-                    )
+            rows = _v9_v10_records(
+                pdf, templates, want="options", opt_scope_check=opt_scope_check
+            )
             return pd.DataFrame(
                 [[r.get(c) for c in cols] for r in rows], columns=cols
             )
@@ -2287,21 +2208,29 @@ def _sflow_datagram_counters(exporter: str, payload: bytes) -> list[dict]:
     return out
 
 
-def decode_sflow_counters(datagrams: DataFrame) -> DataFrame:
+def decode_sflow_counters(
+    datagrams: DataFrame, by: str | None = None
+) -> DataFrame:
     """Decode sFlow counter samples (generic interface counters) from
-    v2/v4/v5 datagrams into per-interface counter rows."""
+    v2/v4/v5 datagrams into per-interface counter rows. ``by`` is
+    carried along, as in :func:`decode_any`."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cols = [f.name for f in SFLOW_COUNTER_SCHEMA.fields]
-        for pdf in batches:
+
+        def counters(pdf: pd.DataFrame) -> pd.DataFrame:
             rows: list[dict] = []
             for exporter, payload in zip(pdf["exporter_ip"], pdf["payload"]):
                 rows.extend(_sflow_datagram_counters(exporter, bytes(payload)))
-            yield pd.DataFrame(
+            return pd.DataFrame(
                 [[r.get(c) for c in cols] for r in rows], columns=cols
             )
 
-    return datagrams.mapInPandas(gen, SFLOW_COUNTER_SCHEMA)
+        yield from _per_tag(batches, by, counters)
+
+    return datagrams.mapInPandas(
+        gen, _tagged_schema(SFLOW_COUNTER_SCHEMA, datagrams, by)
+    )
 
 
 def decode_sflow_any(

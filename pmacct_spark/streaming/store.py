@@ -10,8 +10,8 @@ chains. Every consumer takes a :class:`Lease` from it and registers
 what it reads:
 
 - a batch drain takes an unpinned lease, and counts as one drain;
-- a replan tick or a compaction takes a pinned lease and releases it
-  once, when its action completes.
+- a replan tick, a compaction or a counter-log write takes a pinned
+  lease and releases it once, when its action completes.
 
 A frame is released, through ``operators.staging.release``, once its
 producer has retired it, no pinned lease reads it, and two more
@@ -21,28 +21,34 @@ releases the rest, except what is still inside that window: that goes
 with the staging module's exit cleanup.
 
 :class:`DecodedStore` keeps two staged layers of per-spool-file
-segments, each built under one key; a segment holds the rows of every
-file one update covered, stamped with a per-file id (``FID``), and a
-key change retires every segment of its layer.
+segments; a segment holds the rows of every file one update covered,
+stamped with a per-file id (``FID``).
 
-- The decoded layer. A batch drain or replan tick syncs it with the
-  live spool files: files it has not seen are decoded once, together
-  in one pass, into one segment of their flow rows and options rows,
-  and the store keeps each file's template definitions on the driver.
-  Its key is the decode key: the merged template set, the seed and
-  the daemon's decode conf. When two live files define one template
-  with different layouts, :meth:`DecodedStore.sync` returns None and
-  the caller takes the ordered whole-spool path.
+- The decoded layer. A batch drain, replan tick, compaction or counter
+  log write syncs it with the live spool files, and it always answers:
+  files it has not seen are decoded once, into segments of their rows
+  of every kind (flows, options records, option records accounted as
+  data rows, sFlow counter samples; :data:`KINDS`), and the store keeps
+  each file's template definitions on the driver. Each file decodes
+  under the template set in force for it: a key every live file
+  agrees on has that layout, and where two files define one key with
+  different layouts, each file takes the latest definition at or
+  before it, in file order, like the reference's per-(exporter,
+  domain, id) template cache. Files sharing one set are decoded in
+  one pass, into one segment keyed on the set, the seed and the
+  daemon's decode conf; a segment is retired when its files' key
+  changes. Definitions of retired files stay in force. A spool with
+  no file gives empty frames of every kind.
 - The enriched layer, above it (:meth:`DecodedStore.enriched`): the
   rows maps and enrichment make of the decoded ones, ``FID`` kept.
   Files no segment covers are enriched together, in one call and one
-  ``stage()``. Its key is the decode key plus what the caller's
+  ``stage()``. Its key is the decode conf plus what the caller's
   enrichment reads (the daemon's ``_enrich_key``: the RIB snapshot,
   the maps generation, re-read map files, the RTR feed, options rows
-  read across files), so a drain with no new file and no key change
-  builds no enrichment plan. Rows are stored only when their plan
-  would recompute a join or a Python node; otherwise the caller keeps
-  its lazy frame.
+  read across files), and a re-decoded file's rows carry a new id, so
+  a drain with no new file and no key change builds no enrichment
+  plan. Rows are stored only when their plan would recompute a join
+  or a Python node; otherwise the caller keeps its lazy frame.
 
 Work that crosses files (the exporter-id join, the learned sampling
 rates) is the caller's: it reads the snapshot, and the enriched layer
@@ -71,7 +77,11 @@ from pyspark.sql import functions as F
 log = logging.getLogger("pmacct_spark")
 
 FID = "__fid"  # spool-file id stamped on every stored row
-KIND = "__kind"  # 0: flow row, 1: options row
+KIND = "__kind"  # a stored decoded row's kind, its index in KINDS
+# the row kinds of the decoded layer: flows, options-data records
+# (sampling expositions, exporter ids), option records accounted as
+# data rows (nfacctd_account_options), sFlow counter samples
+KINDS = ("flows", "options", "account", "counters")
 
 
 class Lease:
@@ -191,48 +201,39 @@ class Retention:
 class _Segment:
     df: DataFrame  # staged rows of every file in ``fids``
     fids: dict  # spool file -> id on its rows (column ``FID``)
-    flow_cols: list  # the flow rows' columns, ``FID`` left out
-    # the options rows' columns; None: a flavor without options
-    # records, or an enriched segment
-    opt_cols: list | None = None
+    cols: dict  # row kind -> that kind's columns, ``FID`` left out
+    key: object = None  # a decoded segment's decode key
 
 
 class _Layer:
-    """Staged per-spool-file segments built under one key: what the
-    decoded and the enriched layers of :class:`DecodedStore` share.
+    """Staged per-spool-file segments, each built under one key: what
+    the decoded and the enriched layers of :class:`DecodedStore` share.
     The store's lock is held around every call."""
 
     def __init__(self, owner: Retention):
         self._owner = owner
         self.segments: list[_Segment] = []
-        self.key = None  # the key the segments were built under
 
-    def rekey(self, key) -> None:
-        """Adopt ``key``; a change retires every segment."""
-        if key != self.key:
-            self.retire()
-            self.key = key
+    def covered(self) -> dict:
+        """Spool file -> the id its stored rows carry."""
+        return {f: i for s in self.segments for f, i in s.fids.items()}
 
-    def todo(self, files) -> list:
-        """The ``files`` no segment covers, in order."""
-        covered = {f for s in self.segments for f in s.fids}
-        return [f for f in files if f not in covered]
-
-    def read(self, files, lease: Lease) -> list[_Segment]:
-        """The segments holding any of ``files`` (the live spool), read
-        under ``lease``; the others are retired."""
-        live = set(files)
-        reading = [s for s in self.segments if live & s.fids.keys()]
-        gone = [s.df for s in self.segments if s not in reading]
-        self.segments = reading
-        lease.read([s.df for s in reading])
+    def keep(self, valid: Callable) -> list[_Segment]:
+        """Retire the segments ``valid(segment)`` rejects; returns them."""
+        kept = [s for s in self.segments if valid(s)]
+        gone = [s for s in self.segments if s not in kept]
+        self.segments = kept
         if gone:
-            self._owner.retire(gone)
-        return list(reading)  # later updates append to self.segments
+            self._owner.retire([s.df for s in gone])
+        return gone
 
-    def retire(self) -> None:
-        self._owner.retire([s.df for s in self.segments])
-        self.segments = []
+    def read(self, fids: dict, lease: Lease) -> list[_Segment]:
+        """The segments holding any of ``fids`` (``{file: id}``, the
+        live spool), read under ``lease``; the others are retired."""
+        live = set(fids.items())
+        self.keep(lambda s: live & s.fids.items())
+        lease.read([s.df for s in self.segments])
+        return list(self.segments)  # later updates append to self.segments
 
 
 def _union(segments, ids: set, rows: Callable) -> DataFrame | None:
@@ -264,34 +265,41 @@ class Snapshot:
     rows of exactly the spool files it was synced with, kept readable
     by the lease it was synced under."""
 
-    def __init__(self, segments, fids, templates, decode_key):
+    def __init__(self, segments, fids, templates, conf_key, empty):
         self._segments = segments
         self.fids = fids  # spool file -> id, the snapshot's files
-        self.templates = templates  # merged template defs of those files
-        self.decode_key = decode_key  # the key its segments were decoded under
+        self.templates = templates  # latest template defs, in file order
+        self.conf_key = conf_key  # the decode conf its rows were decoded under
+        self._empty = empty  # row kind -> empty frame (FID kept), no files
 
-    def _rows(self, kind: int, files, fid: bool = False) -> DataFrame | None:
+    def rows(self, kind: str, files=None, fid: bool = False) -> DataFrame | None:
+        """Decoded rows of kind ``kind`` (see :data:`KINDS`) of
+        ``files`` (default: every file); with ``fid``, each row keeps
+        its file's id in column ``FID``. None: the kind is not
+        decoded."""
         want = {self.fids[f] for f in (self.fids if files is None else files)}
+        tail = [FID] if fid else []
 
         def rows(seg, df):
-            cols = seg.flow_cols if kind == 0 else seg.opt_cols
+            cols = seg.cols.get(kind)
             if cols is None:
                 return None
-            return df.filter(F.col(KIND) == kind).select(
-                *cols, *([FID] if fid else [])
-            )
+            return df.filter(F.col(KIND) == KINDS.index(kind)).select(*cols, *tail)
 
-        return _union(self._segments, want, rows)
+        out = _union(self._segments, want, rows)
+        if out is None and kind in self._empty:
+            out = self._empty[kind]
+            out = out if fid else out.drop(FID)
+        return out
 
     def flows(self, files=None, fid: bool = False) -> DataFrame:
-        """Decoded flow rows of ``files`` (default: every file); with
-        ``fid``, each row keeps its file's id in column ``FID``."""
-        return self._rows(0, files, fid)
+        """Decoded flow rows of ``files`` (see :meth:`rows`)."""
+        return self.rows("flows", files, fid)
 
     def options(self, files=None) -> DataFrame | None:
         """Decoded options rows of ``files``; None for a flavor without
         options records."""
-        return self._rows(1, files)
+        return self.rows("options", files)
 
     def key(self, files=None) -> tuple:
         """Identifies the stored rows of ``files``: equal keys, equal
@@ -312,11 +320,14 @@ class DecodedStore:
         self._owner = owner
         self._lock = threading.Lock()
         self._defs: dict = {}  # live spool file -> template defs (None: conflicting)
-        self._decoded = _Layer(owner)  # keyed on the decode key
-        self._enriched = _Layer(owner)  # keyed on the enrichment key
+        self._retired: dict = {}  # latest template defs of retired files
+        self._decoded = _Layer(owner)  # each segment under its files' decode key
+        self._enriched = _Layer(owner)  # every segment under the enrichment key
+        self._enrich_key = None
         # whether enriched rows are stored under the enrichment key
         # (None: not decided yet)
         self._stored: bool | None = None
+        self._empty: tuple = (None, {})  # (decode conf, empty frames), no files
         self._ids = itertools.count()
         self._logged: set = set()
 
@@ -333,50 +344,76 @@ class DecodedStore:
         learn: Callable | None,
         decode: Callable,
         lease: Lease,
-    ) -> Snapshot | None:
+    ) -> Snapshot:
         """Bring the store up to ``files`` (the live spool files, oldest
         first) and return a snapshot of them, read under ``lease``.
 
         ``learn(files)`` returns ``{file: template defs}`` for new files
         (None for a file that redefines a template with another
-        layout); flavors without templates pass None.
-        ``decode(fids, templates)`` decodes the new files, given as
-        ``{file: id}``, under ``templates`` in one pass and returns
-        ``(flows, options or None)`` DataFrames whose rows carry their
-        file's id in column ``FID``. Returns None when the files'
-        template definitions conflict: the caller then takes the
-        whole-spool path."""
+        layout); flavors without templates pass None. Each file decodes
+        under the template set in force for it (:meth:`_sets`) over
+        ``seed``. ``decode(fids, templates)`` decodes files sharing one
+        set, given as ``{file: id}``, in one pass and returns ``(flows,
+        other)``: DataFrames whose rows carry their file's id in column
+        ``FID``, ``other`` None or ``{row kind: DataFrame}`` for the
+        other kinds of :data:`KINDS`. For a spool with no file,
+        ``decode({}, seed)`` is planned once per ``conf_key`` for the
+        schemas of its empty frames."""
         with self._lock:
             live = set(files)
-            self._defs = {f: d for f, d in self._defs.items() if f in live}
+            for f in [f for f in self._defs if f not in live]:
+                self._retired.update(self._defs.pop(f) or {})
             new = [f for f in files if f not in self._defs]
             if new:
                 learned = learn(new) if learn is not None else {}
                 for f in new:
                     self._defs[f] = learned.get(f, {})
-            templates = self._merged(files)
-            if templates is None:
-                return None
-            seeded = {**(seed or {}), **templates}
-            key = (conf_key, _canon(seeded))
+            seed = seed or {}
+            sets = dict(zip(files, self._sets(files)))
+            keys, canon = {}, {}  # files sharing one set share its key
+            for f, t in sets.items():
+                if id(t) not in canon:
+                    canon[id(t)] = (conf_key, _canon({**seed, **t}))
+                keys[f] = canon[id(t)]
             layer = self._decoded
-            if key != layer.key and layer.segments:
+
+            def stale(seg) -> str | None:
+                return next(
+                    (f for f in seg.fids if keys.get(f, seg.key) != seg.key), None
+                )
+
+            for seg in layer.keep(lambda s: stale(s) is None):
+                f = stale(seg)
                 self.note(
-                    "re-decoding every stored spool file: "
-                    + _change(layer.key, key),
+                    "re-decoding stored spool files: " + _change(seg.key, keys[f]),
                     logging.INFO,
                 )
-            layer.rekey(key)
-            todo = layer.todo(files)
-            if todo:
-                layer.segments.append(self._decode(todo, decode, seeded))
-            reading = layer.read(files, lease)
-            return Snapshot(
-                reading,
-                {f: fid for s in reading for f, fid in s.fids.items() if f in live},
-                templates,
-                key,
-            )
+            covered = layer.covered()
+            groups: dict = {}
+            for f in files:
+                if f not in covered:
+                    groups.setdefault(keys[f], []).append(f)
+            for key, todo in groups.items():
+                seg = self._decode(todo, decode, {**seed, **sets[todo[0]]})
+                seg.key = key
+                layer.segments.append(seg)
+            covered = layer.covered()
+            fids = {f: covered[f] for f in files}
+            reading = layer.read(fids, lease)
+            empty = {}
+            if not files:
+                if self._empty[0] != conf_key:
+                    # the decoders' schemas; their Python is never run
+                    flows, other = decode({}, seed)
+                    self._empty = (conf_key, {
+                        k: empty_frame(d.sparkSession, d.schema)
+                        for k, d in {"flows": flows, **(other or {})}.items()
+                    })
+                empty = self._empty[1]
+            templates = dict(self._retired)
+            for f in files:
+                templates.update(self._defs[f] or {})
+            return Snapshot(reading, fids, templates, conf_key, empty)
 
     def enriched(
         self,
@@ -388,14 +425,16 @@ class DecodedStore:
     ) -> DataFrame | None:
         """The enriched flow rows of ``files`` (default: every file of
         ``snap``), read under ``lease``, or None when this key's
-        enrichment is left lazy and the caller builds the frame.
+        enrichment is left lazy, or ``snap`` holds no file, and the
+        caller builds the frame.
 
         ``key`` is what enrichment reads besides the decoded rows (the
-        snapshot's decode key is added here); a change retires every
-        enriched segment. The snapshot's files that no segment covers
-        are enriched together, ``enrich(todo, tmp)``, which returns
-        their enriched rows with ``FID`` kept and registers any scratch
-        it stages with the pinned lease ``tmp``, and stored as one
+        snapshot's decode conf is added here); a change retires every
+        enriched segment, and so does a re-decode, which gives a file's
+        rows a new id. The snapshot's files that no segment covers are
+        enriched together, ``enrich(todo, tmp)``, which returns their
+        enriched rows with ``FID`` kept and registers any scratch it
+        stages with the pinned lease ``tmp``, and stored as one
         ``stage()``d segment; ``tmp`` is released once it is written.
         Enriched rows are stored only when their plan recomputes
         (``staging.plan_recomputes``: a join or a Python node above the
@@ -407,19 +446,20 @@ class DecodedStore:
         want = {snap.fids[f] for f in (snap.fids if files is None else files)}
         with self._lock:
             layer = self._enriched
-            key = (snap.decode_key, key)
-            if key != layer.key:
+            key = (snap.conf_key, key)
+            if key != self._enrich_key:
                 if layer.segments:
                     self.note(
                         "re-enriching every stored spool file: "
-                        + _enrich_change(layer.key, key),
+                        + _enrich_change(self._enrich_key, key),
                         logging.INFO,
                     )
-                layer.rekey(key)
-                self._stored = None
+                layer.keep(lambda s: False)
+                self._enrich_key, self._stored = key, None
             if self._stored is False:
                 return None
-            todo = layer.todo(snap.fids)
+            covered = layer.covered()
+            todo = [f for f, i in snap.fids.items() if covered.get(f) != i]
             if todo:
                 with self._owner.lease(pin=True) as tmp:
                     df = enrich(todo, tmp)
@@ -436,67 +476,97 @@ class DecodedStore:
                         _Segment(
                             stage(df),
                             {f: snap.fids[f] for f in todo},
-                            [c for c in df.columns if c != FID],
+                            {"flows": [c for c in df.columns if c != FID]},
                         )
                     )
             reading = layer.read(snap.fids, lease)
-        return _union(reading, want, lambda seg, df: df.select(*seg.flow_cols))
+        return _union(reading, want, lambda seg, df: df.select(*seg.cols["flows"]))
 
     def close(self) -> None:
         """Daemon stop: retire every segment (see :meth:`Retention.close`)."""
         with self._lock:
-            self._decoded.rekey(None)
-            self._enriched.rekey(None)
-            self._defs, self._stored = {}, None
+            self._decoded.keep(lambda s: False)
+            self._enriched.keep(lambda s: False)
+            self._defs, self._retired, self._stored = {}, {}, None
+            self._enrich_key, self._empty = None, (None, {})
 
-    def note(self, msg: str, level: int) -> None:
-        """Log each distinct store event once."""
-        if msg not in self._logged:
-            self._logged.add(msg)
+    def note(self, msg: str, level: int, once=None) -> None:
+        """Log each distinct store event once (``once``: what makes it
+        distinct, default the message)."""
+        once = msg if once is None else once
+        if once not in self._logged:
+            self._logged.add(once)
             log.log(level, "decoded-flow store: %s", msg)
 
     # -- internals ----------------------------------------------------
-    def _merged(self, files) -> dict | None:
-        merged: dict = {}
-        where: dict = {}
+    def _sets(self, files) -> list[dict]:
+        """The template set each of ``files`` decodes under, in order.
+        A key on whose layout the retired and live files agree has that
+        layout in every set. For a key whose layout differs between
+        them, each file takes the latest definition at or before it, in
+        file order (retired files first), and files before any takes
+        the first, as a late template decodes earlier records when
+        they agree. A file that redefines a template itself decodes
+        under the set before it, and its in-stream definitions win."""
+        layouts: dict = {k: [v] for k, v in self._retired.items()}
+        where = dict.fromkeys(self._retired, "a retired spool file")
         for f in files:
             defs = self._defs[f]
             if defs is None:
                 self.note(
-                    f"whole-spool decode: {f} redefines a template with "
-                    "a different layout",
+                    f"{f} redefines a template with a different layout: "
+                    "its own definitions decode it in stream order",
                     logging.WARNING,
                 )
-                return None
-            for k, spec in defs.items():
-                if k in merged and merged[k] != spec:
-                    self.note(
-                        f"whole-spool decode: template {k} has different "
-                        f"layouts in {where[k]} and {f}",
-                        logging.WARNING,
-                    )
-                    return None
-                merged[k] = spec
+            for k, spec in (defs or {}).items():
+                seen = layouts.setdefault(k, [])
+                if spec in seen:
+                    continue
+                seen.append(spec)
                 where.setdefault(k, f)
-        return merged
+                if len(seen) == 2:
+                    self.note(
+                        f"template {k} has different layouts in {where[k]} "
+                        f"and {f}: each spool file decodes under the latest "
+                        "definition at or before it",
+                        logging.WARNING,
+                        once=("conflict", k),
+                    )
+        agreed = {k: v[0] for k, v in layouts.items() if len(v) == 1}
+        current = {k: v[0] for k, v in layouts.items() if len(v) > 1}
+        if not current:
+            return [agreed] * len(files)
+        out = []
+        for f in files:
+            current.update(
+                (k, v) for k, v in (self._defs[f] or {}).items() if k in current
+            )
+            out.append({**agreed, **current})
+        return out
 
     def _decode(self, files, decode, templates) -> _Segment:
         from pmacct_spark.operators.staging import stage
 
         fids = {f: next(self._ids) for f in files}
-        flows, opts = decode(fids, templates)
-        parts = [flows.withColumn(KIND, F.lit(0))]
-        if opts is not None:
-            parts.append(opts.withColumn(KIND, F.lit(1)))
+        flows, other = decode(fids, templates)
+        frames = {"flows": flows, **(other or {})}
         df = functools.reduce(
-            lambda a, b: a.unionByName(b, allowMissingColumns=True), parts
+            lambda a, b: a.unionByName(b, allowMissingColumns=True),
+            [d.withColumn(KIND, F.lit(KINDS.index(k))) for k, d in frames.items()],
         )
         return _Segment(
             stage(df),
             fids,
-            [c for c in flows.columns if c != FID],
-            None if opts is None else [c for c in opts.columns if c != FID],
+            {k: [c for c in d.columns if c != FID] for k, d in frames.items()},
         )
+
+
+def empty_frame(spark, schema) -> DataFrame:
+    """An empty frame of ``schema``, planned in the JVM
+    (``createDataFrame([])`` would run a Python task per partition)."""
+    return spark.range(0).select(
+        *[F.lit(None).cast(f.dataType).alias(f.name) for f in schema.fields]
+    )
 
 
 @dataclass(eq=False)
@@ -594,9 +664,9 @@ def _canon(templates: dict) -> tuple:
 
 def _enrich_change(old, new) -> str:
     """Why the enrichment key changed, for the log line: the key is
-    ``(decode key, ((part name, value), ...))``."""
+    ``(decode conf, ((part name, value), ...))``."""
     if old[0] != new[0]:
-        return "the decode key changed"
+        return "the daemon's decode conf changed"
     was = dict(old[1])
     return ", ".join(k for k, v in new[1] if was.get(k) != v) + " changed"
 

@@ -189,24 +189,26 @@ aggregate[p]: proto
         d.stop()
 
 
-def test_account_options_keeps_the_lazy_frame(spark, tmp_path, caplog):
-    """Under nfacctd_account_options no enriched row is stored, and the
-    drain says why, once."""
-    import logging
+def test_account_options_rows_are_stored(spark, tmp_path, monkeypatch):
+    """Under nfacctd_account_options the enriched rows are stored too:
+    a warm drain decodes and enriches nothing."""
+    from tests.test_flow_store import _Calls
 
     conf = CONF + "nfacctd_account_options: true\n"
     d = _daemon(spark, tmp_path, conf)
+    counts = _Counts(monkeypatch, d)
+    calls = _Calls(monkeypatch, _Calls.ALL)
     try:
         _bgp(d, "r1", encode_bgp_update(0x0B000000, 8, "65000 65100"))
         _flows(d, "f1")
-        with caplog.at_level(logging.INFO, logger="pmacct_spark"):
-            assert _paths(d) == {"65000 65100": 300}
-            assert _paths(d) == {"65000 65100": 300}
-        assert d._store._enriched.segments == []
+        assert _paths(d) == {"65000 65100": 300}
+        assert d._store._enriched.segments != []
+        counts.take(), calls.take()
+        assert _paths(d) == {"65000 65100": 300}
+        assert counts.take() == {"lpm_join": 0, "stage": 0, "enrich": 0}
+        assert calls.none()
     finally:
         d.stop()
-    notes = [r for r in caplog.records if "nfacctd_account_options" in r.getMessage()]
-    assert len(notes) == 1
 
 
 def test_enriched_layer_stress_pins_and_single_flight(spark, monkeypatch):

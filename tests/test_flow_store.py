@@ -9,6 +9,7 @@ from __future__ import annotations
 import functools
 import logging
 import os
+import struct
 import threading
 import time
 
@@ -74,15 +75,18 @@ def _bytes(recs) -> int:
 class _Calls:
     """Counts calls to decode-module functions (the daemon imports them
     inside its methods, so patching the module attribute sees every
-    call)."""
+    call): ``names``, default NAMES; ALL is every decode and learn
+    pass the daemon runs."""
 
-    NAMES = ("decode_any", "decode_options", "learn_template_cache")
+    NAMES = ("decode_any", "learn_template_cache", "decode_options")
+    ALL = NAMES + ("decode_sflow_any", "decode_options_data", "decode_sflow_counters")
 
-    def __init__(self, monkeypatch):
+    def __init__(self, monkeypatch, names=NAMES):
         import pmacct_spark.streaming.decode as dec
 
-        self.n = dict.fromkeys(self.NAMES, 0)
-        for name in self.NAMES:
+        self.names = names
+        self.n = dict.fromkeys(names, 0)
+        for name in names:
             monkeypatch.setattr(dec, name, self._counting(name, getattr(dec, name)))
 
     def _counting(self, name, fn):
@@ -94,8 +98,26 @@ class _Calls:
         return wrapper
 
     def take(self) -> dict:
-        out, self.n = self.n, dict.fromkeys(self.NAMES, 0)
+        out, self.n = self.n, dict.fromkeys(self.names, 0)
         return out
+
+    def none(self) -> bool:
+        """No call since the last take(); takes."""
+        return not any(self.take().values())
+
+
+def _recording(d: Daemon) -> list:
+    """Records the files of every ``_decode_spool_files`` call (by
+    name)."""
+    files: list = []
+    orig = d._decode_spool_files
+
+    def recording(fids, templates):
+        files.append({os.path.basename(f) for f in fids})
+        return orig(fids, templates)
+
+    d._decode_spool_files = recording
+    return files
 
 
 def _count_stages(monkeypatch) -> list:
@@ -211,36 +233,83 @@ def test_store_compaction_neither_double_counts_nor_loses(spark, tmp_path):
     )
 
 
-def test_store_template_conflict_takes_whole_spool_path(spark, tmp_path, caplog):
+def _tmpl(tid: int, fields) -> bytes:
+    """A v9 template flowset defining ``tid`` with ``fields``."""
+    body = struct.pack("!HH", tid, len(fields)) + b"".join(
+        struct.pack("!HH", ie, ln) for ie, ln in fields
+    )
+    return struct.pack("!HH", 0, 4 + len(body)) + body
+
+
+# another layout for TID: src, dst, bytes, packets (no proto)
+OTHER = [(8, 4), (12, 4), (1, 4), (2, 4)]
+
+
+def _other(seqno: int, nbytes: int, template: bool = True) -> bytes:
+    """A v9 datagram with one OTHER-layout record of ``nbytes``."""
+    rec = struct.pack("!IIII", 0x0A0000FF, 0x0B000001, nbytes, 7)
+    data = struct.pack("!HH", TID, 4 + len(rec)) + rec
+    return _v9_packet(seqno, 1, ([_tmpl(TID, OTHER)] if template else []) + [data])
+
+
+def test_store_template_conflict_decodes_each_file_under_its_set(
+    spark, tmp_path, monkeypatch, caplog
+):
     """Two live files define one template id with different layouts:
-    the store steps aside, the drain decodes the whole spool in order
-    as before, and the fallback is logged once, with its reason."""
-    import struct
-
-    def tmpl(fields):
-        body = struct.pack("!HH", TID, len(fields)) + b"".join(
-            struct.pack("!HH", ie, ln) for ie, ln in fields
-        )
-        return struct.pack("!HH", 0, 4 + len(body)) + body
-
+    each file decodes under the definition in force for it, the
+    conflict is logged once, and a drain with no new file decodes
+    nothing. A new data-only file decodes alone, under the latest
+    definition before it. A compaction then moves each file's rows
+    exactly once."""
+    calls = _Calls(monkeypatch, _Calls.ALL)
     d = Daemon.from_conf(spark, CONF, spool_dir=str(tmp_path / "spool"))
+    files = _recording(d)
     try:
         _spool(d, "b1", [_v9(1, [_rec(0)])])
-        # same id, new layout: src, dst, bytes, packets (no proto)
-        other = struct.pack("!IIII", 0x0A0000FF, 0x0B000001, 7000, 7)
-        _spool(d, "b2", [_v9_packet(2, 1, [
-            tmpl([(8, 4), (12, 4), (1, 4), (2, 4)]),
-            struct.pack("!HH", TID, 4 + len(other)) + other,
-        ])])
+        _spool(d, "b2", [_other(2, 7000)])
         with caplog.at_level(logging.INFO, logger="pmacct_spark"):
             first = _total_bytes(d)
+            assert files == [{"b1.parquet"}, {"b2.parquet"}]
+            calls.take()
             assert _total_bytes(d) == first
+            assert calls.none()
+            _spool(d, "b3", [_other(3, 500, template=False)])
+            assert _total_bytes(d) == first + 500
+            assert files[2:] == [{"b3.parquet"}]
+            assert calls.take()["decode_any"] == 1
+            assert d.compact_spool(keep_files=1) == 2
+            assert d._compacted_table("flows").count() == 2
+            for _ in range(3):
+                assert _total_bytes(d) == first + 500
+            assert len(files) == 3 and calls.none()
     finally:
         d.stop()
     assert first == _bytes([_rec(0)]) + 7000
     notes = [r for r in caplog.records if "decoded-flow store" in r.getMessage()]
     assert len(notes) == 1 and notes[0].levelno == logging.WARNING
     assert "different layouts" in notes[0].getMessage()
+
+
+def test_store_keeps_a_retired_files_templates(spark, tmp_path, monkeypatch):
+    """A template whose only definition sat in a file compaction
+    retired still decodes the live files that use it: nothing is
+    decoded again and no record is lost."""
+    calls = _Calls(monkeypatch, _Calls.ALL)
+    d = Daemon.from_conf(spark, CONF, spool_dir=str(tmp_path / "spool"))
+    recs = [[_rec(0)], [_rec(1)], [_rec(2)]]
+    try:
+        _spool(d, "b1", [_v9(1, recs[0])])
+        _spool(d, "b2", [_v9(2, recs[1], template=False)])
+        golden = _bytes(recs[0] + recs[1])
+        assert _total_bytes(d) == golden
+        assert d.compact_spool(keep_files=1) == 1
+        calls.take()
+        assert _total_bytes(d) == golden
+        assert calls.none()
+        _spool(d, "b3", [_v9(3, recs[2], template=False)])
+        assert _total_bytes(d) == golden + _bytes(recs[2])
+    finally:
+        d.stop()
 
 
 def test_store_replan_channels_decode_each_file_once(spark, tmp_path):
@@ -454,3 +523,231 @@ def test_store_sync_stress_pins_and_single_flight(spark, monkeypatch):
     assert set(decoded.values()) == {1}, decoded
     store.close()
     owner.close()
+
+
+# -- row kinds beside the flows ---------------------------------------
+
+
+def _ipfix(seq: int, *sets: bytes) -> bytes:
+    return struct.pack("!HHIII", 10, 16 + sum(map(len, sets)), 0, seq, 0) + b"".join(
+        sets
+    )
+
+
+def _vrf_sets(spark, vrfs) -> list[tuple[bytes, bytes]]:
+    """(options template set, options data set) of one VRF exposition
+    datagram per ``(vrf_id, vrf_name)``."""
+    from pmacct_spark.sinks.nfprobe import encode_options_names
+
+    maps = spark.createDataFrame(
+        [(EXPORTER, i + 1, v, name, 7, "eth0") for i, (v, name) in enumerate(vrfs)],
+        "exporter_ip string, seq long, vrf_id long, vrf_name string,"
+        " rd_int long, iface_name string",
+    )
+    out = []
+    for r in encode_options_names(maps).select("payload").collect():
+        sets = bytes(r[0])[16:]
+        n = struct.unpack_from("!H", sets, 2)[0]
+        out.append((sets[:n], sets[n:]))
+    return out
+
+
+def test_account_options_rows_across_files(spark, tmp_path, monkeypatch):
+    """nfacctd_account_options: option records whose options template
+    arrived in an earlier spool file are accounted; the option channel
+    counts every exposition row. A drain with no new file decodes
+    nothing, and one new file is decoded alone."""
+    (tmp_path / "primitives.lst").write_text(
+        "name=vrf_id   field_type=234 len=4  semantics=u_int\n"
+        "name=vrf_name field_type=236 len=16 semantics=str\n"
+    )
+    (tmp_path / "pretag.map").write_text(
+        "set_tag=100 sample_type=option\nset_tag=200 sample_type=flow\n"
+    )
+    conf = f"""
+nfacctd_port: 0
+nfacctd_account_options: true
+aggregate_primitives: {tmp_path / 'primitives.lst'}
+pre_tag_map: {tmp_path / 'pretag.map'}
+plugins: memory[data], memory[option_vrf]
+aggregate[data]: proto
+pre_tag_filter[data]: 200
+aggregate[option_vrf]: vrf_id, vrf_name
+pre_tag_filter[option_vrf]: 100
+"""
+    (t42, d42), (_, d43), (_, d44), (_, d45) = _vrf_sets(
+        spark, [(42, "vrf-blue"), (43, "vrf-red"), (44, "vrf-green"), (45, "vrf-x")]
+    )
+    calls = _Calls(monkeypatch, _Calls.ALL)
+    d = Daemon.from_conf(spark, conf, spool_dir=str(tmp_path / "spool"))
+    files = _recording(d)
+
+    def vrfs():
+        res = d.run_available(streaming=False)
+        assert [r["bytes"] for r in res["data"].collect()] == [_bytes([_rec(0)])]
+        return sorted((r["vrf_id"], r["vrf_name"]) for r in res["option_vrf"].collect())
+
+    try:
+        _spool(d, "b1", [_ipfix(1, t42, d42), _v9(2, [_rec(0)])])
+        _spool(d, "b2", [_ipfix(3, d43), _ipfix(4, d44)])
+        want = [(42, "vrf-blue"), (43, "vrf-red"), (44, "vrf-green")]
+        assert vrfs() == want
+        calls.take()
+        assert vrfs() == want
+        assert calls.none()
+        _spool(d, "b3", [_ipfix(5, d45)])
+        assert vrfs() == want + [(45, "vrf-x")]
+        assert files == [{"b1.parquet", "b2.parquet"}, {"b3.parquet"}]
+    finally:
+        d.stop()
+
+
+def _counter_spool(spark, d: Daemon, name: str, agent: str, ifaces) -> None:
+    """One sFlow spool file of counter samples for ``ifaces``, received
+    from ``agent``."""
+    from pmacct_spark.sinks.sfprobe import encode_sflow_counters
+    from pmacct_spark.sources.spoolio import write_spool_file
+
+    rows = spark.createDataFrame(
+        [(n, 6, 10**9, 1, 100 * n, 10, 0, 200 * n, 20, 1) for n in ifaces],
+        "if_index LONG, if_type LONG, if_speed LONG, if_status LONG, "
+        "if_in_octets LONG, if_in_ucast LONG, if_in_errors LONG, "
+        "if_out_octets LONG, if_out_ucast LONG, if_out_errors LONG",
+    )
+    pdf = encode_sflow_counters(rows, agent_ip=agent).toPandas()
+    write_spool_file(
+        d.spool.spool_dir,
+        f"{name}.parquet",
+        pa.table(
+            {
+                "exporter_ip": pa.array([agent] * len(pdf), pa.string()),
+                "seqno": pa.array(range(len(pdf)), pa.int64()),
+                "payload": pa.array(list(pdf["payload"]), pa.binary()),
+            }
+        ),
+    )
+
+
+def _logged_ifaces(log_dir) -> list:
+    import json
+    import pathlib
+
+    return sorted(
+        json.loads(ln)["ifIndex"]
+        for f in pathlib.Path(log_dir).rglob("*.txt")
+        for ln in f.read_text().splitlines()
+        if ln.strip()
+    )
+
+
+def test_sflow_counter_log_reads_the_store(spark, tmp_path, monkeypatch):
+    """sfacctd_counter_file: the counter log reads the store's counter
+    rows. With sfacctd_allow_file set, a disallowed agent's counters
+    are not logged. A log write with no new file decodes nothing, one
+    new file is decoded alone, and a compaction keeps every counter."""
+    allow = tmp_path / "allow.lst"
+    allow.write_text("192.0.2.1\n")
+    log_dir = str(tmp_path / "ctrlog")
+    conf = f"""
+sfacctd_port: 0
+sfacctd_allow_file: {allow}
+sfacctd_counter_file: {log_dir}
+plugins: memory[p]
+aggregate[p]: proto
+"""
+    calls = _Calls(monkeypatch, _Calls.ALL)
+    d = Daemon.from_conf(spark, conf, spool_dir=str(tmp_path / "spool"))
+    files = _recording(d)
+    try:
+        _counter_spool(spark, d, "s1", "192.0.2.1", [5, 7])
+        _counter_spool(spark, d, "s2", "192.0.2.2", [8])
+        assert d.write_msglog_if_configured() == [log_dir]
+        assert _logged_ifaces(log_dir) == [5, 7]
+        calls.take()
+        d.run_available(streaming=False)
+        assert d.write_msglog_if_configured() == [log_dir]
+        assert calls.none()
+        _counter_spool(spark, d, "s3", "192.0.2.1", [9])
+        assert d.write_msglog_if_configured() == [log_dir]
+        assert _logged_ifaces(log_dir) == [5, 7, 9]
+        assert files == [{"s1.parquet", "s2.parquet"}, {"s3.parquet"}]
+        n = calls.take()
+        assert n["decode_sflow_any"] == n["decode_sflow_counters"] == 1
+        assert d.compact_spool(keep_files=1) == 2
+        assert d.write_msglog_if_configured() == [log_dir]
+        assert _logged_ifaces(log_dir) == [5, 7, 9]
+        assert len(files) == 2 and calls.none()
+    finally:
+        d.stop()
+
+
+def test_templates_port_redefinition_keeps_seeding(spark, tmp_path, caplog):
+    """nfacctd_templates_port: a layout change for a replicated
+    template keeps its first layout and is logged once; a template
+    replicated after it still seeds, so its data decodes. Each
+    templates-spool file is learned once."""
+    conf = """
+nfacctd_port: 0
+nfacctd_templates_port: 0
+plugins: memory[protos]
+aggregate[protos]: proto
+"""
+    d = Daemon.from_conf(spark, conf, spool_dir=str(tmp_path / "spool"))
+    learned: list = []
+    orig = d._tagged_datagrams
+
+    def recording(tags, by_datagram=False):
+        if not by_datagram:
+            return orig(tags)
+        learned.append(sorted(os.path.basename(f) for f in tags))
+        return orig(tags, by_datagram=True)
+
+    d._tagged_datagrams = recording
+
+    def tmpl(name: str, tid: int, fields) -> None:
+        write_spool_file(
+            d.tmpl_spool.spool_dir,
+            f"{name}.parquet",
+            pa.table(
+                {
+                    "exporter_ip": pa.array([EXPORTER], pa.string()),
+                    "seqno": pa.array([0], pa.int64()),
+                    "payload": pa.array(
+                        [_v9_packet(0, 1, [_tmpl(tid, fields)])], pa.binary()
+                    ),
+                }
+            ),
+        )
+
+    fields = [(8, 4), (12, 4), (1, 4), (2, 4), (4, 1)]
+    try:
+        tmpl("t1", TID, fields)
+        _spool(d, "b1", [_v9(1, [_rec(0)], template=False)])
+        assert _total_bytes(d) == _bytes([_rec(0)])
+        tmpl("t2", TID, OTHER)
+        with caplog.at_level(logging.WARNING, logger="pmacct_spark"):
+            assert _total_bytes(d) == _bytes([_rec(0)])
+            tmpl("t3", 301, fields)
+            _spool(d, "b2", [_v9_packet(2, 1, [_v9_data(301, [_rec(1)])])])
+            assert _total_bytes(d) == _bytes([_rec(0), _rec(1)])
+            assert _total_bytes(d) == _bytes([_rec(0), _rec(1)])
+    finally:
+        d.stop()
+    assert learned == [["t1.parquet"], ["t2.parquet"], ["t3.parquet"]]
+    notes = [r for r in caplog.records if "replicated template" in r.getMessage()]
+    assert len(notes) == 1
+
+
+def test_store_answers_an_empty_spool(spark, tmp_path):
+    """A drain over an empty spool reads the store's empty snapshot,
+    whose frames have the decoders' schemas."""
+    d = Daemon.from_conf(spark, CONF, spool_dir=str(tmp_path / "spool"))
+    try:
+        assert _total_bytes(d) == 0
+        with d._scratch.lease(pin=True) as lease:
+            snap = d._store_sync([], lease)
+            assert snap.flows().count() == 0
+            assert "ip_src_i" in snap.flows().columns
+            assert snap.options().count() == 0
+    finally:
+        d.stop()

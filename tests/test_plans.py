@@ -305,6 +305,44 @@ def test_no_logging_import_inside_a_function():
     assert not offenders, "\n".join(sorted(set(offenders)))
 
 
+def test_one_batch_decode_route():
+    """The daemon's batch path decodes and learns only through the
+    decoded-flow store. In ``daemon.py``, the whole-spool decode and
+    learn passes are called only from the store's learn/decode
+    callbacks, the replicated-templates learn and the streaming path,
+    and only the streaming ``_maps`` fallback and ``_telemetry_msgs``
+    read ``_spool_batch()``."""
+    import ast
+    import pathlib
+
+    allowed = {
+        "learn_template_cache": {"_learn_spool_files", "_ingest_replicated_templates"},
+        "decode_options": {"_decode_spool_files", "_maps"},
+        "decode_options_data": {"_decode_spool_files", "_enrich_datagrams"},
+        "decode_sflow_counters": {"_decode_spool_files"},
+        "_spool_batch": {"_maps", "_telemetry_msgs"},
+    }
+    path = pathlib.Path(__file__).resolve().parent.parent / "pmacct_spark" / "daemon.py"
+    tree = ast.parse(path.read_text(), str(path))
+    funcs = [n for n in tree.body if isinstance(n, ast.FunctionDef)] + [
+        m
+        for c in tree.body
+        if isinstance(c, ast.ClassDef)
+        for m in c.body
+        if isinstance(m, ast.FunctionDef)
+    ]
+    offenders = []
+    for fn in funcs:
+        for node in ast.walk(fn):
+            if not isinstance(node, ast.Call):
+                continue
+            f = node.func
+            name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+            if name in allowed and fn.name not in allowed[name]:
+                offenders.append(f"daemon.py:{node.lineno} {name}() in {fn.name}()")
+    assert not offenders, "\n".join(offenders)
+
+
 # --- VERDICT r4 what's-wrong #1: forced broadcast of SF-linear tables ---
 
 # Tables whose row count grows with scale factor; a forced F.broadcast
