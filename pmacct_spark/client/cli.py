@@ -88,8 +88,11 @@ def run_client(table: ImtTable, req: ClientRequest) -> DataFrame | None:
 def render(df: DataFrame, output: str = "formatted") -> str:
     """Render a client result the way -O does (driver-side, for the
     interactive path — NOT a data-plane operation)."""
-    rows = df.collect()
-    cols = df.columns
+    return render_rows(df.collect(), df.columns, output)
+
+
+def render_rows(rows, cols: list[str], output: str = "formatted") -> str:
+    """:func:`render` of collected ``rows`` with columns ``cols``."""
     if output == "csv":
         lines = [",".join(cols)]
         lines += [",".join("" if r[c] is None else str(r[c]) for c in cols) for r in rows]

@@ -21,11 +21,12 @@ cluster running the same channel queries over the union.
 
 from __future__ import annotations
 
+import functools
 import logging
 import threading
 from dataclasses import dataclass, field
 from dataclasses import replace as _replace
-from typing import NamedTuple
+from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -34,6 +35,8 @@ from pmacct_spark import conffile
 from pmacct_spark.functions.addr import ipv4_ntoa
 from pmacct_spark.sources.udp import UdpSpool
 from pmacct_spark.streaming.store import (
+    Aggregate,
+    AggregateStore,
     FID,
     DecodedStore,
     Lease,
@@ -149,10 +152,14 @@ class Daemon:
     # the batch path's lookup RIB, staged once per BGP/BMP spool
     # generation (streaming plans read the live rib() instead)
     _ribs: RibStore = field(init=False, repr=False)
+    # each batch channel's aggregate, staged once per drain input
+    # (batch drains and replan ticks read it)
+    _aggregates: AggregateStore = field(init=False, repr=False)
 
     def __post_init__(self):
         self._store = DecodedStore(self._scratch)
         self._ribs = RibStore(self._scratch)
+        self._aggregates = AggregateStore(self._scratch)
 
     @classmethod
     def from_conf(
@@ -642,6 +649,7 @@ class Daemon:
                 sp.stop()
         self._store.close()
         self._ribs.close()
+        self._aggregates.close()
         self._scratch.close()
         import shutil as _sh
 
@@ -857,9 +865,8 @@ class Daemon:
             with self._scratch.lease(pin=True) as lease:
                 snap = self._store_sync(live, lease)
                 rib = self._rib_snapshot(lease)
-                self._compact_append(
-                    "flows", self._enriched_flows(snap, rib, lease, victims)
-                )
+                enriched, _key = self._enriched_flows(snap, rib, lease, victims)
+                self._compact_append("flows", enriched())
                 for kind in ("options", "counters"):
                     rows = snap.rows(kind, victims)
                     if rows is not None:
@@ -1299,23 +1306,25 @@ class Daemon:
         rib: RibSnapshot | None,
         lease: Lease,
         files: list[str] | None = None,
-    ) -> DataFrame:
+    ) -> tuple[Callable[[], DataFrame], tuple]:
         """Enriched flows of ``files`` (default: the whole snapshot),
-        read under ``lease``. When maps and enrichment put a join above
-        the decoded rows, these come from the store's enriched layer:
-        each file is enriched once per :meth:`_enrich_key`, so a drain
-        with no new file and no key change builds no enrichment plan.
-        Otherwise the frame is built lazily per call
-        (:meth:`_enrich_snapshot`)."""
+        read under ``lease``: a function returning them, and the
+        :meth:`_enrich_key` they were read under. When maps and
+        enrichment put a join above the decoded rows, these come from
+        the store's enriched layer, synced here: each file is enriched
+        once per key, so a drain with no new file and no key change
+        builds no enrichment plan. Otherwise the function builds the
+        frame lazily (:meth:`_enrich_snapshot`)."""
         if rib is not None:
             rib = _replace(
                 rib,
                 roa_files=None if self.rtr_client is None
                 else self.rtr_client.files(),
             )
+        key = self._enrich_key(snap, rib)
         df = self._store.enriched(
             snap,
-            self._enrich_key(snap, rib),
+            key,
             lambda todo, tmp: self._enrich_snapshot(
                 snap, todo, None if rib is None else _replace(rib, lease=tmp),
                 fid=True,
@@ -1324,8 +1333,8 @@ class Daemon:
             files,
         )
         if df is None:
-            df = self._enrich_snapshot(snap, files, rib)
-        return df
+            return (lambda: self._enrich_snapshot(snap, files, rib)), key
+        return (lambda: df), key
 
     def _enrich_key(self, snap, rib: RibSnapshot | None) -> tuple:
         """What a stored file's enriched rows depend on besides its
@@ -1417,12 +1426,21 @@ class Daemon:
             )
         return memo[key]
 
-    def _decoded(self, streaming: bool, lease: Lease | None = None) -> DataFrame:
-        """The flow frame every channel aggregates. The batch frame
-        reads the stores, and the scratch its enrichment stages, under
-        the caller's ``lease``."""
-        if streaming:
-            return self._enrich_datagrams(self.spool.stream(self.spark))
+    def _streamed(self) -> DataFrame:
+        """The flow frame every streaming channel aggregates: the spool
+        tailed, decoded and enriched per micro-batch."""
+        return self._enrich_datagrams(self.spool.stream(self.spark))
+
+    def _decoded(self, lease: Lease) -> tuple[Callable[[], DataFrame], tuple]:
+        """The flow frame every batch channel aggregates, read from the
+        stores, with the scratch its enrichment stages, under
+        ``lease``: a function building it on first use (a drain whose
+        channels all read stored aggregates plans none), and its key,
+        computed without building a plan: ``((part name, value),
+        ...)``, everything the frame's rows depend on (the snapshot's
+        file ids, which change when a file is re-decoded; the
+        enrichment key; the compacted flows' appends). Equal keys,
+        equal rows."""
         # snapshot the live file list, the stores and the compacted side
         # table under one lock: a concurrent tick's maybe_compact_spool
         # could otherwise retire a file after it was listed and append
@@ -1437,14 +1455,44 @@ class Daemon:
             files = self._live_spool_files()
             comp = self._compacted_table("flows")
             snap = self._store_sync(files, lease)
-            df = self._enriched_flows(snap, self._rib_snapshot(lease), lease)
+            enriched, enrich_key = self._enriched_flows(
+                snap, self._rib_snapshot(lease), lease
+            )
+            key = (
+                ("spool files", snap.key()),
+                *enrich_key,
+                ("compacted flows", self._appends.get("flows", 0)),
+            )
         if self.flavor == "netflow":
             if self.conf.get("nfacctd_templates_receiver"):
                 self._forward_templates(self._datagrams(files))
             self._persist_templates(snap.templates)
-        if comp is not None:
-            df = df.unionByName(comp, allowMissingColumns=True)
-        return df
+
+        @functools.cache
+        def flows() -> DataFrame:
+            df = enriched()
+            if comp is not None:
+                df = df.unionByName(comp, allowMissingColumns=True)
+            return df
+
+        return flows, key
+
+    def _aggregate(
+        self, name: str, cfg, flows: Callable, key: tuple, lease: Lease
+    ) -> Aggregate:
+        """Batch channel ``name``'s aggregate of the drain input ``key``
+        names (:meth:`_decoded`), read under ``lease``: the stored one
+        (``streaming/store.AggregateStore``), rebuilt, once, over
+        ``flows()`` only when the channel's conf or that key changed
+        since it was built."""
+        from pmacct_spark.pipeline import build_aggregation
+
+        return self._aggregates.sync(
+            name,
+            (("channel conf", cfg), *key),
+            lambda: build_aggregation(flows(), cfg),
+            lease,
+        )
 
     def _ports_allowlist(self) -> list[int] | None:
         """Parse ports_file once per daemon (SIGUSR2-reload class,
@@ -2324,7 +2372,6 @@ class Daemon:
         plugin channel (availableNow semantics) and deliver to each
         plugin's sink (the ``sinks.plugins`` table). Returns
         {plugin_name: result DataFrame}."""
-        from pmacct_spark.pipeline import build_aggregation
         from pmacct_spark.sinks.plugins import plugin, run_trigger
         from pmacct_spark.streaming.jobs import (
             run_to_memory,
@@ -2342,34 +2389,41 @@ class Daemon:
 
         # Each spool file is decoded ONCE, into the decoded-flow store
         # (the reference decodes once and fans out to plugins,
-        # src/plugin_hooks.c); every batch channel reads the store
-        # directly. Only when maps/enrichment put a join or a Python
-        # node above the stored rows is the drain's frame staged, so N
+        # src/plugin_hooks.c), and each batch channel's aggregate is
+        # kept, like the reference's plugin cache: a channel whose
+        # input key did not change reads its stored table, and the
+        # drain's flow frame is built only when a channel rebuilds or
+        # a probe reads it. Only when that frame has a join or a
+        # Python node above the stored rows is it staged, so N
         # channels don't repeat that work.
-        batch_df = None
+        decoded = key = lease = frame = None
         n_batch = sum(1 for c in self.channels.values() if not is_stream(c))
+
+        def flows() -> DataFrame:
+            nonlocal frame
+            if frame is None:
+                from pmacct_spark.operators.staging import plan_recomputes, stage
+
+                frame = decoded()
+                if n_batch > 1 and plan_recomputes(frame):
+                    frame = stage(frame)
+                    lease.hold([frame])
+            return frame
+
         for name, cfg in self.channels.items():
             if is_stream(cfg):
                 agg = stream_aggregation(
-                    self._route(self._decoded(True), cfg),
+                    self._route(self._streamed(), cfg),
                     _replace(cfg, aggregate_filter=None),  # applied in _route
                 )
                 out = run_to_memory(agg, f"imt_{name}")
             else:
-                if batch_df is None:
-                    from pmacct_spark.operators.staging import (
-                        plan_recomputes,
-                        stage,
-                    )
-
+                if decoded is None:
                     # one drain: what it reads stays readable for the
                     # caller's lazy results until two more drains start
                     lease = self._scratch.lease()
-                    batch_df = self._decoded(False, lease)
-                    if n_batch > 1 and plan_recomputes(batch_df):
-                        batch_df = stage(batch_df)
-                        lease.hold([batch_df])
-                out = build_aggregation(batch_df, cfg)
+                    decoded, key = self._decoded(lease)
+                out = self._aggregate(name, cfg, flows, key, lease).df
             ptype = ptype_by_name.get(name, "memory")
             wid = self.conf.get("writer_id_string", name)
             if wid:
@@ -2387,7 +2441,7 @@ class Daemon:
                 out = out.withColumn("writer_id", F.lit(rendered))
             row = plugin(ptype)
             if row.emit is not None:
-                row.emit(self, name, out, batch_df)
+                row.emit(self, name, out, None if decoded is None else flows)
             if row.prefix:
                 run_trigger(self, name, row.prefix)
             results[name] = out
@@ -3059,11 +3113,11 @@ class Daemon:
 
                 # a pinned lease: the checked plan is never collected
                 with self._scratch.lease(pin=True) as lease:
-                    build_aggregation(self._decoded(False, lease), cfg)
+                    build_aggregation(self._decoded(lease)[0](), cfg)
                 plans[name] = _ReplanLoop(self, name, cfg, triggers[name])
             else:
                 plans[name] = stream_aggregation(
-                    self._route(self._decoded(True), cfg),
+                    self._route(self._streamed(), cfg),
                     _replace(cfg, aggregate_filter=None),  # applied in _route
                 )
         queries = {}
@@ -3084,12 +3138,13 @@ class Daemon:
 
 class _ReplanLoop:
     """Steady-state serving for a channel whose enrichment reads live
-    dimensions: every tick rebuilds the batch plan (fresh file
-    listings -> current RIB) and materializes the aggregate into the
-    ``imt_<name>`` temp view. The materialized table IS the product —
-    the reference's IMT is exactly an in-memory aggregate table, so
-    collecting the (group-cardinality-bounded) result to refresh the
-    served view mirrors its memory plugin, not a scale liability.
+    dimensions: every tick syncs the batch input (fresh file listings
+    -> current RIB) and, when the channel's stored aggregate changed,
+    materializes it into the ``imt_<name>`` temp view. The
+    materialized table IS the product — the reference's IMT is exactly
+    an in-memory aggregate table, so collecting the
+    (group-cardinality-bounded) result to refresh the served view
+    mirrors its memory plugin, not a scale liability.
 
     Duck-typed to the StreamingQuery surface ContinuousRun handles:
     ``stop()`` and ``lastProgress``."""
@@ -3101,6 +3156,7 @@ class _ReplanLoop:
         self.trigger_secs = trigger_secs
         self.lastProgress = None
         self.last_error: Exception | None = None
+        self._served: Aggregate | None = None  # the aggregate the view holds
         self._stop = None
         self._thread = None
 
@@ -3116,8 +3172,6 @@ class _ReplanLoop:
 
     def _tick(self) -> None:
         import time as _t
-
-        from pmacct_spark.pipeline import build_aggregation
 
         d = self.daemon
         # N channel loops share the spools: debounce so one tick's
@@ -3137,11 +3191,14 @@ class _ReplanLoop:
             # rotates its memory tables the same way)
             d.maybe_compact_spool()
         with d._scratch.lease(pin=True) as lease:
-            df = build_aggregation(d._decoded(False, lease), self.cfg)
-            rows = df.collect()
-        d.spark.createDataFrame(rows, df.schema).createOrReplaceTempView(
+            agg = d._aggregate(self.name, self.cfg, *d._decoded(lease), lease)
+            if agg is self._served:  # the view already holds it
+                return
+            rows = agg.df.collect()
+        d.spark.createDataFrame(rows, agg.df.schema).createOrReplaceTempView(
             f"imt_{self.name}"
         )
+        self._served = agg
         self.lastProgress = {"numRows": len(rows)}
 
     def _loop(self) -> None:

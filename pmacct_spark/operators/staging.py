@@ -124,6 +124,19 @@ def stage(df: DataFrame) -> DataFrame:
     reading it back — an ownership-free barrier. The returned
     DataFrame carries its directory as ``.stage_path`` so callers can
     :func:`release` it early."""
+    return _stage(df)
+
+
+def stage_result(df: DataFrame) -> DataFrame:
+    """:func:`stage` for a result table a consumer reads many times
+    (the daemon's maintained channel aggregates): the same write and
+    read-back, through its own entry point, so the barriers a plan
+    stages between its layers and the result tables it serves are
+    counted apart."""
+    return _stage(df)
+
+
+def _stage(df: DataFrame) -> DataFrame:
     root = _staging_root(df)
     if root is None:
         d = tempfile.mkdtemp(prefix="pmacct_stage_")

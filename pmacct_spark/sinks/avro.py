@@ -248,6 +248,11 @@ def write_container(df: DataFrame, path: str) -> int:
     """Write one Avro container file per partition under ``path``
     (part-NNNNN.avro — the df.write layout). Runs on executors via
     foreachPartition; returns number of files written."""
+    return write_container_rows(df, path)[0]
+
+
+def write_container_rows(df: DataFrame, path: str) -> tuple[int, int]:
+    """:func:`write_container`, returning ``(files, records)``."""
     from pyspark.sql import functions as F
 
     work = df
@@ -269,10 +274,12 @@ def write_container(df: DataFrame, path: str) -> int:
         data = _container_bytes(rows, types, schema_json)
         with open(os.path.join(path, f"part-{idx:05d}.avro"), "wb") as fh:
             fh.write(data)
-        yield 1
+        yield 1, len(rows)
 
-    n = work.rdd.mapPartitionsWithIndex(write_part).sum()
-    return int(n)
+    files, records = work.rdd.mapPartitionsWithIndex(write_part).fold(
+        (0, 0), lambda a, b: (a[0] + b[0], a[1] + b[1])
+    )
+    return int(files), int(records)
 
 
 # --- reader (test harness) --------------------------------------------------

@@ -13,7 +13,10 @@ directory per token value, which is the cluster-scalable form of
 from __future__ import annotations
 
 import logging
+import os
 import re
+import shutil
+import uuid
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -66,6 +69,10 @@ def write_print(
     Container Files via the spark-avro datasource when on the
     classpath, else the built-in pure-Python encoder in sinks/avro.py
     — format-conformant either way).
+
+    A purge runs one Spark job: on a local path it is written to a
+    hidden sibling directory, counting its rows as it goes, and moved
+    into ``path`` only when it holds rows or ``write_empty`` is set.
     """
     out = df
     if fmt in ("event_csv", "event_formatted"):
@@ -74,19 +81,57 @@ def write_print(
         # fw events) where volume counters carry no meaning
         out = out.drop("bytes", "packets")
         fmt = fmt[len("event_"):]
-    if not write_empty and out.isEmpty():
-        # print_write_empty_file default false (CONFIG-KEYS:1272): an
-        # empty purge produces no file at all, only the reference's
-        # "ET: X" log line
-        log.info(
-            "write_print: no data to output (print_write_empty_file "
-            "false) — ET: X"
-        )
-        return
     partition_cols: list[str] = []
     if name_spec:
         out, partition_cols = dynamic_partitions(out, name_spec)
-    writer = out.write.mode(mode)
+    if "://" in path:
+        # no local directory to move a finished purge from: look first
+        if not write_empty and out.isEmpty():
+            _no_data()
+            return
+        _write(out, path, fmt, mode, partition_cols, markers, separator)
+    else:
+        parent, base = os.path.split(os.path.abspath(path))
+        tmp = os.path.join(parent, f".{base}.purge-{uuid.uuid4().hex}")
+        try:
+            rows = _write(
+                out, tmp, fmt, "overwrite", partition_cols, markers, separator
+            )
+            if not rows and not write_empty:
+                _no_data()
+                return
+            _move_in(tmp, path, mode)
+        finally:
+            shutil.rmtree(tmp, ignore_errors=True)
+    if latest_file:
+        _update_latest_pointer(path, latest_file)
+
+
+def _no_data() -> None:
+    # print_write_empty_file default false (CONFIG-KEYS:1272): an empty
+    # purge produces no file at all, only the reference's "ET: X" log
+    # line
+    log.info(
+        "write_print: no data to output (print_write_empty_file "
+        "false) — ET: X"
+    )
+
+
+def _write(
+    out: DataFrame,
+    path: str,
+    fmt: str,
+    mode: str,
+    partition_cols: list[str],
+    markers: bool,
+    separator: str | None,
+) -> int:
+    """One purge of ``out`` to ``path`` in one job; returns its rows."""
+    from pyspark.sql import Observation
+
+    obs = Observation()
+    observed = out.observe(obs, F.count(F.lit(1)).alias("rows"))
+    writer = observed.write.mode(mode)
     if partition_cols:
         writer = writer.partitionBy(*partition_cols)
     if fmt == "csv":
@@ -104,28 +149,27 @@ def write_print(
         # discovery needs the whole (small, post-aggregation) result;
         # reuse the client renderer — the print plugin and the client
         # share presentation in the reference too.
-        import os as _os
-        import shutil as _shutil
-
-        from pmacct_spark.client.cli import render
+        from pmacct_spark.client.cli import render_rows
 
         if partition_cols:
             raise ValueError(
                 "formatted output does not support dynamic names "
                 "(name_spec) — use csv/json for partitioned prints"
             )
-        if mode == "overwrite" and _os.path.isdir(path):
-            _shutil.rmtree(path)  # match the writer's overwrite
-        _os.makedirs(path, exist_ok=True)
-        with open(_os.path.join(path, "part-00000.txt"), "w") as fh:
+        rows = out.collect()
+        if mode == "overwrite" and os.path.isdir(path):
+            shutil.rmtree(path)  # match the writer's overwrite
+        os.makedirs(path, exist_ok=True)
+        with open(os.path.join(path, "part-00000.txt"), "w") as fh:
             if markers:
                 # print_markers (reference src/print_plugin.c:525,1437):
                 # purge delimiters for stream-parsing consumers
-                fh.write(f"--START ({_os.getpid()})--\n")
-            fh.write(render(out, "formatted"))
+                fh.write(f"--START ({os.getpid()})--\n")
+            fh.write(render_rows(rows, out.columns, "formatted"))
             fh.write("\n")
             if markers:
-                fh.write(f"--END ({_os.getpid()})--\n")
+                fh.write(f"--END ({os.getpid()})--\n")
+        return len(rows)
     elif fmt == "avro_json":
         # JSON-encoded Avro objects (CONFIG-KEYS:1813,
         # write_avro_json_record_to_file src/print_plugin.c:1410):
@@ -133,7 +177,7 @@ def write_print(
         # (sinks/avro.avro_json_wrap)
         from pmacct_spark.sinks.avro import avro_json_wrap
 
-        writer = avro_json_wrap(out).write.mode(mode)
+        writer = avro_json_wrap(observed).write.mode(mode)
         if partition_cols:
             writer = writer.partitionBy(*partition_cols)
         writer.json(path)
@@ -141,16 +185,34 @@ def write_print(
         try:
             writer.format("avro").save(path)
         except Exception:
-            from pmacct_spark.sinks.avro import write_container
+            from pmacct_spark.sinks.avro import write_container_rows
 
             # no spark-avro datasource here: per-partition container
             # files from the pure-Python encoder (dynamic-name
             # partition columns stay as record fields)
-            write_container(out, path)
+            return write_container_rows(out, path)[1]
     else:
         raise ValueError(f"unknown print format {fmt!r}")
-    if latest_file:
-        _update_latest_pointer(path, latest_file)
+    return obs.get["rows"]
+
+
+def _move_in(tmp: str, path: str, mode: str) -> None:
+    """Put a purge written to ``tmp`` at ``path``: in place of what is
+    there (overwrite), or beside it (append; part files carry unique
+    names)."""
+    if mode == "overwrite" or not os.path.isdir(path):
+        if os.path.isdir(path):
+            shutil.rmtree(path)
+        elif os.path.lexists(path):
+            os.unlink(path)
+        os.makedirs(os.path.dirname(os.path.abspath(path)), exist_ok=True)
+        os.replace(tmp, path)
+        return
+    for root, _dirs, files in os.walk(tmp):
+        dest = os.path.join(path, os.path.relpath(root, tmp))
+        os.makedirs(dest, exist_ok=True)
+        for f in files:
+            os.replace(os.path.join(root, f), os.path.join(dest, f))
 
 
 def _update_latest_pointer(path: str, latest_file: str) -> None:

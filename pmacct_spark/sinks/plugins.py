@@ -2,10 +2,11 @@
 (the reference's per-plugin hook table, src/plugin_hooks.c).
 
 Every emitter is a plain function ``(daemon, name, out, flows)``:
-``out`` is the channel's aggregate, ``flows`` the drain's decoded flow
-frame (the probes re-export flows, not aggregates; None when no batch
-channel ran). An emitter reads its own conf keys and never rebinds a
-frame another channel reads. ``prefix`` names the type's conf prefix —
+``out`` is the channel's aggregate, ``flows()`` returns the drain's
+decoded flow frame, built on first use (the probes re-export flows,
+not aggregates; ``flows`` is None when no batch channel ran). An
+emitter reads its own conf keys and never rebinds a frame another
+channel reads. ``prefix`` names the type's conf prefix —
 ``<prefix>_refresh_time`` and ``<prefix>_trigger_exec`` exist only for
 types that have one.
 
@@ -299,7 +300,9 @@ class AmqpBus:
         compose_json of the record, packed newline-separated into
         ~N-byte bodies under ``amqp_multi_values`` (mind amqp_frame_max);
         avro_json the union-branch-wrapped record; avro one binary
-        datum per message (the registry is Kafka-only)."""
+        datum (the registry is Kafka-only), or under
+        ``amqp_multi_values`` datums batched under avro_buffer_size, at
+        most N per message, as the Kafka transport packs them (:1866)."""
         from pmacct_spark.sinks import amqp as Q
         from pmacct_spark.sinks import avro as A
         from pmacct_spark.sinks import kafka as K
@@ -311,23 +314,26 @@ class AmqpBus:
             exchange_type=self.etype,
             persistent=conf.getbool("amqp_persistent_msg", name),
         )
+        mv = int(conf.get("amqp_multi_values", name) or 0)
+        pack = dict(value_col="body", group_cols=(
+            "exchange", "exchange_type", "routing_key",
+            "delivery_mode", "content_type",
+        ))
         if fmt == "json":
             frames = Q.amqp_frame(emit, **kw)
-            mv = int(conf.get("amqp_multi_values", name) or 0)
-            if mv > 0:
-                frames = K.pack_multi_values(
-                    frames, mv, value_col="body", group_cols=(
-                        "exchange", "exchange_type", "routing_key",
-                        "delivery_mode", "content_type",
-                    ),
-                )
-            return frames
+            return K.pack_multi_values(frames, mv, **pack) if mv > 0 else frames
         if fmt == "avro_json":
             rec = A.avro_json_wrap(emit)
             bodies = rec.select(K.compose_json_value(rec).alias("body"))
-        else:
-            bodies = A.avro_frames(emit).select(F.col("value").alias("body"))
-        return Q.amqp_body_frame(bodies, content_type=ctype, **kw)
+            return Q.amqp_body_frame(bodies, content_type=ctype, **kw)
+        bodies = A.avro_frames(emit).select(F.col("value").alias("body"))
+        frames = Q.amqp_body_frame(bodies, content_type=ctype, **kw)
+        if mv > 0:
+            buf = int(conf.get("avro_buffer_size", name) or 8192)
+            frames = K.pack_multi_values(
+                frames, buf, binary=True, max_records=mv, **pack
+            )
+        return frames
 
     def send(self, frames: DataFrame) -> None:
         from pmacct_spark.sinks.amqp_wire import publish_frames
@@ -587,7 +593,7 @@ def emit_probe(d, name: str, out: DataFrame, flows, ptype: str,
 
     rhost, rport = conffile.split_host_port(str(recv), port)
     src_ip = conf.get(f"{ptype}_source_ip", name)
-    dgrams = datagrams(conf, name, flows, str(src_ip or "127.0.0.1"))
+    dgrams = datagrams(conf, name, flows(), str(src_ip or "127.0.0.1"))
     hop = conf.get(f"{ptype}_hoplimit", name)
     emit_udp(
         dgrams, default_endpoint=f"{rhost}:{rport}",

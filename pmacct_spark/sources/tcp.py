@@ -21,6 +21,8 @@ import tempfile
 import threading
 import time
 
+from pmacct_spark.sources.spoolio import Waker
+
 log = logging.getLogger("pmacct_spark")
 
 _BGP_MARKER = b"\xff" * 16
@@ -472,11 +474,16 @@ class TcpSpool:
         self._plumbing: set[str] = set()
         self._rib_epochs: dict[str, int] = {}
         self.messages_spooled = 0
-        # acknowledged-flush handshake: flush() bumps the generation,
+        # acknowledged-flush handshake: flush() bumps the generation
+        # and wakes every socket thread; the accept loop records the
+        # last generation whose queued connections it has registered,
         # each session thread emits its prefix then records the gen
         self._flush_gen = 0
         self._flush_acks: dict[int, int] = {}
-        self._accept_iter = 0  # accept-loop progress, see flush()
+        self._accepted_gen = 0
+        self._flush_cv = threading.Condition(self._lock)
+        self._accept_waker: Waker | None = None
+        self._conn_wakers: dict[int, Waker] = {}  # per-connection ack key
         self._conn_seq = 0  # per-connection ack keys
 
     # -- lifecycle ----------------------------------------------------
@@ -497,9 +504,10 @@ class TcpSpool:
         for peer, key in self.md5_keys.items():
             set_tcp_md5(self._srv, peer, key)
         self._srv.listen(16)
-        # short accept poll: flush()'s backlog barrier waits two
-        # passes, so this bounds flush latency (~0.1 s), not 0.4 s
-        self._srv.settimeout(0.05)
+        # the accept loop waits in select(), on the listener and the
+        # waker flush() and stop() use
+        self._srv.setblocking(False)
+        self._accept_waker = Waker()
         self._stop.clear()
         self._accept_thread = threading.Thread(
             target=self._accept_loop, name=f"tcp-spool-{self.port}",
@@ -510,6 +518,7 @@ class TcpSpool:
 
     def stop(self) -> None:
         self._stop.set()
+        self._wake_all()
         if self._accept_thread is not None:
             self._accept_thread.join(timeout=10)
             self._accept_thread = None
@@ -519,6 +528,17 @@ class TcpSpool:
         if self._srv is not None:
             self._srv.close()
             self._srv = None
+        if self._accept_waker is not None:
+            self._accept_waker.close()
+            self._accept_waker = None
+
+    def _wake_all(self) -> None:
+        """Wake the accept loop and every session thread."""
+        with self._lock:
+            wakers = [self._accept_waker, *self._conn_wakers.values()]
+        for w in wakers:
+            if w is not None:
+                w.wake()
 
     def __enter__(self) -> "TcpSpool":
         return self.start()
@@ -528,17 +548,34 @@ class TcpSpool:
 
     # -- socket threads -----------------------------------------------
     def _accept_loop(self) -> None:
+        try:
+            while not self._stop.is_set():
+                self._accept_waker.wait(self._srv, 0.2)
+                # the flush() calls made so far: a connection each
+                # expects is queued in the listen backlog by now
+                gen = self._flush_gen
+                if not self._accept_queued():
+                    break
+                with self._lock:
+                    self._accepted_gen = gen
+                    self._flush_cv.notify_all()
+        finally:
+            with self._lock:  # flush() stops waiting on a dead loop
+                self._flush_cv.notify_all()
+
+    def _accept_queued(self) -> bool:
+        """Accept every connection queued on the listener; False once
+        the listener is closed."""
         while not self._stop.is_set():
-            self._accept_iter += 1
             try:
                 # AF_INET6 accept returns (host, port, flowinfo,
                 # scopeid) — take the host either way
                 conn, addr = self._srv.accept()
                 peer = addr[0]
-            except socket.timeout:
-                continue
+            except (BlockingIOError, InterruptedError):
+                return True
             except OSError:
-                break
+                return False
             if self.allow_nets is not None:
                 import ipaddress as _ip
 
@@ -594,6 +631,7 @@ class TcpSpool:
                 self._conn_seq += 1
                 key = self._conn_seq
                 self._flush_acks[key] = 0
+                self._conn_wakers[key] = Waker()
             t = threading.Thread(
                 target=self._conn_loop, args=(conn, peer, epoch, key),
                 daemon=True,
@@ -605,6 +643,7 @@ class TcpSpool:
                 x for x in self._conn_threads if x.is_alive()
             ]
             self._conn_threads.append(t)
+        return False
 
     def _conn_loop(
         self, conn: socket.socket, peer: str, epoch: int = 1, key: int = 0
@@ -646,10 +685,17 @@ class TcpSpool:
                 self._conn_seq += 1
                 key = self._conn_seq
                 self._flush_acks[key] = 0
+                self._conn_wakers[key] = Waker()
+        waker = self._conn_wakers[key]
         try:
             while not self._stop.is_set():
                 closed = False
                 try:
+                    # a flush() pending since before this session's
+                    # waker was known: do not wait for the poll timeout
+                    pending = self._flush_acks.get(key, 0) < self._flush_gen
+                    if not waker.wait(conn, 0 if pending else 0.2):
+                        raise socket.timeout  # nothing to read yet
                     chunk = conn.recv(65535)
                     if not chunk:
                         closed = True
@@ -744,6 +790,7 @@ class TcpSpool:
                     # session's complete prefix is on disk
                     with self._lock:
                         self._flush_acks[key] = gen
+                        self._flush_cv.notify_all()
                 if len(buf) > self.max_buffer:
                     self.sessions_dropped += 1
                     buf = b""
@@ -758,6 +805,9 @@ class TcpSpool:
                 self._flush_acks.pop(key, None)
                 self._live_peers.pop(key, None)
                 self._active_rids.pop(key, None)
+                self._conn_wakers.pop(key, None)
+                self._flush_cv.notify_all()
+            waker.close()
             if self.neighbors_file:
                 self._write_neighbors()
             conn.close()
@@ -815,30 +865,28 @@ class TcpSpool:
         and WAIT until each acknowledges (readers call this before
         draining, so a just-received message — e.g. a withdrawal — is
         never missing from the RIB they build). Sessions that finish
-        during the wait deregister and stop blocking it."""
+        during the wait deregister and stop blocking it. The socket
+        threads are woken, so this returns as soon as they have
+        spooled what they received before the call."""
         with self._lock:
             self._flush_gen += 1
             gen = self._flush_gen
-        it0 = self._accept_iter
-        t0 = time.monotonic()
-        while time.monotonic() - t0 < timeout:
+        self._wake_all()
+
+        def done() -> bool:
             # a connection queued in the listen backlog before this
-            # flush hasn't been accept()ed yet and is invisible to the
-            # ack map: wait for the accept loop to complete a full
-            # pass (and its conn thread to register) before trusting
-            # "no pending acks"
+            # flush is invisible to the ack map until the accept loop
+            # registers it: wait for a pass that started after the
+            # call (no accept loop running: nothing will ever pass)
             alive = (
                 self._accept_thread is not None
                 and self._accept_thread.is_alive()
             )
-            # no accept loop running -> nothing will ever advance the
-            # barrier or the acks; don't spin out the whole timeout
-            accepted_pass = (not alive) or self._accept_iter >= it0 + 2
-            with self._lock:
-                pending = [a for a in self._flush_acks.values() if a < gen]
-            if accepted_pass and not pending:
-                return
-            time.sleep(0.02)
+            accepted = (not alive) or self._accepted_gen >= gen
+            return accepted and all(a >= gen for a in self._flush_acks.values())
+
+        with self._flush_cv:
+            self._flush_cv.wait_for(done, timeout)
 
     # -- Spark surfaces -----------------------------------------------
     def files(self) -> list[str]:

@@ -32,6 +32,8 @@ import tempfile
 import threading
 import time
 
+from pmacct_spark.sources.spoolio import Waker
+
 DATAGRAM_DDL = "exporter_ip string, seqno long, payload binary"
 
 
@@ -78,7 +80,13 @@ class UdpSpool:
         self.datagrams_received = 0
         self.datagrams_dropped = 0  # rows lost to failed flushes
         self.last_error: Exception | None = None
-        self._flush_req = threading.Event()
+        # flush handshake: flush() bumps _flush_want and wakes the
+        # listener, which spools what it received and records the
+        # generation it honored in _flush_done
+        self._flush_cv = threading.Condition()
+        self._flush_want = 0
+        self._flush_done = 0
+        self._waker: Waker | None = None
         # non-UDP transports (e.g. the gRPC dial-out server) hand
         # payloads in here; the socket thread drains them into the
         # same spool batches so every transport rides one decode path
@@ -111,8 +119,9 @@ class UdpSpool:
         else:
             self._sock.bind((self.host, self.port))
         self.port = self._sock.getsockname()[1]
-        # timeout bounds both the stop() latency and the flush cadence
-        self._sock.settimeout(min(self.flush_secs, 0.2))
+        # the listener waits in select(), on the socket and the waker
+        self._sock.setblocking(False)
+        self._waker = Waker()
         self._stop.clear()
         self._thread = threading.Thread(
             target=self._loop, name=f"udp-spool-{self.port}", daemon=True
@@ -122,12 +131,17 @@ class UdpSpool:
 
     def stop(self) -> None:
         self._stop.set()
+        if self._waker is not None:
+            self._waker.wake()
         if self._thread is not None:
             self._thread.join(timeout=10)
             self._thread = None
         if self._sock is not None:
             self._sock.close()
             self._sock = None
+        if self._waker is not None:
+            self._waker.close()
+            self._waker = None
 
     def __enter__(self) -> "UdpSpool":
         return self.start()
@@ -146,14 +160,21 @@ class UdpSpool:
     def _loop(self) -> None:
         buf: list[tuple[str, int, bytes]] = []
         last_flush = time.monotonic()
+        # the poll timeout bounds the flush cadence
+        poll = min(self.flush_secs, 0.2)
         while not self._stop.is_set():
-            try:
-                payload, (addr, _port) = self._sock.recvfrom(65535)
-                buf.append((addr, self._seq, payload))
-                self._seq += 1
-                self.datagrams_received += 1
-            except socket.timeout:
-                pass
+            readable = self._waker.wait(self._sock, poll)
+            # the flush() calls made so far: what each expects is in
+            # the kernel queue (or injected) by now
+            want = self._flush_want
+            flushing = want > self._flush_done
+            if flushing:
+                # drain the KERNEL queue before honoring the flush: a
+                # caller who just sent a burst expects every datagram
+                # the socket already delivered to be in the spool
+                self._recv(buf, None)
+            elif readable:
+                self._recv(buf, self.flush_datagrams)
             if self._injected:
                 with self._inject_lock:
                     injected, self._injected = self._injected, []
@@ -161,49 +182,57 @@ class UdpSpool:
                     buf.append((addr, self._seq, payload))
                     self._seq += 1
                     self.datagrams_received += 1
-            if self._flush_req.is_set():
-                # drain the KERNEL queue before honoring the flush: a
-                # caller who just sent a burst expects every datagram
-                # the socket already delivered to be in the spool, not
-                # just the ones the 0.2 s cadence happened to recv
-                self._sock.setblocking(False)
-                try:
-                    while True:
-                        try:
-                            payload, (addr, _port) = self._sock.recvfrom(65535)
-                        except (BlockingIOError, socket.timeout):
-                            break
-                        buf.append((addr, self._seq, payload))
-                        self._seq += 1
-                        self.datagrams_received += 1
-                finally:
-                    self._sock.settimeout(min(self.flush_secs, 0.2))
             now = time.monotonic()
             if buf and (
                 len(buf) >= self.flush_datagrams
                 or now - last_flush >= self.flush_secs
-                or self._flush_req.is_set()
+                or flushing
             ):
                 self._try_flush(buf)
                 buf = []
                 last_flush = now
-            if self._flush_req.is_set() and not buf:
-                self._flush_req.clear()
+            if flushing:
+                self._honored(want)
         if buf:
             self._try_flush(buf)
-        self._flush_req.clear()
+        self._honored(self._flush_want)
+
+    def _recv(self, buf: list, limit: int | None) -> None:
+        """Append the datagrams queued on the socket to ``buf``: all of
+        them, or at most ``limit``."""
+        n = 0
+        while limit is None or n < limit:
+            try:
+                payload, (addr, _port) = self._sock.recvfrom(65535)
+            except (BlockingIOError, InterruptedError):
+                return
+            buf.append((addr, self._seq, payload))
+            self._seq += 1
+            self.datagrams_received += 1
+            n += 1
+
+    def _honored(self, want: int) -> None:
+        with self._flush_cv:
+            self._flush_done = max(self._flush_done, want)
+            self._flush_cv.notify_all()
 
     def flush(self, timeout: float = 5.0) -> None:
         """Force buffered datagrams out to a spool file and wait until
         they are readable — readers call this before draining so a
         just-received datagram is never missed by the batch/stream
-        listing (the race is otherwise bounded by ``flush_secs``)."""
+        listing (the race is otherwise bounded by ``flush_secs``). The
+        listener is woken, so this returns as soon as it has spooled
+        everything received before the call."""
         if self._thread is None or not self._thread.is_alive():
             return
-        self._flush_req.set()
-        t0 = time.monotonic()
-        while self._flush_req.is_set() and time.monotonic() - t0 < timeout:
-            time.sleep(0.02)
+        with self._flush_cv:
+            self._flush_want += 1
+            want = self._flush_want
+        waker = self._waker
+        if waker is not None:  # None: stopped meanwhile
+            waker.wake()
+        with self._flush_cv:
+            self._flush_cv.wait_for(lambda: self._flush_done >= want, timeout)
 
     def _try_flush(self, rows: list[tuple[str, int, bytes]]) -> None:
         """A failed flush (disk full, spool dir removed) must not kill

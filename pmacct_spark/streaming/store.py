@@ -1,12 +1,12 @@
 """The daemon's scratch owner and its batch-path stores: each flow
 spool file is decoded once, and enriched once per RIB and maps
-generation, and the lookup RIB is built once per BGP/BMP spool
-generation.
+generation, each batch channel is aggregated once per drain input,
+and the lookup RIB is built once per BGP/BMP spool generation.
 
 One :class:`Retention` per daemon owns every ``stage()``d frame the
-batch path leaves behind: the stores' segments and RIBs, a drain's
-``stage()`` barrier and the staged dims of the ``follow_*`` LPM
-chains. Every consumer takes a :class:`Lease` from it and registers
+batch path leaves behind: the stores' segments, aggregates and RIBs, a
+drain's ``stage()`` barrier and the staged dims of the ``follow_*``
+LPM chains. Every consumer takes a :class:`Lease` from it and registers
 what it reads:
 
 - a batch drain takes an unpinned lease, and counts as one drain;
@@ -53,6 +53,19 @@ stamped with a per-file id (``FID``).
 Work that crosses files (the exporter-id join, the learned sampling
 rates) is the caller's: it reads the snapshot, and the enriched layer
 tracks it only through its key.
+
+:class:`AggregateStore` is the third layer, above the enriched one:
+one staged aggregate per batch channel, the rows of its plan over the
+drain's flow frame. Its key is everything that frame reads, computed
+without building a plan: the channel's conf, the snapshot's file ids
+(:meth:`Snapshot.key`: a new, retired or re-decoded file changes
+them), the enrichment key and the compacted flows' append count. A
+drain or replan tick under an unchanged key reads the stored table
+and plans no aggregation; a key change rebuilds the channel's table
+once and retires the old one. A rebuild is staged at once unless the
+table it replaces was never read again (an input that changes on
+every drain); then its plan is served, and the first sync that finds
+its key current stages it. Nothing is merged into an old table.
 
 :class:`RibStore` holds the lookup RIB (``Daemon.rib()``'s rows)
 ``stage()``d, with its sorted mask lengths, and rebuilds it only when
@@ -644,6 +657,104 @@ class RibStore:
             _rib_change(old, files), sum(r[1] for r in counts), len(masklens),
         )
         return _Rib(df, files, masklens)
+
+
+@dataclass(eq=False)
+class Aggregate:
+    """One batch channel's stored aggregate: ``df``, the rows of its
+    plan over the drain input ``key`` names, staged (``staged`` set)
+    or, until the store stages it, the plan itself."""
+
+    key: tuple  # ((part name, value), ...)
+    df: DataFrame  # the staged rows read with the plan's schema, or the plan
+    staged: DataFrame | None = None  # what the scratch owner releases
+    reads: int = 0  # syncs that found it current after the one that built it
+
+
+class AggregateStore:
+    """One stored aggregate per batch channel, rebuilt only when its
+    key changes; ``owner`` releases the aggregates it retires.
+    Thread-safe: a channel's rebuild is single-flight under its own
+    lock, so a drain and that channel's replan tick build it once
+    between them, and channels build in parallel."""
+
+    def __init__(self, owner: Retention):
+        self._owner = owner
+        self._lock = threading.Lock()  # guards the two dicts
+        self._slots: dict = {}  # channel -> Aggregate
+        self._locks: dict = {}  # channel -> its build lock
+
+    def sync(self, name: str, key: tuple, build: Callable, lease: Lease) -> Aggregate:
+        """Channel ``name``'s aggregate over the input ``key`` names,
+        read under ``lease``. ``build()`` returns its plan; it runs only
+        when ``key`` differs from the stored aggregate's (``((part
+        name, value), ...)``, every part the plan reads), and the old
+        aggregate is retired. The new plan's rows are staged at once,
+        unless the old aggregate was never read again: an input that
+        changes on every drain is served its plan, as before, and the
+        rows are staged by the first sync that finds the key current."""
+        with self._lock:
+            lock = self._locks.setdefault(name, threading.Lock())
+        with lock:
+            agg = self._slots.get(name)
+            if agg is None or agg.key != key:
+                old = agg
+                agg = Aggregate(key, build())
+                lazy = old is not None and not old.reads
+                if not lazy:
+                    _stage(agg)
+                with self._lock:
+                    self._slots[name] = agg
+                log.info(
+                    "aggregate store: %s rebuilt (%s)%s", name,
+                    _key_change(old, key), ", served unstaged" if lazy else "",
+                )
+                if old is not None and old.staged is not None:
+                    self._owner.retire([old.staged])
+            else:
+                agg.reads += 1
+                if agg.staged is None:
+                    _stage(agg)
+            if agg.staged is not None:
+                # registered before another sync of this channel can
+                # retire it
+                lease.read([agg.staged])
+            return agg
+
+    def close(self) -> None:
+        """Daemon stop: retire every aggregate (see :meth:`Retention.close`)."""
+        with self._lock:
+            slots, self._slots = self._slots, {}
+        self._owner.retire([a.staged for a in slots.values() if a.staged is not None])
+
+
+def _stage(agg: Aggregate) -> None:
+    """Stage an aggregate's plan; it is read back from then on."""
+    from pmacct_spark.operators.staging import stage_result
+
+    agg.staged = stage_result(agg.df)
+    agg.df = _with_schema(agg.staged, agg.df.schema)
+
+
+def _with_schema(df: DataFrame, schema) -> DataFrame:
+    """``df``, staged rows of a frame of ``schema``, read with that
+    schema: a parquet read makes every column nullable, and the sinks
+    derive their record schemas (Avro unions) from nullability."""
+    if df.schema == schema:
+        return df
+    spark = df.sparkSession
+    jss = spark._jsparkSession
+    return DataFrame(
+        jss.createDataFrame(df._jdf.rdd(), jss.parseDataType(schema.json())), spark
+    )
+
+
+def _key_change(old: Aggregate | None, key: tuple) -> str:
+    """Why a channel's aggregate was rebuilt, for the log line."""
+    if old is None:
+        return "first build"
+    was = dict(old.key)
+    return ", ".join(k for k, v in key if was.get(k) != v) + " changed"
 
 
 def _rib_change(old: _Rib | None, files: tuple) -> str:

@@ -161,3 +161,56 @@ def test_plain_auth_vhost_and_frame_max():
         cli.close()
     finally:
         b.stop()
+
+
+def test_amqp_avro_datums_pack_under_multi_values(spark, broker):
+    """``amqp_output: avro`` with ``amqp_multi_values`` batches datums
+    the way the Kafka transport does (CONFIG-KEYS:1866): concatenated
+    under avro_buffer_size, at most N per message. Every record is
+    read back, in sequence, from the bodies published through the
+    live wire."""
+    import io
+    from types import SimpleNamespace
+
+    from pmacct_spark import conffile
+    from pmacct_spark.sinks import avro as A
+    from pmacct_spark.sinks.plugins import AmqpBus
+
+    agg = spark.createDataFrame(
+        [(i, f"peer{i % 5}", i * 10) for i in range(10)],
+        "rec_id long, peer string, bytes long",
+    ).coalesce(1)
+    d = SimpleNamespace(conf=conffile.parse_conf(f"""
+amqp_multi_values[b]: 3
+avro_buffer_size[b]: 65536
+amqp_port[b]: {broker.port}
+"""))
+    bus = AmqpBus(d, "b", "acct")
+    setup = AmqpWireClient(broker.host, broker.port)
+    try:
+        setup.exchange_declare("pmacct", "direct")
+        setup.queue_declare("qa")
+        setup.queue_bind("qa", "pmacct", "acct")
+    finally:
+        setup.close()
+    bus.send(bus.frames(agg, "avro", "application/octet-stream"))
+
+    schema = A.avro_schema_of(agg.schema)
+    cli = AmqpWireClient(broker.host, broker.port)
+    bodies = []
+    try:
+        while (msg := cli.get("qa")) is not None:
+            bodies.append(bytes(msg["body"]))
+    finally:
+        cli.close()
+    recs = []
+    for body in bodies:
+        buf = io.BytesIO(body)
+        n = 0
+        while buf.tell() < len(body):
+            recs.append(A.read_datum(buf, schema))
+            n += 1
+        assert n <= 3  # at most amqp_multi_values datums per message
+    assert len(bodies) == 4  # 10 records, 3 per message
+    assert sorted(r["rec_id"] for r in recs) == list(range(10))
+    assert {r["rec_id"]: r["bytes"] for r in recs} == {i: i * 10 for i in range(10)}

@@ -209,3 +209,56 @@ def test_tcp_peer_batching_requires_both_keys():
 
     sp = TcpSpool(framing="bmp", host="127.0.0.1", port=0, batch=5)
     assert sp.peer_batch == 0 and sp.peer_batch_interval == 0
+
+
+def test_a_message_sent_just_before_a_drain_is_in_it(spark, tmp_path):
+    """A flow datagram and a BGP UPDATE on a live session, each sent
+    straight before a drain, are counted in that drain: the drain's
+    spool flush wakes the listeners instead of waiting out their poll
+    timeouts, so with nothing pending it returns at once."""
+    import socket
+    import statistics
+
+    from pmacct_spark.daemon import Daemon
+    from pmacct_spark.streaming.bmp import encode_bgp_open, encode_bgp_update
+    from tests.test_streaming import _v5_datagram
+
+    conf = """
+nfacctd_ip: 127.0.0.1
+nfacctd_port: 0
+bgp_daemon: true
+bgp_daemon_ip: 127.0.0.1
+bgp_daemon_port: 0
+plugins: memory[paths]
+aggregate[paths]: as_path
+"""
+
+    def datagram(nbytes: int) -> bytes:
+        rec = {"src": 0x0A000001, "dst": 0x0B000001, "pkts": 1, "bytes": nbytes,
+               "sport": 1, "dport": 2}
+        return _v5_datagram(1, [rec])
+
+    def paths(d) -> dict:
+        res = d.run_available(streaming=False)["paths"].collect()
+        return {r["as_path"]: r["bytes"] for r in res}
+
+    d = Daemon.from_conf(spark, conf, spool_dir=str(tmp_path / "spool"))
+    peer = socket.create_connection(("127.0.0.1", d.bgp_port))
+    try:
+        peer.sendall(
+            encode_bgp_open(asn=65000) + encode_bgp_update(0x0B000000, 8, "65000 65100")
+        )
+        send_datagrams([datagram(300)], "127.0.0.1", d.port)
+        assert paths(d) == {"65000 65100": 300}
+        peer.sendall(encode_bgp_update(0x0B000000, 8, "65000 65200"))
+        send_datagrams([datagram(400)], "127.0.0.1", d.port)
+        assert paths(d) == {"65000 65200": 700}
+        took = []
+        for _ in range(5):
+            t0 = time.monotonic()
+            d._flush_spools()
+            took.append(time.monotonic() - t0)
+        assert statistics.median(took) < 0.05, took
+    finally:
+        peer.close()
+        d.stop()
