@@ -3,20 +3,21 @@ socket -> wire decode -> per-plugin channels -> sinks.
 
 This is the nfacctd top loop (reference src/nfacctd.c: socket setup
 :1525, version dispatch :1649, plugin fan-out src/plugin_hooks.c)
-re-expressed as Structured Streaming over the engine's own pieces:
+re-expressed over the engine's own pieces:
 
     conffile.parse_conf()  ->  channels (PluginConfig each)
-    UdpSpool(port)         ->  datagram stream (the recvfrom loop)
-    decode_any             ->  flow records (v5/v9/IPFIX dispatch)
-    canonical_flows        ->  the registry's column vocabulary
-    stream_aggregation     ->  one windowed aggregation per plugin
-    sinks                  ->  memory (IMT) / print (csv/json/avro)
+    UdpSpool(port)         ->  datagram spool (the recvfrom loop)
+    DecodedStore           ->  each spool file decoded (v5/v9/IPFIX/
+                               sFlow) and enriched once
+    build_aggregation      ->  one aggregation per plugin, stored per
+                               drain input (AggregateStore)
+    sinks                  ->  memory (IMT) / print / sql / bus / ...
 
-``run_available`` drains everything received so far and stops (the
-pcap-replay harness shape); a live deployment starts the same queries
-with a processing-time trigger instead. One daemon == one collector
-edge node; scale-out is N daemons spooling to shared storage with the
-cluster running the same channel queries over the union.
+``run_available`` drains everything received so far through every
+channel, from the stores, and stops (the pcap-replay harness shape);
+``run_continuous`` serves the same channels live. One daemon == one
+collector edge node; scale-out is N daemons spooling to shared storage
+with the cluster running the same channel plans over the union.
 """
 
 from __future__ import annotations
@@ -100,8 +101,9 @@ _REREAD_MAPS = (
 
 @dataclass
 class Daemon:
-    """A running collector: the socket spool plus one streaming (or
-    replay) aggregation per configured plugin."""
+    """A running collector: the socket spool, the decoded, enriched,
+    RIB and aggregate stores every batch drain reads, and one
+    aggregation per configured plugin."""
 
     spark: SparkSession
     conf: conffile.Conf
@@ -150,11 +152,15 @@ class Daemon:
     # drains and replan ticks read it; the streaming path does not)
     _store: DecodedStore = field(init=False, repr=False)
     # the batch path's lookup RIB, staged once per BGP/BMP spool
-    # generation (streaming plans read the live rib() instead)
+    # generation
     _ribs: RibStore = field(init=False, repr=False)
     # each batch channel's aggregate, staged once per drain input
     # (batch drains and replan ticks read it)
     _aggregates: AggregateStore = field(init=False, repr=False)
+    # channel -> the aggregate its imt_<name> view last got from a
+    # drain: registering a view costs a Spark command, so a warm drain
+    # serving the same aggregate skips it
+    _views: dict = field(default_factory=dict, repr=False)
 
     def __post_init__(self):
         self._store = DecodedStore(self._scratch)
@@ -779,19 +785,11 @@ class Daemon:
             self._rib_files, lambda files: self.rib(files=files), lease
         )
 
-    def _live_rib(self, streaming: bool) -> RibSnapshot:
-        """The RIB read live, unstaged: the streaming plans' source,
-        and the default of enrichment calls made outside the daemon's
-        batch path. Streaming plans probe the FIXED 32..0 masklen
-        range: a driver-side masklen read would freeze the set at
-        .start() time, so routes (or new prefix lengths) announced
-        after startup would never be joined for the lifetime of the
-        query. With the fixed range, the per-masklen dims are
-        stream-static relations re-read every micro-batch. Otherwise
-        the LPM joins discover the mask lengths themselves."""
-        return RibSnapshot(
-            self.rib(), list(range(32, -1, -1)) if streaming else None
-        )
+    def _live_rib(self) -> RibSnapshot:
+        """The RIB read live, unstaged: the default of enrichment calls
+        made outside the daemon's batch path. The LPM joins discover
+        the mask lengths themselves."""
+        return RibSnapshot(self.rib(), None)
 
     # ---- spool compaction (bounded-replay serving, VERDICT r4 #4) ----
     #
@@ -1095,7 +1093,8 @@ class Daemon:
 
     def _enrich_datagrams(self, dg: DataFrame) -> DataFrame:
         """The streaming plans' frame: decode the spool stream ``dg`` in
-        stream order and enrich the flows against the live RIB."""
+        stream order and enrich the flows (no live dimension: see
+        :meth:`run_continuous`)."""
         from pmacct_spark.streaming.decode import (
             decode_any,
             decode_options_data,
@@ -1117,25 +1116,24 @@ class Daemon:
             df = self._account_options_union(
                 df, decode_options_data(dg, customs) if customs else None
             )
-        return self._enrich(df, streaming=True)
+        return self._enrich(df)
 
     def _enrich(
         self,
         df: DataFrame,
-        streaming: bool,
         options: DataFrame | None = None,
         rib: RibSnapshot | None = None,
     ) -> DataFrame:
         """Maps, then BGP/BMP and peer-AS enrichment of canonical flows.
         ``options`` are the decoded options rows the sampling rates are
-        learned from (None: the streaming plans decode them from the
-        live spool). ``rib``
-        is the RIB snapshot batch callers read (:meth:`_rib_snapshot`);
-        streaming plans pass None and read the live RIB."""
+        learned from (read only when rates are learned). ``rib`` is the
+        RIB snapshot batch callers read (:meth:`_rib_snapshot`). The
+        streaming plans pass neither: they run only without a live
+        dimension (no BGP/BMP/RTR, no learned rates)."""
         df = self._maps(df, options)
         if self.bgp_spool is not None or self.bmp_spool is not None:
-            df = self._bgp_enrich(df, streaming=streaming, rib=rib)
-        df = self._peer_as_enrich(df, streaming=streaming, rib=rib)
+            df = self._bgp_enrich(df, rib=rib)
+        df = self._peer_as_enrich(df, rib=rib)
         return df
 
     def _netflow_decode_opts(self) -> dict:
@@ -1169,11 +1167,11 @@ class Daemon:
         the exporter identity by default (CONFIG-KEYS:2213) — the IPFIX
         twin of the sFlow Agent Address; nfacctd_ignore_exporter_address
         keeps the socket address. Latest exposition per socket wins;
-        tiny dim, broadcast. Batch-drain only, like bgp_follow_nexthop:
-        the latest-wins pick is a row_number window over the options
-        stream, which a continuously-running streaming plan cannot
-        express (it would freeze the dim at .start()) — the streaming
-        path keeps the socket address, matching
+        tiny dim, broadcast. Batch path only: the latest-wins pick is
+        a row_number window over the options stream, which a
+        continuously-running streaming plan cannot express (it would
+        freeze the dim at .start()) — the streaming path keeps the
+        socket address, matching
         nfacctd_ignore_exporter_address=true behavior."""
         from pyspark.sql import Window as _W
 
@@ -1387,9 +1385,7 @@ class Daemon:
         column ``FID``."""
         decoded = snap.flows(files, fid)
         if self.flavor == "sflow":
-            return self._enrich(
-                canonical_flows(decoded), streaming=False, rib=rib
-            )
+            return self._enrich(canonical_flows(decoded), rib=rib)
         if not self.conf.getbool(
             "nfacctd_ignore_exporter_address"
         ) and self._has_exporter_ids(snap, files):
@@ -1399,7 +1395,6 @@ class Daemon:
         )
         return self._enrich(
             df,
-            streaming=False,
             options=snap.options() if self._learns_rates() else None,
             rib=rib,
         )
@@ -1427,8 +1422,9 @@ class Daemon:
         return memo[key]
 
     def _streamed(self) -> DataFrame:
-        """The flow frame every streaming channel aggregates: the spool
-        tailed, decoded and enriched per micro-batch."""
+        """The flow frame :meth:`run_continuous`' streaming channels
+        aggregate: the spool tailed, decoded and enriched per
+        micro-batch."""
         return self._enrich_datagrams(self.spool.stream(self.spark))
 
     def _decoded(self, lease: Lease) -> tuple[Callable[[], DataFrame], tuple]:
@@ -1694,10 +1690,7 @@ class Daemon:
         return self._agent_map_cache
 
     def _bgp_enrich(
-        self,
-        df: DataFrame,
-        streaming: bool = False,
-        rib: RibSnapshot | None = None,
+        self, df: DataFrame, rib: RibSnapshot | None = None
     ) -> DataFrame:
         """Peer-then-LPM flow correlation against the RIB
         (bgp_srcdst_lookup, reference src/bgp/bgp_lookup.c:33-210):
@@ -1707,7 +1700,7 @@ class Daemon:
 
         ``rib`` is the lookup RIB: the batch path passes its RIB
         snapshot (:meth:`_rib_snapshot`); None reads the live RIB
-        (:meth:`_live_rib`), as streaming plans do. Every LPM join
+        (:meth:`_live_rib`). Every LPM join
         probes exactly ``rib.masklens``, so with a snapshot no lookup
         runs its own masklen discovery collect."""
         from pmacct_spark.operators.lpm import lpm_join
@@ -1722,7 +1715,7 @@ class Daemon:
             from pmacct_spark.operators.agentmap import apply_bgp_agent_map
 
             df = apply_bgp_agent_map(df, amap)
-        snap = rib if rib is not None else self._live_rib(streaming)
+        snap = rib if rib is not None else self._live_rib()
         rib = snap.df.withColumnRenamed("prefix", "net_int")
         masklens = snap.masklens
         attrs = {
@@ -1755,13 +1748,11 @@ class Daemon:
             defaults["dst_roa"] = "u"  # off-RIB traffic: unknown
         fdef = int(self.conf.get("bgp_follow_default") or 0)
         lookup_peer = "peer_ip_src"
-        if fdef and not streaming:
+        if fdef:
             # bgp_follow_default (CONFIG-KEYS; bgp_lookup.c:403-476):
             # default-only/partial-view peerings — when the exporter's
             # RIB answer is its default route, the default gateway's
             # RIB answers instead, recursively up to the budget.
-            # Batch-drain only, like bgp_follow_nexthop below (the
-            # dim-side probes re-run per daemon tick).
             from pmacct_spark.functions.addr import ipv4_ntoa
             from pmacct_spark.operators.lpm import follow_default_join
 
@@ -1787,15 +1778,11 @@ class Daemon:
         if lookup_peer == "__fd_peer":
             out = out.drop("__fd_peer")
         fnh = self.conf.get("bgp_follow_nexthop")
-        if fnh and not streaming:
+        if fnh:
             # bgp_follow_nexthop (+_external) — recursive next-hop
             # resolution for peer_dst_ip, into the registry's column
             # peer_ip_dst (bgp_follow_nexthop_lookup
-            # src/bgp/bgp_lookup.c:480; CONFIG-KEYS:3040-3055). Live
-            # serving rides the daemon's per-tick replan (the dim-side
-            # depth/masklen probes re-run each tick), so the streaming
-            # path — whose plan would freeze them at .start() — keeps
-            # the plain first-lookup next-hop instead.
+            # src/bgp/bgp_lookup.c:480; CONFIG-KEYS:3040-3055)
             from pmacct_spark.functions.addr import ipv4_ntoa
             from pmacct_spark.operators.lpm import follow_nexthop_join
 
@@ -1921,10 +1908,7 @@ class Daemon:
         return out
 
     def _peer_as_enrich(
-        self,
-        df: DataFrame,
-        streaming: bool = False,
-        rib: RibSnapshot | None = None,
+        self, df: DataFrame, rib: RibSnapshot | None = None
     ) -> DataFrame:
         """The source-peer-ASN method selectors + the [ns]facctd
         peer-AS flip:
@@ -2009,7 +1993,7 @@ class Daemon:
             return df
         from pmacct_spark.operators.lpm import lpm_join
 
-        snap = rib if rib is not None else self._live_rib(streaming)
+        snap = rib if rib is not None else self._live_rib()
         rib = snap.df.withColumnRenamed("prefix", "net_int")
         attrs = dict(want_src_attrs)
         if psa_type in ("map", "bgp"):
@@ -2178,7 +2162,7 @@ class Daemon:
         find_id / sampling-map passes tag and renormalize records
         before plugin fan-out (src/pretag.c:1117). ``options`` are the
         live spool's decoded options rows, for the learned sampling
-        rates (None: the streaming plans decode them from the spool)."""
+        rates (read only when rates are learned)."""
         ptm = self._pretag_map()
         if ptm is not None:
             df = df.withColumns(ptm.columns)
@@ -2239,21 +2223,16 @@ class Daemon:
             # per exporter wins; tiny dim, broadcast.
             from pyspark.sql import Window as _W
 
-            opts = options
-            if opts is None:
-                from pmacct_spark.streaming.decode import decode_options
-
-                opts = decode_options(
-                    self._spool_batch().select("exporter_ip", "payload")
-                )
             comp_opts = self._compacted_table("options")
             if comp_opts is not None:
                 # expositions whose datagrams were compacted away must
                 # still rate new flows (latest per exporter wins below)
-                opts = opts.unionByName(comp_opts, allowMissingColumns=True)
+                options = options.unionByName(
+                    comp_opts, allowMissingColumns=True
+                )
             w_last = _W.partitionBy("exporter_ip").orderBy(F.desc("seqno"))
             rates = (
-                opts.filter("sampling_rate IS NOT NULL")
+                options.filter("sampling_rate IS NOT NULL")
                 .withColumn("__rn", F.row_number().over(w_last))
                 .filter("__rn = 1")
                 .select(
@@ -2305,59 +2284,12 @@ class Daemon:
             )
         # guarantee the columns the channel configs reference even when
         # the producing map is absent (tag=0 untagged, rate=1 unsampled)
-        # — otherwise build_aggregation's renormalize/pre_tag_filter
-        # blocks raise on the missing column while the streaming path's
-        # guarded _route silently skips them: crash vs divergence for
-        # the same conf
+        # — otherwise pipeline.route's pre_tag_filter and renormalize
+        # steps raise on the missing column
         if "tag" not in df.columns:
             df = df.withColumn("tag", F.lit(0).cast("bigint"))
         if "sampling_rate" not in df.columns:
             df = df.withColumn("sampling_rate", F.lit(1).cast("long"))
-        return df
-
-    @staticmethod
-    def _route(df: DataFrame, cfg) -> DataFrame:
-        """Per-channel routing for the STREAMING path (the batch path
-        gets this inside build_aggregation): aggregate_filter +
-        pre_tag_filter + post-tagging + sampling renormalization, in
-        the batch path's exact order — aggregate_filter must see RAW
-        columns (a 'bytes < X' filter evaluated after renormalization
-        would drop different records than the batch plan)."""
-        if cfg.aggregate_filter:
-            df = df.filter(cfg.aggregate_filter)
-        if cfg.pre_tag_filter is not None and "tag" in df.columns:
-            df = df.filter(F.col("tag").isin(list(cfg.pre_tag_filter)))
-        if cfg.pre_tag_label_filter:
-            from pmacct_spark.operators.pretag import label_filter_keep
-
-            if "label" not in df.columns:  # unlabelled = 'null'
-                df = df.withColumn("label", F.lit(None).cast("string"))
-            df = df.filter(label_filter_keep(cfg.pre_tag_label_filter))
-        # post_tag overrides AFTER the filter, mirroring
-        # pipeline.build_aggregation — the batch and streaming paths
-        # must produce identical aggregates for the same conf
-        if cfg.post_tag is not None:
-            df = df.withColumn("tag", F.lit(cfg.post_tag).cast("bigint"))
-        if cfg.post_tag2 is not None:
-            df = df.withColumn("tag2", F.lit(cfg.post_tag2).cast("bigint"))
-        if cfg.timestamps_secs:
-            for c in ("ts", "end_ts", "timestamp_arrival", "timestamp_export"):
-                if c in df.columns:
-                    df = df.withColumn(
-                        c,
-                        F.expr(
-                            f"CAST(date_trunc('second', {c}) AS TIMESTAMP_NTZ)"
-                        ),
-                    )
-        if cfg.renormalize and "sampling_rate" in df.columns:
-            for c in ("bytes", "packets"):
-                df = df.withColumn(
-                    c,
-                    F.expr(
-                        f"CASE WHEN sampling_rate > 1 THEN {c} * "
-                        f"sampling_rate ELSE {c} END"
-                    ),
-                )
         return df
 
     def _flush_spools(self) -> None:
@@ -2369,61 +2301,32 @@ class Daemon:
 
     def run_available(self, streaming: bool = True) -> dict[str, DataFrame]:
         """Process everything received so far through EVERY configured
-        plugin channel (availableNow semantics) and deliver to each
-        plugin's sink (the ``sinks.plugins`` table). Returns
-        {plugin_name: result DataFrame}."""
+        plugin channel (availableNow semantics), deliver to each
+        plugin's sink (the ``sinks.plugins`` table) and register each
+        channel's aggregate as the temp view ``imt_<name>``. Returns
+        {plugin_name: result DataFrame}. ``streaming`` selects nothing:
+        every channel is served from the stores."""
         from pmacct_spark.sinks.plugins import plugin, run_trigger
-        from pmacct_spark.streaming.jobs import (
-            run_to_memory,
-            stream_aggregation,
-        )
 
         self._flush_spools()
         results: dict[str, DataFrame] = {}
         ptype_by_name = self._ptype_by_name()
-
-        def is_stream(cfg) -> bool:
-            return bool(
-                streaming and cfg.history and not cfg.history_spec().calendar
-            )
-
         # Each spool file is decoded ONCE, into the decoded-flow store
         # (the reference decodes once and fans out to plugins,
-        # src/plugin_hooks.c), and each batch channel's aggregate is
-        # kept, like the reference's plugin cache: a channel whose
-        # input key did not change reads its stored table, and the
-        # drain's flow frame is built only when a channel rebuilds or
-        # a probe reads it. Only when that frame has a join or a
-        # Python node above the stored rows is it staged, so N
-        # channels don't repeat that work.
-        decoded = key = lease = frame = None
-        n_batch = sum(1 for c in self.channels.values() if not is_stream(c))
-
-        def flows() -> DataFrame:
-            nonlocal frame
-            if frame is None:
-                from pmacct_spark.operators.staging import plan_recomputes, stage
-
-                frame = decoded()
-                if n_batch > 1 and plan_recomputes(frame):
-                    frame = stage(frame)
-                    lease.hold([frame])
-            return frame
-
+        # src/plugin_hooks.c), and each channel's aggregate is kept,
+        # like the reference's plugin cache: a channel whose input key
+        # did not change reads its stored table, and the drain's flow
+        # frame is built only when a channel rebuilds or a probe reads
+        # it. One drain: what it reads stays readable for the caller's
+        # lazy results until two more drains start.
+        lease = self._scratch.lease()
+        flows, key = self._decoded(lease)
         for name, cfg in self.channels.items():
-            if is_stream(cfg):
-                agg = stream_aggregation(
-                    self._route(self._streamed(), cfg),
-                    _replace(cfg, aggregate_filter=None),  # applied in _route
-                )
-                out = run_to_memory(agg, f"imt_{name}")
-            else:
-                if decoded is None:
-                    # one drain: what it reads stays readable for the
-                    # caller's lazy results until two more drains start
-                    lease = self._scratch.lease()
-                    decoded, key = self._decoded(lease)
-                out = self._aggregate(name, cfg, flows, key, lease).df
+            agg = self._aggregate(name, cfg, flows, key, lease)
+            if self._views.get(name) is not agg:
+                agg.df.createOrReplaceTempView(f"imt_{name}")
+                self._views[name] = agg
+            out = agg.df
             ptype = ptype_by_name.get(name, "memory")
             wid = self.conf.get("writer_id_string", name)
             if wid:
@@ -2441,7 +2344,7 @@ class Daemon:
                 out = out.withColumn("writer_id", F.lit(rendered))
             row = plugin(ptype)
             if row.emit is not None:
-                row.emit(self, name, out, None if decoded is None else flows)
+                row.emit(self, name, out, flows)
             if row.prefix:
                 run_trigger(self, name, row.prefix)
             results[name] = out
@@ -3056,14 +2959,17 @@ class Daemon:
         arrive. Returns a handle; results are readable at any time
         via ``spark.table``.
 
-        Channels WITHOUT live-dimension enrichment run as Structured
-        Streaming queries (processing-time trigger). Channels
-        enriched from a LIVE RIB (bgp_daemon/bmp_daemon) instead run
-        a replan loop: a Structured Streaming plan pins the static
-        side's FILE LISTING at .start() time, so routes spooled after
-        startup would be invisible for the lifetime of the query —
-        re-planning per tick reads the RIB as of each tick, matching
-        the reference's enrich-at-arrival semantics."""
+        Channels enriched from a live dimension (BGP/BMP RIB, RTR
+        ROAs, learned sampling rates) run a replan loop over the
+        stores, as ``run_available`` does: a Structured Streaming plan
+        pins the static side's FILE LISTING at .start() time, so
+        routes spooled after startup would be invisible for the
+        lifetime of the query — re-planning per tick reads the RIB as
+        of each tick, matching the reference's enrich-at-arrival
+        semantics. Without a live dimension, channels run as
+        Structured Streaming queries (processing-time trigger) over
+        :meth:`_streamed`, the only caller of the streaming plans;
+        those neither persist nor forward templates."""
         from pmacct_spark.sinks.plugins import plugin
         from pmacct_spark.streaming.jobs import stream_aggregation
 
@@ -3116,10 +3022,7 @@ class Daemon:
                     build_aggregation(self._decoded(lease)[0](), cfg)
                 plans[name] = _ReplanLoop(self, name, cfg, triggers[name])
             else:
-                plans[name] = stream_aggregation(
-                    self._route(self._streamed(), cfg),
-                    _replace(cfg, aggregate_filter=None),  # applied in _route
-                )
+                plans[name] = stream_aggregation(self._streamed(), cfg)
         queries = {}
         for name, plan in plans.items():
             if isinstance(plan, _ReplanLoop):

@@ -30,8 +30,11 @@ from pmacct_spark.registry import DEFAULT_COUNTERS, PRIMITIVES, SUM_FOLDS, resol
 RENORM_COUNTERS = ("bytes", "packets")  # reference src/pkt_handlers.c:1175-1213
 
 
-def build_aggregation(flows: DataFrame, cfg: PluginConfig) -> DataFrame:
-    """Compile one plugin channel into a DataFrame plan over ``flows``."""
+def route(flows: DataFrame, cfg: PluginConfig) -> DataFrame:
+    """Route ``flows`` into channel ``cfg``: its filters, post-tagging,
+    timestamp truncation and renormalization, in that order (the
+    filters see RAW columns). The batch and the streaming aggregation
+    both start here."""
     df = flows
 
     # --- route records into the channel (exec_plugins filters,
@@ -80,6 +83,30 @@ def build_aggregation(flows: DataFrame, cfg: PluginConfig) -> DataFrame:
                         f"ELSE {c} END"
                     ),
                 )
+    return df
+
+
+def post_agg(out: DataFrame, cfg: PluginConfig) -> DataFrame:
+    """Channel ``cfg``'s post-aggregation steps over its aggregate
+    ``out``: plain filters and column maps, so the streaming
+    aggregation applies them unchanged."""
+    # --- preprocess = HAVING + actions (reference src/preprocess.c)
+    if cfg.preprocess:
+        having = cfg.preprocess.having_sql()
+        if having:
+            out = out.filter(having)
+        if cfg.preprocess.usrf:
+            for c in ("bytes", "packets"):
+                if c in out.columns:
+                    out = out.withColumn(c, F.col(c) * F.lit(cfg.preprocess.usrf))
+        if cfg.preprocess.adjb and "bytes" in out.columns:
+            out = out.withColumn("bytes", F.col("bytes") + F.lit(cfg.preprocess.adjb))
+    return out
+
+
+def build_aggregation(flows: DataFrame, cfg: PluginConfig) -> DataFrame:
+    """Compile one plugin channel into a DataFrame plan over ``flows``."""
+    df = route(flows, cfg)
 
     # --- sum_* folds: one record contributes to both its src-keyed and
     #     dst-keyed group (reference src/plugin_common.c:710-760)
@@ -147,17 +174,7 @@ def build_aggregation(flows: DataFrame, cfg: PluginConfig) -> DataFrame:
         aggs.append(PRIMITIVES["timestamp_max"].agg_expr())
     out = df.groupBy(*group_cols).agg(*aggs) if group_cols else df.agg(*aggs)
 
-    # --- preprocess = HAVING + actions (reference src/preprocess.c)
-    if cfg.preprocess:
-        having = cfg.preprocess.having_sql()
-        if having:
-            out = out.filter(having)
-        if cfg.preprocess.usrf:
-            for c in ("bytes", "packets"):
-                if c in out.columns:
-                    out = out.withColumn(c, F.col(c) * F.lit(cfg.preprocess.usrf))
-        if cfg.preprocess.adjb and "bytes" in out.columns:
-            out = out.withColumn("bytes", F.col("bytes") + F.lit(cfg.preprocess.adjb))
+    out = post_agg(out, cfg)
 
     # --- client -T top-N (reference src/pmacct.c:3152 merge sort);
     #     tie-broken on the full key so LIMIT is deterministic

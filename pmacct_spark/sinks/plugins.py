@@ -4,11 +4,10 @@
 Every emitter is a plain function ``(daemon, name, out, flows)``:
 ``out`` is the channel's aggregate, ``flows()`` returns the drain's
 decoded flow frame, built on first use (the probes re-export flows,
-not aggregates; ``flows`` is None when no batch channel ran). An
-emitter reads its own conf keys and never rebinds a frame another
-channel reads. ``prefix`` names the type's conf prefix —
-``<prefix>_refresh_time`` and ``<prefix>_trigger_exec`` exist only for
-types that have one.
+not aggregates). An emitter reads its own conf keys and never
+rebinds a frame another channel reads. ``prefix`` names the type's
+conf prefix — ``<prefix>_refresh_time`` and ``<prefix>_trigger_exec``
+exist only for types that have one.
 
 Kafka and AMQP are one emitter (:func:`emit_bus`) over two transports,
 as in the reference, where kafka_plugin.c and amqp_plugin.c run the
@@ -587,7 +586,7 @@ def emit_probe(d, name: str, out: DataFrame, flows, ptype: str,
     re-export the drain's flows over UDP to ``<ptype>_receiver``."""
     conf = d.conf
     recv = conf.get(f"{ptype}_receiver", name)
-    if not recv or flows is None:
+    if not recv:
         return
     from pmacct_spark.sinks.tee import emit_udp
 

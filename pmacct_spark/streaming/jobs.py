@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from pmacct_spark.config import PluginConfig
 from pmacct_spark.operators.staging import retain
+from pmacct_spark.pipeline import post_agg, route
 from pmacct_spark.sources.tables import nano_ts_fields
 from pmacct_spark.views.flows import flows_select_exprs
 
@@ -178,14 +179,14 @@ def stream_aggregation(
     cfg: PluginConfig,
     watermark_delay: str | None = None,
 ) -> DataFrame:
-    """One plugin channel as a streaming aggregation.
+    """One plugin channel as a streaming aggregation: the batch plan's
+    routing (``pipeline.route``) and post-aggregation steps
+    (``pipeline.post_agg``) around a windowed group-by.
 
     ``watermark_delay`` is the reference's sql_startup_delay (allowed
     lateness); None = complete/update-mode serving without eviction.
     """
-    df = flows
-    if cfg.aggregate_filter:
-        df = df.filter(cfg.aggregate_filter)
+    df = route(flows, cfg)
     hist = cfg.history_spec()
     if hist is None:
         raise ValueError("streaming channel needs a history (window) spec")
@@ -244,7 +245,7 @@ def stream_aggregation(
         out = df.groupBy("stamp_inserted", *[F.col(k) for k in keys]).agg(
             *aggs
         )
-        return _post_agg(out, cfg)
+        return post_agg(out, cfg)
     # sql_history_offset (CONFIG-KEYS:1413): boundaries sit at
     # k*timeslot - offset; F.window's startTime expresses exactly that
     # as (timeslot - offset) mod timeslot
@@ -263,29 +264,7 @@ def stream_aggregation(
         *counters,
         *(["timestamp_min", "timestamp_max"] if cfg.stitching else []),
     )
-    return _post_agg(out, cfg)
-
-
-def _post_agg(out: DataFrame, cfg: PluginConfig) -> DataFrame:
-    """Post-aggregation preprocess (HAVING + usrf/adjb actions),
-    identical to the batch path (pipeline.py) — plain filters and
-    column maps over the aggregate, so they stream in complete/update
-    serving unchanged."""
-    if cfg.preprocess:
-        having = cfg.preprocess.having_sql()
-        if having:
-            out = out.filter(having)
-        if cfg.preprocess.usrf:
-            for c in ("bytes", "packets"):
-                if c in out.columns:
-                    out = out.withColumn(
-                        c, F.col(c) * F.lit(cfg.preprocess.usrf)
-                    )
-        if cfg.preprocess.adjb and "bytes" in out.columns:
-            out = out.withColumn(
-                "bytes", F.col("bytes") + F.lit(cfg.preprocess.adjb)
-            )
-    return out
+    return post_agg(out, cfg)
 
 
 def session_flows_stream(flows: DataFrame, keys: list[str], gap_s: int) -> DataFrame:

@@ -4,10 +4,9 @@ generation, each batch channel is aggregated once per drain input,
 and the lookup RIB is built once per BGP/BMP spool generation.
 
 One :class:`Retention` per daemon owns every ``stage()``d frame the
-batch path leaves behind: the stores' segments, aggregates and RIBs, a
-drain's ``stage()`` barrier and the staged dims of the ``follow_*``
-LPM chains. Every consumer takes a :class:`Lease` from it and registers
-what it reads:
+batch path leaves behind: the stores' segments, aggregates and RIBs
+and the staged dims of the ``follow_*`` LPM chains. Every consumer
+takes a :class:`Lease` from it and registers what it reads:
 
 - a batch drain takes an unpinned lease, and counts as one drain;
 - a replan tick, a compaction or a counter-log write takes a pinned

@@ -88,7 +88,10 @@ def test_daemon_conf_to_sinks(spark, tmp_path):
 
 def test_daemon_batch_replay_equals_streaming(spark, tmp_path):
     """The same spool replayed as a BATCH plan (pcap-savefile shape)
-    produces the identical channel result."""
+    produces the identical channel result as the streaming plan
+    ``run_continuous`` serves it with."""
+    from pmacct_spark.streaming.jobs import run_to_memory, stream_aggregation
+
     d = Daemon.from_conf(
         spark, CONF, spool_dir=str(tmp_path / "spool2")
     )
@@ -97,13 +100,13 @@ def test_daemon_batch_replay_equals_streaming(spark, tmp_path):
         t0 = time.monotonic()
         while d.spool.datagrams_received < 2 and time.monotonic() - t0 < 15:
             time.sleep(0.05)
+        replay = {
+            tuple(r) for r in results_select(d.run_available()["files"])
+        }
+        streamed = stream_aggregation(d._streamed(), d.channels["files"])
         live = {
             tuple(r)
-            for r in results_select(d.run_available(streaming=True)["files"])
-        }
-        replay = {
-            tuple(r)
-            for r in results_select(d.run_available(streaming=False)["files"])
+            for r in results_select(run_to_memory(streamed, "parity_files"))
         }
     finally:
         d.stop()

@@ -391,7 +391,7 @@ def test_store_drain_stage_only_above_a_join(
     try:
         _spool(d, "b1", [_v9(1, [_rec(0), _rec(1)])])
         assert _total_bytes(d) == _bytes([_rec(0), _rec(1)])
-        assert len(stages) == 1 + enriched  # the segment, then the drain's
+        assert len(stages) == 1 + enriched  # the segment, then the enriched rows
         del stages[:]
         assert _total_bytes(d) == _bytes([_rec(0), _rec(1)])
         assert len(stages) == 0  # a warm drain stages nothing

@@ -305,23 +305,12 @@ def test_no_logging_import_inside_a_function():
     assert not offenders, "\n".join(sorted(set(offenders)))
 
 
-def test_one_batch_decode_route():
-    """The daemon's batch path decodes and learns only through the
-    decoded-flow store. In ``daemon.py``, the whole-spool decode and
-    learn passes are called only from the store's learn/decode
-    callbacks, the replicated-templates learn and the streaming path,
-    and only the streaming ``_maps`` fallback and ``_telemetry_msgs``
-    read ``_spool_batch()``."""
+def _daemon_calls_outside(allowed: dict) -> list[str]:
+    """Calls in ``daemon.py`` (module functions and class methods) of a
+    name in ``allowed`` made from a function not in its allow set."""
     import ast
     import pathlib
 
-    allowed = {
-        "learn_template_cache": {"_learn_spool_files", "_ingest_replicated_templates"},
-        "decode_options": {"_decode_spool_files", "_maps"},
-        "decode_options_data": {"_decode_spool_files", "_enrich_datagrams"},
-        "decode_sflow_counters": {"_decode_spool_files"},
-        "_spool_batch": {"_maps", "_telemetry_msgs"},
-    }
     path = pathlib.Path(__file__).resolve().parent.parent / "pmacct_spark" / "daemon.py"
     tree = ast.parse(path.read_text(), str(path))
     funcs = [n for n in tree.body if isinstance(n, ast.FunctionDef)] + [
@@ -340,6 +329,23 @@ def test_one_batch_decode_route():
             name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
             if name in allowed and fn.name not in allowed[name]:
                 offenders.append(f"daemon.py:{node.lineno} {name}() in {fn.name}()")
+    return offenders
+
+
+def test_one_batch_decode_route():
+    """The daemon's batch path decodes and learns only through the
+    decoded-flow store. In ``daemon.py``, the whole-spool decode and
+    learn passes are called only from the store's learn/decode
+    callbacks, the replicated-templates learn and the streaming path,
+    and only ``_telemetry_msgs`` reads ``_spool_batch()``."""
+    allowed = {
+        "learn_template_cache": {"_learn_spool_files", "_ingest_replicated_templates"},
+        "decode_options": {"_decode_spool_files"},
+        "decode_options_data": {"_decode_spool_files", "_enrich_datagrams"},
+        "decode_sflow_counters": {"_decode_spool_files"},
+        "_spool_batch": {"_telemetry_msgs"},
+    }
+    offenders = _daemon_calls_outside(allowed)
     assert not offenders, "\n".join(offenders)
 
 
@@ -348,31 +354,15 @@ def test_one_batch_aggregation_route():
     aggregate layer. In ``daemon.py``, ``build_aggregation`` is called
     only from the store's build callback (``Daemon._aggregate``) and
     from ``run_continuous``' synchronous plan check; a batch drain or
-    replan tick never plans a channel itself."""
-    import ast
-    import pathlib
-
-    allowed = {"_aggregate", "run_continuous"}
-    path = pathlib.Path(__file__).resolve().parent.parent / "pmacct_spark" / "daemon.py"
-    tree = ast.parse(path.read_text(), str(path))
-    funcs = [n for n in tree.body if isinstance(n, ast.FunctionDef)] + [
-        m
-        for c in tree.body
-        if isinstance(c, ast.ClassDef)
-        for m in c.body
-        if isinstance(m, ast.FunctionDef)
-    ]
-    offenders = [
-        f"daemon.py:{node.lineno} build_aggregation() in {fn.name}()"
-        for fn in funcs
-        if fn.name not in allowed
-        for node in ast.walk(fn)
-        if isinstance(node, ast.Call)
-        and (
-            getattr(node.func, "id", None) == "build_aggregation"
-            or getattr(node.func, "attr", None) == "build_aggregation"
-        )
-    ]
+    replan tick never plans a channel itself. The streaming plans
+    (``stream_aggregation``, ``run_to_memory``) are built only by
+    ``run_continuous``: a drain serves every channel from the stores."""
+    allowed = {
+        "build_aggregation": {"_aggregate", "run_continuous"},
+        "stream_aggregation": {"run_continuous"},
+        "run_to_memory": {"run_continuous"},
+    }
+    offenders = _daemon_calls_outside(allowed)
     assert not offenders, "\n".join(offenders)
 
 
